@@ -307,6 +307,11 @@ object Dedup {
     * r17: edge lists at or under [[CCDriverCap]] (measured per run on the
     * materialized frame, never assumed) dispatch to the driver union-find
     * instead — identical labels, zero per-round distributed fixed cost.
+    *
+    * `maxRounds` limits only the distributed engine: the driver
+    * union-find has no rounds and never throws the round-cap exception.
+    * A caller that wants that exception on a deep graph passes
+    * `driverCap = 0`.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 20, driverCap: Int = CCDriverCap): DataFrame = {
@@ -472,6 +477,13 @@ object Dedup {
     * set stops changing, detected by (count, xxhash64 checksum-sum) — a
     * collision would need two distinct edge sets with equal counts AND
     * equal 64-bit hash sums within one run.
+    *
+    * As in [[connectedComponents]], `maxRounds` limits only the
+    * distributed engine; at or under `driverCap` edges the driver
+    * union-find answers and the round-cap exception cannot fire. Callers
+    * that want it pass `driverCap = 0`.
+    * [[graft.streaming.EventStream.ccMaintain]] calls this with the
+    * defaults.
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50, driverCap: Int = CCDriverCap): DataFrame = {

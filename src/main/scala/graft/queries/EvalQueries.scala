@@ -1436,8 +1436,10 @@ object EvalQueries {
         // union-find at ANY corpus size (Round17OptSpec pins loop ≡ CC
         // on an adversarial core graph; the oracle's identically-
         // unrolled 12 rounds reach the same fixpoint — pointer jumping
-        // covers diameter 2^12, and ≤512 nodes cap diameter at 511).
-        val lab = graft.ext.Dedup.connectedComponents(edges, "cell", "nb")
+        // covers diameter 2^12, and ≤512 nodes cap diameter at 511 — the
+        // round bound handed to the distributed engine).
+        val lab = graft.ext.Dedup.connectedComponents(edges, "cell", "nb",
+            maxRounds = 512)
           .select($"id".as("cell"), $"cluster_id".as("lab"))
         lab.join(core.select($"k".as("cell"), $"n"), "cell")
           .groupBy($"lab".as("cluster_id"))

@@ -291,20 +291,37 @@ object EventStream {
     ()
   }
 
-  /** Atomic state+ledger commit for the SUM-merged maintainers
-    * ([[decayedMaintain]], [[kmeansMaintain]]): the merged cell table and
-    * the FULL applied-batch ledger are both written under one `_tmp`
-    * commit directory (cells first, ledger last), then the whole
-    * directory swaps into place with a single rename. A crash anywhere
-    * inside the batch leaves either the previous commit (state AND ledger
-    * both say "batch not applied" → replay re-merges once) or the new one
-    * (both say "applied" → replay skips) — the state-written-but-ledger-
-    * missing window that would double-merge sum state under replay cannot
-    * exist, because the two tables are never visible in different
-    * versions. The ledger is a handful of longs, so rewriting it whole
-    * per commit is free; the appends-based [[dedupMaintain]] gets its
-    * exactly-once from per-batch overwrite partitions instead (see its
-    * scaladoc). Same single-maintainer caveat as [[swapWrite]].
+  /** The swap for directories whose content is more than one parquet
+    * write ([[compactState]]'s `batch=-1` fold, [[compactSnapshotLog]]'s
+    * horizon marker and base+tail log): clear a stale `_tmp`, let `write`
+    * fill it, then write the `_SUCCESS` completeness marker [[recoverSwap]]
+    * keys on EXPLICITLY and LAST (the [[swapCommit]] ledger-last
+    * contract) — a partitionBy write's own root marker placement depends
+    * on the session's partitionOverwriteMode committer (dynamic mode
+    * stages partitions and leaves no root _SUCCESS), and an absent marker
+    * makes recovery DELETE the renamed table as a half-written orphan.
+    * Then delete + rename, as [[swapWrite]].
+    */
+  private def swapDir(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
+    fs.delete(dst, true)
+    fs.rename(tmp, dst)
+    ()
+  }
+
+  /** The atomic cells+ledger write behind [[atomicCommitBatch]]: the
+    * merged cell table and the FULL applied-batch ledger land under one
+    * `_tmp` commit directory (cells first, ledger last — so
+    * `_tmp/ledger/_SUCCESS` marks a complete tmp), then the whole
+    * directory swaps into place with a single rename. The ledger is a
+    * handful of longs, so rewriting it whole per commit is free. Same
+    * single-maintainer caveat as [[swapWrite]].
     */
   private def swapCommit(spark: SparkSession, cells: DataFrame,
       commitP: String, applied: Set[Long], batchId: Long): Unit = {
@@ -321,82 +338,176 @@ object EventStream {
     ()
   }
 
-  /** Crash recovery for [[swapCommit]]: a missing commit directory next
-    * to a `_tmp` is EITHER the delete→rename window of a COMPLETE tmp
-    * (every commit after the first — the tmp is fully written before the
-    * old commit is touched) OR a first-ever commit that died mid-tmp-write
-    * (no dst has ever existed, so the tmp may be half-written). The two
-    * are told apart by the tmp's own completeness marker: [[swapCommit]]
-    * writes the ledger LAST, so `_tmp/ledger/_SUCCESS` present proves the
-    * whole tmp is complete and promoting it is safe; absent, the tmp is
-    * garbage from a dead first attempt and is DELETED — promoting it
-    * would replay the first batch against state that already holds it
-    * (double-merged sums) or leave unreadable half-written cells wedging
-    * every restart. A `_tmp` sitting NEXT TO a live commit is a
-    * half-written attempt that died mid-write; it is ignored here and
-    * clobbered by the next commit. Exercised by StreamingSpec's
-    * crash-injection cases (orphan promotion, incomplete-first-tmp
-    * deletion, garbage-tmp-beside-live-commit).
+  /** [[swapCommit]]'s completeness marker, relative to the commit dir:
+    * the ledger is written last, so its `_SUCCESS` proves the tmp whole.
     */
-  private def recoverCommit(spark: SparkSession, commitP: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(commitP)
-    val tmp = new org.apache.hadoop.fs.Path(commitP + "_tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(tmp)) {
-      val done = new org.apache.hadoop.fs.Path(
-        commitP + "_tmp/ledger/_SUCCESS")
-      if (fs.exists(done)) fs.rename(tmp, dst) else fs.delete(tmp, true)
-      ()
-    }
-  }
+  private val CommitMarker = "ledger/_SUCCESS"
 
-  /** [[recoverCommit]]'s twin for the single-table [[swapWrite]] states
-    * (hll/kmv sketch tables, the CC root map): a missing state dir next
-    * to a `_tmp` is either the delete→rename window of a complete swap
-    * (promote — the parquet job's own `_SUCCESS` marker proves the tmp
-    * complete) or a first-ever write that died mid-tmp (delete; the
-    * batch replays against genuinely-empty state, which the idempotent
-    * merges absorb). Without this, a crash inside the rename window
-    * silently restarted the ACCUMULATION from empty on the next run —
-    * the one data-loss hole the swap design left open. Runs before every
+  /** Crash recovery for every swapped path ([[swapWrite]], [[swapDir]],
+    * and with `marker = CommitMarker` the [[swapCommit]] directory): a
+    * missing `path` next to a `_tmp` is EITHER the delete→rename window
+    * of a COMPLETE tmp (every swap after the first — the tmp is fully
+    * written before the old table is touched) OR a first-ever write that
+    * died mid-tmp (no dst has ever existed, so the tmp may be
+    * half-written). The two are told apart by the tmp's own completeness
+    * marker `_tmp/<marker>`: present, the tmp is complete and promoting
+    * it is safe; absent, the tmp is garbage from a dead first attempt and
+    * is DELETED — promoting it would replay the first batch against
+    * state that already holds it (double-merged sums) or leave unreadable
+    * half-written cells wedging every restart, and the batch instead
+    * replays against genuinely-empty state. A `_tmp` sitting NEXT TO a
+    * live table is a half-written attempt that died mid-write; it is
+    * ignored here and clobbered by the next swap. Runs before every
     * state read: at each foreachBatch entry and once after termination.
+    * Exercised by
+    * StreamingSpec's crash-injection cases (orphan promotion,
+    * incomplete-first-tmp deletion, garbage-tmp-beside-live-commit).
     */
-  private def recoverSwap(spark: SparkSession, statePath: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(statePath)
-    val tmp = new org.apache.hadoop.fs.Path(statePath + "_tmp")
+  private def recoverSwap(spark: SparkSession, path: String,
+      marker: String = "_SUCCESS"): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dst) && fs.exists(tmp)) {
-      val done = new org.apache.hadoop.fs.Path(statePath + "_tmp/_SUCCESS")
+      val done = new org.apache.hadoop.fs.Path(tmp, marker)
       if (fs.exists(done)) fs.rename(tmp, dst) else fs.delete(tmp, true)
       ()
     }
   }
 
-  /** Applied-batch ledger for the REPLAY-IDEMPOTENT maintainers
-    * ([[dedupMaintain]]'s partition-overwrite replay, [[ccMaintain]]'s
-    * idempotent min-merge): there the ledger only SKIPS work — a batch
-    * replayed because its ledger row is missing or unreadable recomputes
-    * identical state — so reads tolerate a corrupt ledger by treating it
-    * as empty rather than wedging every restart on a half-landed file,
-    * and writes rewrite the whole ledger (a handful of longs) through
-    * [[swapWrite]]'s tmp-then-rename instead of `mode("append")`, whose
-    * task-commit/job-commit crash window can leave a visible partial
-    * parquet file. The SUM-merged maintainers must NOT use this pair:
-    * for them a lost ledger row means a double-merge, which is exactly
-    * why their ledger rides inside [[swapCommit]]'s atomic directory.
+  /** The query lifecycle every foreachBatch maintainer shares: Update
+    * mode, `Trigger.AvailableNow` (process everything pending, then
+    * stop — the reference's batch-load semantics), an optional
+    * persistent source checkpoint, and `stop` even when a batch fails.
+    *
+    * `checkpoint` persists source offsets + batch ids across CALLS: a
+    * caller that must pin arrival order exactly (q337's closed-form
+    * oracle) writes wave w, runs the maintainer to completion, then
+    * writes wave w+1 — each run sees only the files that exist, so
+    * ordering needs no filesystem mtime/listing assumptions at all, and
+    * batch ids continue monotonically from the checkpoint.
     */
-  private def readLedger(spark: SparkSession, ledgerP: String): Set[Long] =
-    if (!stateExists(spark, ledgerP)) Set.empty
-    else
-      try spark.read.parquet(ledgerP).select(col("batch_id"))
-        .collect().map(_.getLong(0)).toSet
-      catch { case scala.util.control.NonFatal(_) => Set.empty }
+  private def runMaintainer(input: DataFrame,
+      checkpoint: Option[String] = None)(
+      perBatch: (DataFrame, Long) => Unit): Unit = {
+    val writer = input.writeStream.outputMode(OutputMode.Update())
+      .foreachBatch(perBatch)
+    val q = checkpoint.fold(writer)(
+        cp => writer.option("checkpointLocation", cp))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+  }
 
-  private def ledgerCommit(spark: SparkSession, ledgerP: String,
-      done: Set[Long], batchId: Long): Unit = {
-    import spark.implicits._
-    swapWrite(spark,
-      (done + batchId).toSeq.sorted.toDF("batch_id").coalesce(1), ledgerP)
+  /** SKIP-LEDGER protocol, for the REPLAY-IDEMPOTENT maintainers. Their
+    * batch body lands each store's contribution as an OVERWRITE of its own
+    * `batch=<id>` partition (or, for [[ccMaintain]], an idempotent
+    * min-merge swapped whole), and every index read EXCLUDES the batch's
+    * own partition. So a batch replayed after a crash at ANY point before
+    * its ledger row recomputes the identical deterministic rows against
+    * the same prior state and clobbers its stale attempt instead of
+    * doubling it: exactly-once holds without the ledger, which only SKIPS
+    * already-applied work. Per batch:
+    *
+    *  1. [[recoverSwap]] over every store AND the ledger — the ledger is
+    *     itself swap-rewritten, so a crash in its rename window would
+    *     otherwise read as EMPTY, replay every batch, and (after
+    *     [[compactState]] folded them into `batch=-1`) re-land per-batch
+    *     partitions beside the compacted copy;
+    *  2. the TOLERANT ledger read — a corrupt ledger reads as empty (the
+    *     replay recomputes identical state) rather than wedging every
+    *     restart on a half-landed file;
+    *  3. a ledgered batch id is skipped; otherwise the body runs;
+    *  4. the whole ledger (a handful of longs) is rewritten through
+    *     [[swapWrite]] — never `mode("append")`, whose task/job-commit
+    *     crash window can leave a visible partial parquet file;
+    *  5. [[tierCompact]] folds the `tiered` stores. Only LEDGERED
+    *     partitions fold, so the in-flight batch's own-partition
+    *     exclusion and overwrite-on-replay are untouched.
+    *
+    * `untiered` stores are recovered but never tier-folded. The
+    * SUM-merged maintainers must NOT use this protocol: for them a lost
+    * ledger row means a double-merge ([[atomicCommitBatch]] serves
+    * them). Returns the ledger after this batch's commit, or None when
+    * the batch was already applied.
+    */
+  private def skipLedgerBatch(spark: SparkSession, statePath: String,
+      batchId: Long, tiered: Seq[String], tierK: Int,
+      untiered: Seq[String] = Nil)(body: => Unit): Option[Set[Long]] = {
+    val ledgerP = statePath + "/ledger"
+    (untiered ++ tiered :+ ledgerP).foreach(recoverSwap(spark, _))
+    val done: Set[Long] =
+      if (!stateExists(spark, ledgerP)) Set.empty
+      else
+        try spark.read.parquet(ledgerP).select(col("batch_id"))
+          .collect().map(_.getLong(0)).toSet
+        catch { case scala.util.control.NonFatal(_) => Set.empty }
+    if (done.contains(batchId)) None
+    else {
+      body
+      val ledger = done + batchId
+      import spark.implicits._
+      swapWrite(spark,
+        ledger.toSeq.sorted.toDF("batch_id").coalesce(1), ledgerP)
+      tiered.foreach(tierCompact(spark, _, ledger, tierK))
+      Some(ledger)
+    }
+  }
+
+  /** ATOMIC-COMMIT protocol, for the SUM-merged maintainers, whose state
+    * is NOT replay-idempotent (a re-merged batch doubles its counts). The
+    * merged cell table and the applied-batch ledger commit TOGETHER
+    * through [[swapCommit]]'s single directory rename, and that ledger is
+    * the maintainer's exactly-once authority. A crash anywhere inside the
+    * batch leaves either the previous commit (state AND ledger both say
+    * "not applied" → replay re-merges once) or the new one (both say
+    * "applied" → replay skips): the state-written-but-ledger-missing
+    * window that would double-merge sum state under replay cannot exist.
+    * Per batch:
+    *
+    *  1. [[recoverSwap]] of the commit directory (marker
+    *     [[CommitMarker]]) and of the `tiered` stores;
+    *  2. the STRICT ledger read — inside the atomic commit directory a
+    *     partial ledger cannot exist, so a read failure is real corruption
+    *     and must surface, not be swallowed into a double-merge;
+    *  3. a ledgered batch id is skipped; otherwise `cells` is evaluated
+    *     (the body: it may first land deterministic per-batch overwrite
+    *     partitions in the `tiered` stores, which a replay clobbers) and
+    *     committed with the ledger;
+    *  4. [[tierCompact]] folds the `tiered` stores.
+    */
+  private def atomicCommitBatch(spark: SparkSession, commitP: String,
+      batchId: Long, tiered: Seq[String] = Nil, tierK: Int = 0)(
+      cells: => DataFrame): Unit = {
+    val ledgerP = commitP + "/ledger"
+    recoverSwap(spark, commitP, CommitMarker)
+    tiered.foreach(recoverSwap(spark, _))
+    val done: Set[Long] =
+      if (stateExists(spark, ledgerP))
+        spark.read.parquet(ledgerP).select(col("batch_id"))
+          .collect().map(_.getLong(0)).toSet
+      else Set.empty
+    if (!done.contains(batchId)) {
+      swapCommit(spark, cells, commitP, done, batchId)
+      tiered.foreach(tierCompact(spark, _, done + batchId, tierK))
+    }
+  }
+
+  /** LEDGERLESS-SWAP protocol, for state whose merge is idempotent as
+    * well as commutative/associative (MAX registers, bottom-k MIN
+    * sketches): a replayed batch cannot move the state, so AT-LEAST-ONCE
+    * delivery is already exactly-once and no batch-id ledger is needed.
+    * Durability is [[swapWrite]]'s tmp-then-rename swap, recovered by
+    * [[recoverSwap]] before the state read; `merge` gets the current
+    * state (None before the first batch) and returns the new one.
+    */
+  private def swapMergeBatch(spark: SparkSession, statePath: String)(
+      merge: Option[DataFrame] => DataFrame): Unit = {
+    recoverSwap(spark, statePath)
+    val prev =
+      if (stateExists(spark, statePath)) Some(spark.read.parquet(statePath))
+      else None
+    swapWrite(spark, merge(prev), statePath)
   }
 
   /** The r7 atomic-commit redesign moved sum-merged state from
@@ -437,19 +548,14 @@ object EventStream {
     * length, each refresh touches only the arriving batch, and decimal
     * partials make the merged sum EXACTLY the monolithic sum regardless
     * of how the stream was batched — the warehouse-upsert pattern stated
-    * as code. Counts and sums are sum-merged ⇒ not replay-idempotent, so
-    * this maintainer carries the same atomically-committed batch-id
-    * ledger as [[decayedMaintain]] ([[swapCommit]], one rename covers
-    * cells + ledger) — previously it had NO replay guard at all, and a
-    * re-presented batch id would have double-counted every partial.
-    * Returns the final state table.
+    * as code. Counts and sums are sum-merged ⇒ not replay-idempotent ⇒
+    * the [[atomicCommitBatch]] protocol. Returns the final state table.
     */
   def rollupMaintain(spark: SparkSession, events: DataFrame,
       statePath: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val commitP = statePath + "/commit"
     val cellsP = commitP + "/cells"
-    val ledgerP = commitP + "/ledger"
     guardOldLayout(spark, statePath, commitP, "rollupMaintain",
       flatLegacy = true)
     def partials(df: DataFrame): DataFrame = df
@@ -458,38 +564,24 @@ object EventStream {
         sum(col("value").cast(DecimalType(18, 4)))
           .cast(DecimalType(18, 4)).as("total_dec"),
         max(col("value")).as("vmax"), min(col("value")).as("vmin"))
-    val q = events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recoverCommit(spark, commitP)
-        val done: Set[Long] =
-          if (stateExists(spark, ledgerP))
-            spark.read.parquet(ledgerP).select(col("batch_id"))
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
-          val incoming = partials(batch)
-          val merged =
-            if (stateExists(spark, cellsP)) {
-              spark.read.parquet(cellsP)
-                .withColumn("total_dec",
-                  col("total_dec").cast(DecimalType(18, 4)))
-                .unionByName(incoming)
-                .groupBy(col("event_type"))
-                .agg(sum(col("n")).as("n"),
-                  sum(col("total_dec")).cast(DecimalType(18, 4))
-                    .as("total_dec"),
-                  max(col("vmax")).as("vmax"), min(col("vmin")).as("vmin"))
-            } else incoming
-          swapCommit(spark, merged, commitP, done, batchId)
-        }
+    runMaintainer(events) { (batch, batchId) =>
+      atomicCommitBatch(spark, commitP, batchId) {
+        val incoming = partials(batch)
+        if (stateExists(spark, cellsP)) {
+          spark.read.parquet(cellsP)
+            .withColumn("total_dec",
+              col("total_dec").cast(DecimalType(18, 4)))
+            .unionByName(incoming)
+            .groupBy(col("event_type"))
+            .agg(sum(col("n")).as("n"),
+              sum(col("total_dec")).cast(DecimalType(18, 4))
+                .as("total_dec"),
+              max(col("vmax")).as("vmax"), min(col("vmin")).as("vmin"))
+        } else incoming
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     // zero-batch restart: recover a rename-window crash before reading
-    recoverCommit(spark, commitP)
+    recoverSwap(spark, commitP, CommitMarker)
     spark.read.parquet(cellsP)
       .withColumn("total", col("total_dec").cast("double"))
       .withColumn("avg_v", col("total") / col("n").cast("double"))
@@ -504,11 +596,9 @@ object EventStream {
     * commutative/associative, so unlike the sum-merged rollup above this
     * state survives AT-LEAST-ONCE delivery unchanged — a replayed batch
     * cannot corrupt a register, which is why sketch maintenance needs no
-    * exactly-once ledger. State is ≤ 64 rows per source forever; distinct
-    * estimates come off the table at read time without touching the data.
-    * (The replay-safety claim is LOGICAL — durability of the state table
-    * itself is [[swapWrite]]'s tmp-then-rename swap, single maintainer per
-    * path.)
+    * exactly-once ledger: the [[swapMergeBatch]] protocol. State is ≤ 64
+    * rows per source forever; distinct estimates come off the table at
+    * read time without touching the data.
     */
   def hllMaintain(spark: SparkSession, docs: DataFrame,
       statePath: String): DataFrame = {
@@ -518,25 +608,14 @@ object EventStream {
         df.select(col("source"),
           explode(TextAnalysis.tokens(col("text"))).as("token")),
         col("source"), col("token"))
-    val q = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        recoverSwap(spark, statePath)
+    runMaintainer(docs) { (batch, _) =>
+      swapMergeBatch(spark, statePath) { prev =>
         val incoming = registers(batch)
-        val merged =
-          if (stateExists(spark, statePath))
-            spark.read.parquet(statePath)
-              .unionByName(incoming)
-              .groupBy(col("source"), col("bucket"))
-              .agg(max(col("m")).as("m"))
-          else incoming
-        swapWrite(spark, merged, statePath)
-        ()
+        prev.fold(incoming)(_.unionByName(incoming)
+          .groupBy(col("source"), col("bucket"))
+          .agg(max(col("m")).as("m")))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, statePath)
     spark.read.parquet(statePath)
   }
@@ -550,8 +629,7 @@ object EventStream {
     * union, pair intersection) reads off the table without touching
     * data. Like [[hllMaintain]] and unlike the sum-merged maintainers,
     * the merge is MIN-idempotent: a replayed batch cannot move the
-    * sketch, so no batch-id ledger is needed — at-least-once delivery
-    * is already exactly-once for this state.
+    * sketch — the [[swapMergeBatch]] protocol.
     */
   def kmvMaintain(spark: SparkSession, docs: DataFrame,
       statePath: String, k: Int = 64): DataFrame = {
@@ -569,22 +647,12 @@ object EventStream {
         explode(TextAnalysis.shinglesFromTokens(col("_w"))).as("shingle"))
       .select(col("source"),
         TextAnalysis.hash60Fast(spark, col("shingle")).as("h")))
-    val q = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        recoverSwap(spark, statePath)
+    runMaintainer(docs) { (batch, _) =>
+      swapMergeBatch(spark, statePath) { prev =>
         val incoming = sketch(batch)
-        val merged =
-          if (stateExists(spark, statePath))
-            bottomK(spark.read.parquet(statePath).unionByName(incoming))
-          else incoming
-        swapWrite(spark, merged, statePath)
-        ()
+        prev.fold(incoming)(old => bottomK(old.unionByName(incoming)))
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, statePath)
     spark.read.parquet(statePath)
   }
@@ -597,10 +665,8 @@ object EventStream {
     * shiftright on a pre-summed dec_w would floor away mixed low bits
     * and drift from the batch recompute (the q262 scaladoc's argument,
     * here made executable). Counts are sum-merged ⇒ not replay-
-    * idempotent ⇒ the batch-id ledger rides along, committed ATOMICALLY
-    * with the cells via [[swapCommit]]'s single rename (like
-    * [[kmeansMaintain]]; the MAX-merged [[hllMaintain]] needs no ledger
-    * at all). State is #types × #days rows forever; buckets
+    * idempotent ⇒ the [[atomicCommitBatch]] protocol. State is
+    * #types × #days rows forever; buckets
     * past the 20-day clip contribute zero weight and could be compacted
     * to one row per type without changing any output. Returns exactly
     * q262's (event_type, n_events, dec_w, dec_score_1e6).
@@ -609,40 +675,25 @@ object EventStream {
       statePath: String): DataFrame = {
     val commitP = statePath + "/commit"
     val cellsP = commitP + "/cells"
-    val ledgerP = commitP + "/ledger"
     guardOldLayout(spark, statePath, commitP, "decayedMaintain")
-    val q = events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recoverCommit(spark, commitP)
-        val done: Set[Long] =
-          if (stateExists(spark, ledgerP))
-            spark.read.parquet(ledgerP).select(col("batch_id"))
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
-          val incoming = batch
-            .select(col("event_type"),
-              unix_date(col("ts").cast("date")).cast("long").as("d"))
+    runMaintainer(events) { (batch, batchId) =>
+      atomicCommitBatch(spark, commitP, batchId) {
+        val incoming = batch
+          .select(col("event_type"),
+            unix_date(col("ts").cast("date")).cast("long").as("d"))
+          .groupBy(col("event_type"), col("d"))
+          .agg(count(lit(1)).as("n"))
+        if (stateExists(spark, cellsP))
+          spark.read.parquet(cellsP).unionByName(incoming)
             .groupBy(col("event_type"), col("d"))
-            .agg(count(lit(1)).as("n"))
-          val merged =
-            if (stateExists(spark, cellsP))
-              spark.read.parquet(cellsP).unionByName(incoming)
-                .groupBy(col("event_type"), col("d"))
-                .agg(sum(col("n")).as("n"))
-            else incoming
-          swapCommit(spark, merged, commitP, done, batchId)
-        }
+            .agg(sum(col("n")).as("n"))
+        else incoming
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     // a restarted run that fires ZERO batches (no new files) never enters
     // foreachBatch, so a crash left in the delete→rename window would
     // otherwise still be unrecovered at this read
-    recoverCommit(spark, commitP)
+    recoverSwap(spark, commitP, CommitMarker)
     val cells = spark.read.parquet(cellsP)
     val mx = cells.agg(max(col("d")).as("maxd"))
     cells.crossJoin(org.apache.spark.sql.functions.broadcast(mx))
@@ -666,25 +717,16 @@ object EventStream {
     * the index — candidate cost per batch is ∝ |delta| and the old×old
     * pair space is never re-examined. State = three grow-only tables
     * (band index, shingle store, per-doc verdicts), each PARTITIONED BY
-    * BATCH and written as an overwrite of its own batch=<id> partition,
-    * plus a batch-id ledger: a crash anywhere before the ledger row
-    * makes the replayed batch recompute the identical deterministic rows
-    * (index reads exclude the batch's own partition, so a half-landed
-    * attempt cannot pollute its replay) and clobber its stale
-    * partitions, so exactly-once holds through ANY crash point — the
-    * ledger skip saves work; it is not the correctness guard the
-    * sum-merged maintainers need ([[swapCommit]] serves those). The
-    * skew cap is q36's:
+    * BATCH, under the [[skipLedgerBatch]] protocol. The skew cap is q36's:
     * bucket counts over ALL band rows (index + delta) partial-agg'd, so
     * a degenerate band key cannot go quadratic in any batch. At 100 TB
     * the band index and shingle store are bucketed tables keyed on
     * (band_id, band_key) / doc_id, one partition appended per batch;
     * here plain parquet directories with a single maintaining process
     * ([[swapWrite]]'s caveat applies to the layout, not the appends).
-    * Small-files pressure is bounded by TIERED compaction riding the
-    * ledgered cycle (`tierK`, see [[tierCompact]]): every K ledgered
-    * per-batch partitions fold into a segment, K segments into a
-    * higher-level segment — O(log_K N) rewrites per row and O(K·log_K N)
+    * Small-files pressure is bounded by TIERED compaction (`tierK`, see
+    * [[tierCompact]]): every K ledgered per-batch partitions fold into a
+    * segment, K segments into a higher-level segment — O(log_K N) rewrites per row and O(K·log_K N)
     * live partitions over the stream's whole life, vs one partition per
     * batch forever (and vs [[compactState]]'s O(store²/K) if run on a
     * cadence). `tierK = 0` disables (the pre-r14 layout).
@@ -699,101 +741,69 @@ object EventStream {
     val bandsP = statePath + "/bands"
     val shP = statePath + "/shingles"
     val verdictsP = statePath + "/verdicts"
-    val ledgerP = statePath + "/ledger"
-    // `checkpoint` persists source offsets + batch ids across CALLS: a
-    // caller that must pin arrival order exactly (q337's closed-form
-    // oracle) writes wave w, runs the maintainer to completion, then
-    // writes wave w+1 — each run sees only the files that exist, so
-    // ordering needs no filesystem mtime/listing assumptions at all,
-    // and batch ids continue monotonically from the checkpoint.
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // recover a compaction that died in its rename window before any
-        // store read ([[compactState]]'s contract)
-        // ledgerP included: the ledger itself is swapWrite-rewritten, so a
-        // crash in its delete→rename window would otherwise read as an
-        // EMPTY ledger — every ledgered batch would replay, and after
-        // compactState folded them into batch=-1 the replay would re-land
-        // per-batch partitions beside the compacted copy (duplicate rows).
-        Seq(bandsP, shP, verdictsP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          // delta substrate: checkpointed once (delta-sized), consumed by
-          // candidate generation, verification, and the index append
-          val sh = Dedup.hashedShingleRows(batch, "doc_id", "text")
-            .localCheckpoint()
-          val bands = Dedup.bandRows(
-            Dedup.minhashSignatures(sh, "doc_id"), "doc_id")
-            .localCheckpoint()
-          // index reads EXCLUDE this batch's own partition: a crashed
-          // attempt may have landed batch=<id> rows before the ledger
-          // said so, and pairing the delta against its own stale copy
-          // would break the `doc_b < doc_a` same-batch orientation
-          val haveIdx = stateExists(spark, bandsP)
-          val allBands = bands.withColumn("_delta", lit(true))
-            .unionByName(
-              if (haveIdx)
-                readTiered(spark, bandsP)
-                  .where(col("batch") =!= batchId).drop("batch")
-                  .withColumn("_delta", lit(false))
-              else bands.withColumn("_delta", lit(true)).limit(0))
-          val keep = allBands.groupBy(col("band_id"), col("band_key"))
-            .agg(count(lit(1)).as("bucket_n"))
-            .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
-            .select(col("band_id"), col("band_key"))
-          val capped = allBands.join(keep, Seq("band_id", "band_key"))
-          val a = capped.where(col("_delta"))
-            .select(col("doc_id").as("doc_a"), col("band_id"),
-              col("band_key"))
-          val b = capped.select(col("doc_id").as("doc_b"),
-            col("_delta").as("_delta_b"), col("band_id"), col("band_key"))
-          val cands = a.join(b, Seq("band_id", "band_key"))
-            .where(col("doc_b") =!= col("doc_a") &&
-              (!col("_delta_b") || col("doc_b") < col("doc_a")))
-            .select(col("doc_a"), col("doc_b")).distinct()
-            .localCheckpoint()
-          val allSh =
-            if (stateExists(spark, shP))
-              sh.unionByName(readTiered(spark, shP)
-                .where(col("batch") =!= batchId).drop("batch"))
-            else sh
-          val best = Dedup.jaccardFor(cands, allSh, "doc_id")
-            .where(col("jaccard") >= threshold)
-            .groupBy(col("doc_a"))
-            .agg(max_by(struct(col("jaccard"), col("doc_b")),
-              struct(col("jaccard"), -col("doc_b"))).as("bm"))
-            .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-              col("bm.jaccard").as("best_jaccard"))
-          val verdicts = batch.select(col("doc_id"))
-            .join(best, col("doc_id") === col("doc_a"), "left")
-            .select(col("doc_id"), lit(batchId).as("batch_id"),
-              col("best_match").isNotNull.as("is_dup"),
-              col("best_match"), col("best_jaccard"))
-          // verdicts computed BEFORE the index grows; each table's batch
-          // contribution lands as an OVERWRITE of its own batch=<id>
-          // partition — a replayed batch (crash before the ledger row)
-          // recomputes the identical deterministic rows and clobbers the
-          // stale partition instead of doubling it, so the ledger-last
-          // rewrite only ever skips work, never guards correctness:
-          // exactly-once across batches holds through any crash point
-          verdicts.write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
-          bands.write.mode("overwrite").parquet(s"$bandsP/batch=$batchId")
-          sh.write.mode("overwrite").parquet(s"$shP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          // tiered segment compaction rides the ledgered cycle: only
-          // ledgered partitions fold, so replay/own-batch semantics are
-          // untouched (see the tierCompact protocol note)
-          Seq(bandsP, shP, verdictsP)
-            .foreach(tierCompact(spark, _, done + batchId, tierK))
-        }
+    // `checkpoint`: see [[runMaintainer]]
+    runMaintainer(docs, checkpoint) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId,
+          Seq(bandsP, shP, verdictsP), tierK) {
+        // delta substrate: checkpointed once (delta-sized), consumed by
+        // candidate generation, verification, and the index append
+        val sh = Dedup.hashedShingleRows(batch, "doc_id", "text")
+          .localCheckpoint()
+        val bands = Dedup.bandRows(
+          Dedup.minhashSignatures(sh, "doc_id"), "doc_id")
+          .localCheckpoint()
+        // index reads EXCLUDE this batch's own partition: a crashed
+        // attempt may have landed batch=<id> rows before the ledger
+        // said so, and pairing the delta against its own stale copy
+        // would break the `doc_b < doc_a` same-batch orientation
+        val haveIdx = stateExists(spark, bandsP)
+        val allBands = bands.withColumn("_delta", lit(true))
+          .unionByName(
+            if (haveIdx)
+              readTiered(spark, bandsP)
+                .where(col("batch") =!= batchId).drop("batch")
+                .withColumn("_delta", lit(false))
+            else bands.withColumn("_delta", lit(true)).limit(0))
+        val keep = allBands.groupBy(col("band_id"), col("band_key"))
+          .agg(count(lit(1)).as("bucket_n"))
+          .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
+          .select(col("band_id"), col("band_key"))
+        val capped = allBands.join(keep, Seq("band_id", "band_key"))
+        val a = capped.where(col("_delta"))
+          .select(col("doc_id").as("doc_a"), col("band_id"),
+            col("band_key"))
+        val b = capped.select(col("doc_id").as("doc_b"),
+          col("_delta").as("_delta_b"), col("band_id"), col("band_key"))
+        val cands = a.join(b, Seq("band_id", "band_key"))
+          .where(col("doc_b") =!= col("doc_a") &&
+            (!col("_delta_b") || col("doc_b") < col("doc_a")))
+          .select(col("doc_a"), col("doc_b")).distinct()
+          .localCheckpoint()
+        val allSh =
+          if (stateExists(spark, shP))
+            sh.unionByName(readTiered(spark, shP)
+              .where(col("batch") =!= batchId).drop("batch"))
+          else sh
+        val best = Dedup.jaccardFor(cands, allSh, "doc_id")
+          .where(col("jaccard") >= threshold)
+          .groupBy(col("doc_a"))
+          .agg(max_by(struct(col("jaccard"), col("doc_b")),
+            struct(col("jaccard"), -col("doc_b"))).as("bm"))
+          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
+            col("bm.jaccard").as("best_jaccard"))
+        val verdicts = batch.select(col("doc_id"))
+          .join(best, col("doc_id") === col("doc_a"), "left")
+          .select(col("doc_id"), lit(batchId).as("batch_id"),
+            col("best_match").isNotNull.as("is_dup"),
+            col("best_match"), col("best_jaccard"))
+        // verdicts computed BEFORE the index grows; each table's batch
+        // contribution lands as an OVERWRITE of its own batch=<id>
+        // partition (the skip-ledger replay contract)
+        verdicts.write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
+        bands.write.mode("overwrite").parquet(s"$bandsP/batch=$batchId")
+        sh.write.mode("overwrite").parquet(s"$shP/batch=$batchId")
       }
-    val q = checkpoint.fold(writer)(
-        cp => writer.option("checkpointLocation", cp))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, verdictsP)
     readTiered(spark, verdictsP).drop("batch")
   }
@@ -811,11 +821,10 @@ object EventStream {
     * bucket cap and the arrival orientation (index docs, or same-batch
     * docs with smaller id), survivors verify with popcount ≤ radius, and
     * each delta doc reports its best match (min distance, deterministic
-    * tie). Stores: fps (8 bytes/doc — the index), verdicts, ledger; all
-    * per-batch overwrite partitions (deterministic ⇒ replay clobbers,
-    * never doubles), ledger swapWrite-recovered, [[compactState]]
-    * applies. The batch twin is q312's shape; StreamingSpec pins parity,
-    * replay, and compaction.
+    * tie). Stores: fps (8 bytes/doc — the index) and verdicts, under the
+    * [[skipLedgerBatch]] protocol; [[compactState]] applies. The batch
+    * twin is q312's shape; StreamingSpec pins parity, replay, and
+    * compaction.
     */
   def fpDedupMaintain(spark: SparkSession, docs: DataFrame,
       statePath: String, radius: Int = 4,
@@ -833,87 +842,73 @@ object EventStream {
     val loBits = fpBits / 2
     val fpsP = statePath + "/fps"
     val verdictsP = statePath + "/verdicts"
-    val ledgerP = statePath + "/ledger"
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ledgerP included: same rename-window recovery as dedupMaintain
-        Seq(fpsP, verdictsP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          val fps = batch
-            .select(col("doc_id").cast("long"), col("fp").cast("long"))
-            // NULL fps are data, not failures (an undecodable blob lands a
-            // NULL fingerprint — the Multimodal contract): a NULL can't
-            // participate in banded dedup, so drop it BEFORE the width
-            // assert; assert_true treats the NULL the condition would
-            // evaluate to as a failure and would kill the whole batch with
-            // a misleading too-wide message
-            .where(col("fp").isNotNull)
-            // a WHERE, not a dropped projection column — an unused
-            // Project column would be column-pruned and the check with it
-            .where(assert_true(col("fp") >= 0 &&
-              shiftright(col("fp"), fpBits) === 0,
-              lit(s"fpDedupMaintain: fp exceeds fpBits=$fpBits — " +
-                "widen fpBits or narrow the fingerprint")).isNull)
-            .localCheckpoint()
-          val haveIdx = stateExists(spark, fpsP)
-          val allFps = fps.withColumn("_delta", lit(true))
-            .unionByName(
-              if (haveIdx)
-                readTiered(spark, fpsP)
-                  .where(col("batch") =!= batchId).drop("batch")
-                  .withColumn("_delta", lit(false))
-              else fps.withColumn("_delta", lit(true)).limit(0))
-          val allBands = allFps.select(col("doc_id"), col("fp"),
-            col("_delta"),
-            posexplode(array(
-              (col("fp") % (1L << loBits)).cast("long"),
-              shiftright(col("fp"), loBits).cast("long")))
-              .as(Seq("band_id", "band_key")))
-          val keep = allBands.groupBy(col("band_id"), col("band_key"))
-            .agg(count(lit(1)).as("bucket_n"))
-            .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
-            .select(col("band_id"), col("band_key"))
-          val capped = allBands.join(keep, Seq("band_id", "band_key"))
-          val a = capped.where(col("_delta"))
-            .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"),
-              col("band_id"), col("band_key"))
-          val b = capped.select(col("doc_id").as("doc_b"),
-            col("fp").as("fp_b"), col("_delta").as("_delta_b"),
+    runMaintainer(docs, checkpoint) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId,
+          Seq(fpsP, verdictsP), tierK) {
+        val fps = batch
+          .select(col("doc_id").cast("long"), col("fp").cast("long"))
+          // NULL fps are data, not failures (an undecodable blob lands a
+          // NULL fingerprint — the Multimodal contract): a NULL can't
+          // participate in banded dedup, so drop it BEFORE the width
+          // assert; assert_true treats the NULL the condition would
+          // evaluate to as a failure and would kill the whole batch with
+          // a misleading too-wide message
+          .where(col("fp").isNotNull)
+          // a WHERE, not a dropped projection column — an unused
+          // Project column would be column-pruned and the check with it
+          .where(assert_true(col("fp") >= 0 &&
+            shiftright(col("fp"), fpBits) === 0,
+            lit(s"fpDedupMaintain: fp exceeds fpBits=$fpBits — " +
+              "widen fpBits or narrow the fingerprint")).isNull)
+          .localCheckpoint()
+        val haveIdx = stateExists(spark, fpsP)
+        val allFps = fps.withColumn("_delta", lit(true))
+          .unionByName(
+            if (haveIdx)
+              readTiered(spark, fpsP)
+                .where(col("batch") =!= batchId).drop("batch")
+                .withColumn("_delta", lit(false))
+            else fps.withColumn("_delta", lit(true)).limit(0))
+        val allBands = allFps.select(col("doc_id"), col("fp"),
+          col("_delta"),
+          posexplode(array(
+            (col("fp") % (1L << loBits)).cast("long"),
+            shiftright(col("fp"), loBits).cast("long")))
+            .as(Seq("band_id", "band_key")))
+        val keep = allBands.groupBy(col("band_id"), col("band_key"))
+          .agg(count(lit(1)).as("bucket_n"))
+          .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
+          .select(col("band_id"), col("band_key"))
+        val capped = allBands.join(keep, Seq("band_id", "band_key"))
+        val a = capped.where(col("_delta"))
+          .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"),
             col("band_id"), col("band_key"))
-          val ham = a.join(b, Seq("band_id", "band_key"))
-            .where(col("doc_b") =!= col("doc_a") &&
-              (!col("_delta_b") || col("doc_b") < col("doc_a")))
-            .select(col("doc_a"), col("doc_b"),
-              bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
-                .cast("int").as("hamming"))
-            .where(col("hamming") <= radius) // narrow BEFORE the dedup
-            .distinct()
-          val best = ham.groupBy(col("doc_a"))
-            .agg(max_by(struct(col("hamming"), col("doc_b")),
-              struct(-col("hamming"), -col("doc_b"))).as("bm"))
-            .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-              col("bm.hamming").as("best_hamming"))
-          val verdicts = fps.select(col("doc_id"))
-            .join(best, col("doc_id") === col("doc_a"), "left")
-            .select(col("doc_id"), lit(batchId).as("batch_id"),
-              col("best_match").isNotNull.as("is_dup"),
-              col("best_match"), col("best_hamming"))
-          verdicts.write.mode("overwrite")
-            .parquet(s"$verdictsP/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          Seq(fpsP, verdictsP)
-            .foreach(tierCompact(spark, _, done + batchId, tierK))
-        }
+        val b = capped.select(col("doc_id").as("doc_b"),
+          col("fp").as("fp_b"), col("_delta").as("_delta_b"),
+          col("band_id"), col("band_key"))
+        val ham = a.join(b, Seq("band_id", "band_key"))
+          .where(col("doc_b") =!= col("doc_a") &&
+            (!col("_delta_b") || col("doc_b") < col("doc_a")))
+          .select(col("doc_a"), col("doc_b"),
+            bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
+              .cast("int").as("hamming"))
+          .where(col("hamming") <= radius) // narrow BEFORE the dedup
+          .distinct()
+        val best = ham.groupBy(col("doc_a"))
+          .agg(max_by(struct(col("hamming"), col("doc_b")),
+            struct(-col("hamming"), -col("doc_b"))).as("bm"))
+          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
+            col("bm.hamming").as("best_hamming"))
+        val verdicts = fps.select(col("doc_id"))
+          .join(best, col("doc_id") === col("doc_a"), "left")
+          .select(col("doc_id"), lit(batchId).as("batch_id"),
+            col("best_match").isNotNull.as("is_dup"),
+            col("best_match"), col("best_hamming"))
+        verdicts.write.mode("overwrite")
+          .parquet(s"$verdictsP/batch=$batchId")
+        fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
       }
-    val q = checkpoint.fold(writer)(
-        cp => writer.option("checkpointLocation", cp))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, verdictsP)
     readTiered(spark, verdictsP).drop("batch")
   }
@@ -943,13 +938,9 @@ object EventStream {
     * input (q350 gates the equality against the uncapped closed form);
     * what changes is the cost shape: steady-state per-batch work is
     * O(|delta| + capped-index size) — flat in the corpus — instead of
-    * O(corpus). The capped index is sum-merged state (counts), so it
-    * commits through [[swapCommit]]'s atomic cells+ledger directory and
-    * that ledger is the maintainer's exactly-once authority; fps and
-    * verdicts land as deterministic per-batch overwrite partitions
-    * BEFORE the commit (a replay recomputes identical rows and
-    * clobbers), and tiered compaction rides the ledgered cycle as in
-    * every maintainer here. At 100 TB the fall-through read is a
+    * O(corpus). The capped index is sum-merged state (counts) ⇒ the
+    * [[atomicCommitBatch]] protocol, with fps and verdicts as its
+    * per-batch overwrite stores. At 100 TB the fall-through read is a
     * bucket-pruned scan of the [[graft.ext.Dedup.writeBandIndexBucketed]]
     * layout; the capped index itself is small enough to BROADCAST into
     * the probe join — the q347 plan shape, now incremental.
@@ -966,148 +957,125 @@ object EventStream {
     val verdictsP = statePath + "/verdicts"
     val capCommitP = statePath + "/capcommit"
     val capCellsP = capCommitP + "/cells"
-    val capLedgerP = capCommitP + "/ledger"
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recoverCommit(spark, capCommitP)
-        Seq(fpsP, verdictsP).foreach(recoverSwap(spark, _))
-        // STRICT ledger read (the cdcRollupMaintain posture): bucket
-        // counts are sum-merged, so a swallowed ledger row would
-        // double-count; inside the atomic commit dir a partial ledger
-        // cannot exist, so a read failure is real corruption
-        val done: Set[Long] =
-          if (stateExists(spark, capLedgerP))
-            spark.read.parquet(capLedgerP).select(col("batch_id"))
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
-          val fps = batch
-            .select(col("doc_id").cast("long"), col("fp").cast("long"))
-            .where(col("fp").isNotNull)
-            .where(assert_true(col("fp") >= 0 &&
-              shiftright(col("fp"), fpBits) === 0,
-              lit(s"fpDedupMaintainCapped: fp exceeds fpBits=$fpBits — " +
-                "widen fpBits or narrow the fingerprint")).isNull)
-            .localCheckpoint()
-          def bandsOf(df: DataFrame): DataFrame =
-            df.select(col("doc_id"), col("fp"),
-              posexplode(array(
-                (col("fp") % (1L << loBits)).cast("long"),
-                shiftright(col("fp"), loBits).cast("long")))
-                .as(Seq("band_id", "band_key")))
-          val dBands = bandsOf(fps).localCheckpoint()
-          val haveCap = stateExists(spark, capCellsP)
-          // old capped-index state: (band_id, band_key, doc_id, fp,
-          // bucket_n) — bucket_n duplicated across a bucket's member rows
-          val old =
-            if (haveCap) spark.read.parquet(capCellsP)
-            else dBands.withColumn("bucket_n", lit(0L)).limit(0)
-          val oldStats = old.groupBy(col("band_id"), col("band_key"))
-            .agg(max(col("bucket_n")).as("old_n"))
-          val dStats = dBands.groupBy(col("band_id"), col("band_key"))
-            .agg(count(lit(1)).as("d_n"))
-          // candidate-relevant buckets: touched by the delta, inside the
-          // skew cap, able to pair — with the SATURATION flag that picks
-          // the path. The whole frame is delta-keyed and tiny.
-          // `fallThrough = false` is the PURE q347 dial: saturated
-          // buckets are NOT re-probed against the full store — the delta
-          // pairs only with the capC earliest members, so per-batch cost
-          // is bounded by the keyspace·capC state size at ANY corpus
-          // (the deterministic bounded-recall trade q347 documents);
-          // with it on (default), saturated buckets fall through and
-          // verdicts are exactly the uncapped maintainer's.
-          val keepB = dStats
-            .join(oldStats, Seq("band_id", "band_key"), "left")
-            .na.fill(0L, Seq("old_n"))
-            .withColumn("tot_n", col("old_n") + col("d_n"))
-            .where(col("tot_n") <= maxBandBucket && col("tot_n") >= 2)
-            .select(col("band_id"), col("band_key"),
-              (lit(fallThrough) && col("old_n") > capC).as("sat"))
-          val a = dBands.join(keepB, Seq("band_id", "band_key"))
-            .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"),
-              col("band_id"), col("band_key"), col("sat"))
-          // capped fast path: unsaturated buckets probe the bounded
-          // member state — COMPLETE there (old_n <= capC means every
-          // prior member is present)
-          val candCap = a.where(!col("sat"))
-            .join(old.select(col("doc_id").as("doc_b"),
-              col("fp").as("fp_b"), col("band_id"), col("band_key")),
+    runMaintainer(docs, checkpoint) { (batch, batchId) =>
+      atomicCommitBatch(spark, capCommitP, batchId,
+          Seq(fpsP, verdictsP), tierK) {
+        val fps = batch
+          .select(col("doc_id").cast("long"), col("fp").cast("long"))
+          .where(col("fp").isNotNull)
+          .where(assert_true(col("fp") >= 0 &&
+            shiftright(col("fp"), fpBits) === 0,
+            lit(s"fpDedupMaintainCapped: fp exceeds fpBits=$fpBits — " +
+              "widen fpBits or narrow the fingerprint")).isNull)
+          .localCheckpoint()
+        def bandsOf(df: DataFrame): DataFrame =
+          df.select(col("doc_id"), col("fp"),
+            posexplode(array(
+              (col("fp") % (1L << loBits)).cast("long"),
+              shiftright(col("fp"), loBits).cast("long")))
+              .as(Seq("band_id", "band_key")))
+        val dBands = bandsOf(fps).localCheckpoint()
+        val haveCap = stateExists(spark, capCellsP)
+        // old capped-index state: (band_id, band_key, doc_id, fp,
+        // bucket_n) — bucket_n duplicated across a bucket's member rows
+        val old =
+          if (haveCap) spark.read.parquet(capCellsP)
+          else dBands.withColumn("bucket_n", lit(0L)).limit(0)
+        val oldStats = old.groupBy(col("band_id"), col("band_key"))
+          .agg(max(col("bucket_n")).as("old_n"))
+        val dStats = dBands.groupBy(col("band_id"), col("band_key"))
+          .agg(count(lit(1)).as("d_n"))
+        // candidate-relevant buckets: touched by the delta, inside the
+        // skew cap, able to pair — with the SATURATION flag that picks
+        // the path. The whole frame is delta-keyed and tiny.
+        // `fallThrough = false` is the PURE q347 dial: saturated
+        // buckets are NOT re-probed against the full store — the delta
+        // pairs only with the capC earliest members, so per-batch cost
+        // is bounded by the keyspace·capC state size at ANY corpus
+        // (the deterministic bounded-recall trade q347 documents);
+        // with it on (default), saturated buckets fall through and
+        // verdicts are exactly the uncapped maintainer's.
+        val keepB = dStats
+          .join(oldStats, Seq("band_id", "band_key"), "left")
+          .na.fill(0L, Seq("old_n"))
+          .withColumn("tot_n", col("old_n") + col("d_n"))
+          .where(col("tot_n") <= maxBandBucket && col("tot_n") >= 2)
+          .select(col("band_id"), col("band_key"),
+            (lit(fallThrough) && col("old_n") > capC).as("sat"))
+        val a = dBands.join(keepB, Seq("band_id", "band_key"))
+          .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"),
+            col("band_id"), col("band_key"), col("sat"))
+        // capped fast path: unsaturated buckets probe the bounded
+        // member state — COMPLETE there (old_n <= capC means every
+        // prior member is present)
+        val candCap = a.where(!col("sat"))
+          .join(old.select(col("doc_id").as("doc_b"),
+            col("fp").as("fp_b"), col("band_id"), col("band_key")),
+            Seq("band_id", "band_key"))
+        // fall-through: saturated buckets probe the full tiered store
+        // (own-batch partition excluded — the stale-replay guard),
+        // restricted to exactly those keys by the delta-side join
+        val haveIdx = stateExists(spark, fpsP)
+        val candSat =
+          if (!haveIdx) candCap.limit(0)
+          else a.where(col("sat"))
+            .join(bandsOf(readTiered(spark, fpsP)
+                .where(col("batch") =!= batchId).drop("batch"))
+              .select(col("doc_id").as("doc_b"), col("fp").as("fp_b"),
+                col("band_id"), col("band_key")),
               Seq("band_id", "band_key"))
-          // fall-through: saturated buckets probe the full tiered store
-          // (own-batch partition excluded — the stale-replay guard),
-          // restricted to exactly those keys by the delta-side join
-          val haveIdx = stateExists(spark, fpsP)
-          val candSat =
-            if (!haveIdx) candCap.limit(0)
-            else a.where(col("sat"))
-              .join(bandsOf(readTiered(spark, fpsP)
-                  .where(col("batch") =!= batchId).drop("batch"))
-                .select(col("doc_id").as("doc_b"), col("fp").as("fp_b"),
-                  col("band_id"), col("band_key")),
-                Seq("band_id", "band_key"))
-          // same-batch pairs: delta×delta inside kept buckets, smaller
-          // id first — the arrival orientation both maintainers share
-          val candSame = a
-            .join(dBands.select(col("doc_id").as("doc_b"),
-              col("fp").as("fp_b"), col("band_id"), col("band_key")),
-              Seq("band_id", "band_key"))
-            .where(col("doc_b") < col("doc_a"))
-          val ham = candCap.unionByName(candSat)
-            .where(col("doc_b") =!= col("doc_a"))
-            .unionByName(candSame)
-            .select(col("doc_a"), col("doc_b"),
-              bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
-                .cast("int").as("hamming"))
-            .where(col("hamming") <= radius)
-            .distinct()
-          val best = ham.groupBy(col("doc_a"))
-            .agg(max_by(struct(col("hamming"), col("doc_b")),
-              struct(-col("hamming"), -col("doc_b"))).as("bm"))
-            .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-              col("bm.hamming").as("best_hamming"))
-          val verdicts = fps.select(col("doc_id"))
-            .join(best, col("doc_id") === col("doc_a"), "left")
-            .select(col("doc_id"), lit(batchId).as("batch_id"),
-              col("best_match").isNotNull.as("is_dup"),
-              col("best_match"), col("best_hamming"))
-          // partitions BEFORE the commit: a crash in between replays the
-          // batch against the unchanged committed state and clobbers
-          verdicts.write.mode("overwrite")
-            .parquet(s"$verdictsP/batch=$batchId")
-          fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
-          // new capped-index state: exact counts over ALL buckets, the
-          // capC lowest doc_ids per bucket — one bounded-size shuffle
-          val newStats = oldStats
-            .join(dStats, Seq("band_id", "band_key"), "full_outer")
-            .na.fill(0L, Seq("old_n", "d_n"))
-            .select(col("band_id"), col("band_key"),
-              (col("old_n") + col("d_n")).as("bucket_n"))
-          val mergedMembers = old
+        // same-batch pairs: delta×delta inside kept buckets, smaller
+        // id first — the arrival orientation both maintainers share
+        val candSame = a
+          .join(dBands.select(col("doc_id").as("doc_b"),
+            col("fp").as("fp_b"), col("band_id"), col("band_key")),
+            Seq("band_id", "band_key"))
+          .where(col("doc_b") < col("doc_a"))
+        val ham = candCap.unionByName(candSat)
+          .where(col("doc_b") =!= col("doc_a"))
+          .unionByName(candSame)
+          .select(col("doc_a"), col("doc_b"),
+            bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
+              .cast("int").as("hamming"))
+          .where(col("hamming") <= radius)
+          .distinct()
+        val best = ham.groupBy(col("doc_a"))
+          .agg(max_by(struct(col("hamming"), col("doc_b")),
+            struct(-col("hamming"), -col("doc_b"))).as("bm"))
+          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
+            col("bm.hamming").as("best_hamming"))
+        val verdicts = fps.select(col("doc_id"))
+          .join(best, col("doc_id") === col("doc_a"), "left")
+          .select(col("doc_id"), lit(batchId).as("batch_id"),
+            col("best_match").isNotNull.as("is_dup"),
+            col("best_match"), col("best_hamming"))
+        // partitions BEFORE the commit: a crash in between replays the
+        // batch against the unchanged committed state and clobbers
+        verdicts.write.mode("overwrite")
+          .parquet(s"$verdictsP/batch=$batchId")
+        fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
+        // new capped-index state: exact counts over ALL buckets, the
+        // capC lowest doc_ids per bucket — one bounded-size shuffle
+        val newStats = oldStats
+          .join(dStats, Seq("band_id", "band_key"), "full_outer")
+          .na.fill(0L, Seq("old_n", "d_n"))
+          .select(col("band_id"), col("band_key"),
+            (col("old_n") + col("d_n")).as("bucket_n"))
+        val mergedMembers = old
+          .select(col("band_id"), col("band_key"), col("doc_id"),
+            col("fp"))
+          .unionByName(dBands
             .select(col("band_id"), col("band_key"), col("doc_id"),
-              col("fp"))
-            .unionByName(dBands
-              .select(col("band_id"), col("band_key"), col("doc_id"),
-                col("fp")))
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("band_id"), col("band_key"))
-                .orderBy(col("doc_id"))))
-            .where(col("rn") <= capC).drop("rn")
-          val newState = mergedMembers
-            .join(newStats, Seq("band_id", "band_key"))
-          swapCommit(spark, newState, capCommitP, done, batchId)
-          Seq(fpsP, verdictsP)
-            .foreach(tierCompact(spark, _, done + batchId, tierK))
-        }
+              col("fp")))
+          .withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("band_id"), col("band_key"))
+              .orderBy(col("doc_id"))))
+          .where(col("rn") <= capC).drop("rn")
+        mergedMembers.join(newStats, Seq("band_id", "band_key"))
       }
-    val q = checkpoint.fold(writer)(
-        cp => writer.option("checkpointLocation", cp))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    recoverCommit(spark, capCommitP)
+    }
+    recoverSwap(spark, capCommitP, CommitMarker)
     recoverSwap(spark, verdictsP)
     readTiered(spark, verdictsP).drop("batch")
   }
@@ -1116,10 +1084,8 @@ object EventStream {
     * incremental maintainer: input batches carry (doc_id, json_text);
     * each batch parses its documents ONCE (`parse_json`) and lands the
     * encoded variant binary in its own `batch=<id>` overwrite partition
-    * under the ledgered exactly-once protocol every maintainer here
-    * shares (deterministic parse ⇒ a replayed batch clobbers its stale
-    * partition instead of doubling it; the ledger write is swap-atomic
-    * and rename-window-recovered). Downstream consumers run typed
+    * under the [[skipLedgerBatch]] protocol (the parse is deterministic).
+    * Downstream consumers run typed
     * `variant_get` paths against the STORE and never re-parse text —
     * the parse cost is paid once per document ever, not once per
     * consumer per read, which at 100 TB of crawl JSON is the difference
@@ -1129,24 +1095,13 @@ object EventStream {
   def variantMaintain(spark: SparkSession, docs: DataFrame,
       statePath: String, tierK: Int = 8): DataFrame = {
     val storeP = statePath + "/variants"
-    val ledgerP = statePath + "/ledger"
-    val q = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Seq(storeP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          batch.select(col("doc_id").cast("long"),
-              parse_json(col("json_text")).as("raw_data"))
-            .write.mode("overwrite").parquet(s"$storeP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          tierCompact(spark, storeP, done + batchId, tierK)
-        }
+    runMaintainer(docs) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId, Seq(storeP), tierK) {
+        batch.select(col("doc_id").cast("long"),
+            parse_json(col("json_text")).as("raw_data"))
+          .write.mode("overwrite").parquet(s"$storeP/batch=$batchId")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, storeP)
     readTiered(spark, storeP).drop("batch")
   }
@@ -1170,10 +1125,8 @@ object EventStream {
     * older than a delete must not resurrect the row). Fingerprinting is
     * a stateless upstream map (q320's 60-bit md5 row hash), which makes
     * the maintainer SCHEMA-AGNOSTIC — one store shape serves any table.
-    * Exactly-once: deterministic per-batch partitions clobber on replay,
-    * own-batch partitions are excluded from prior-state reads (the
-    * stale-replay guard), and the ledger is swap-atomic and skip-only.
-    * [[compactState]] applies to fps/verdicts (src_batch and seq ride as
+    * Exactly-once: the [[skipLedgerBatch]] protocol (own-batch partitions
+    * are excluded from prior-state reads). [[compactState]] applies to fps/verdicts (src_batch and seq ride as
     * DATA columns, so the LWW fold survives the batch=-1 rewrite).
     * Contract: events collapse last-wins by seq within a batch; op is
     * 'U' (upsert, fp required) or 'D' (delete) — anything else fails the
@@ -1198,80 +1151,70 @@ object EventStream {
       retention: Long = 0L, tierK: Int = 8): DataFrame = {
     val logP = statePath + "/fps"
     val verdictsP = statePath + "/verdicts"
-    val ledgerP = statePath + "/ledger"
-    val q = changes.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Seq(logP, verdictsP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          val evs = batch
-            .select(col("doc_id").cast("long"), col("op"),
-              col("fp").cast("long"), col("seq").cast("long"))
-            .where(assert_true(col("op").isin("U", "D") &&
-              (col("op") === "D" || col("fp").isNotNull) &&
-              col("seq").isNotNull,
-              lit("snapshotDiffMaintain: op must be 'U'|'D', upserts " +
-                "need fp, every event needs seq")).isNull)
-            .groupBy(col("doc_id"))
-            .agg(max_by(struct(col("op"), col("fp"), col("seq")),
-              col("seq")).as("e"))
-            .select(col("doc_id"), col("e.op").as("op"),
-              col("e.fp").as("fp"), col("e.seq").as("seq"))
-            .localCheckpoint()
-          val priorAll =
-            if (stateExists(spark, logP)) priorState(spark, logP, batchId, evs)
-            else evs.select(col("doc_id"), col("op").as("p_op"),
-              col("fp").as("p_fp"), col("seq").as("p_seq")).limit(0)
-          val cls = when(col("p_seq").isNotNull &&
-              col("seq") <= col("p_seq"), "stale")
-            .when(col("op") === "U" &&
-              (col("p_op").isNull || col("p_op") === "D"), "added")
-            .when(col("op") === "U" && col("p_fp") === col("fp"),
-              "touched_same")
-            .when(col("op") === "U", "changed")
-            .when(col("p_op") === "U", "removed")
-            .otherwise("ghost_delete")
-          val verdict = evs.join(priorAll, Seq("doc_id"), "left")
-            .select(cls.as("cls"), col("fp"))
-            .agg(
-              count(when(col("cls") === "added", 1)).as("n_added"),
-              count(when(col("cls") === "removed", 1)).as("n_removed"),
-              count(when(col("cls") === "changed", 1)).as("n_changed"),
-              count(when(col("cls") === "touched_same", 1))
-                .as("n_touched_same"),
-              count(when(col("cls") === "ghost_delete", 1))
-                .as("n_ghost_deletes"),
-              count(when(col("cls") === "stale", 1)).as("n_stale"),
-              expr("bit_xor(CASE WHEN cls IN ('added','changed') " +
-                "THEN fp END)").as("delta_fp"))
-            .withColumn("batch_id", lit(batchId))
-          verdict.write.mode("overwrite")
-            .parquet(s"$verdictsP/batch=$batchId")
-          evs.withColumn("src_batch", lit(batchId))
-            .write.mode("overwrite").parquet(s"$logP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          // only the VERDICTS store tiers (one partition per batch
-          // forever otherwise); the fps LOG self-bounds through the
-          // compactEvery horizon fold below, whose version semantics
-          // own that layout
-          tierCompact(spark, verdictsP, done + batchId, tierK)
-          if (compactEvery > 0 && (done.size + 1) % compactEvery == 0) {
-            val hw = spark.read.parquet(logP)
-              .agg(max(col("seq")), min(col("seq"))).head()
-            val target = hw.getLong(0) - retention
-            // skip when nothing would fold (target below every event):
-            // a no-op compaction still rewrites the whole log
-            if (target > snapshotHorizon(spark, statePath) &&
-                target >= hw.getLong(1))
-              compactSnapshotLog(spark, statePath, target)
-          }
+    runMaintainer(changes) { (batch, batchId) =>
+      // only the VERDICTS store tiers (one partition per batch forever
+      // otherwise); the fps LOG self-bounds through the compactEvery
+      // horizon fold below, whose version semantics own that layout
+      skipLedgerBatch(spark, statePath, batchId, Seq(verdictsP), tierK,
+          untiered = Seq(logP)) {
+        val evs = batch
+          .select(col("doc_id").cast("long"), col("op"),
+            col("fp").cast("long"), col("seq").cast("long"))
+          .where(assert_true(col("op").isin("U", "D") &&
+            (col("op") === "D" || col("fp").isNotNull) &&
+            col("seq").isNotNull,
+            lit("snapshotDiffMaintain: op must be 'U'|'D', upserts " +
+              "need fp, every event needs seq")).isNull)
+          .groupBy(col("doc_id"))
+          .agg(max_by(struct(col("op"), col("fp"), col("seq")),
+            col("seq")).as("e"))
+          .select(col("doc_id"), col("e.op").as("op"),
+            col("e.fp").as("fp"), col("e.seq").as("seq"))
+          .localCheckpoint()
+        val priorAll =
+          if (stateExists(spark, logP)) priorState(spark, logP, batchId, evs)
+          else evs.select(col("doc_id"), col("op").as("p_op"),
+            col("fp").as("p_fp"), col("seq").as("p_seq")).limit(0)
+        val cls = when(col("p_seq").isNotNull &&
+            col("seq") <= col("p_seq"), "stale")
+          .when(col("op") === "U" &&
+            (col("p_op").isNull || col("p_op") === "D"), "added")
+          .when(col("op") === "U" && col("p_fp") === col("fp"),
+            "touched_same")
+          .when(col("op") === "U", "changed")
+          .when(col("p_op") === "U", "removed")
+          .otherwise("ghost_delete")
+        val verdict = evs.join(priorAll, Seq("doc_id"), "left")
+          .select(cls.as("cls"), col("fp"))
+          .agg(
+            count(when(col("cls") === "added", 1)).as("n_added"),
+            count(when(col("cls") === "removed", 1)).as("n_removed"),
+            count(when(col("cls") === "changed", 1)).as("n_changed"),
+            count(when(col("cls") === "touched_same", 1))
+              .as("n_touched_same"),
+            count(when(col("cls") === "ghost_delete", 1))
+              .as("n_ghost_deletes"),
+            count(when(col("cls") === "stale", 1)).as("n_stale"),
+            expr("bit_xor(CASE WHEN cls IN ('added','changed') " +
+              "THEN fp END)").as("delta_fp"))
+          .withColumn("batch_id", lit(batchId))
+        verdict.write.mode("overwrite")
+          .parquet(s"$verdictsP/batch=$batchId")
+        evs.withColumn("src_batch", lit(batchId))
+          .write.mode("overwrite").parquet(s"$logP/batch=$batchId")
+      }.foreach { ledger =>
+        if (compactEvery > 0 && ledger.size % compactEvery == 0) {
+          val hw = spark.read.parquet(logP)
+            .agg(max(col("seq")), min(col("seq"))).head()
+          val target = hw.getLong(0) - retention
+          // skip when nothing would fold (target below every event):
+          // a no-op compaction still rewrites the whole log
+          if (target > snapshotHorizon(spark, statePath) &&
+              target >= hw.getLong(1))
+            compactSnapshotLog(spark, statePath, target)
         }
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, verdictsP)
     readTiered(spark, verdictsP).drop("batch")
   }
@@ -1449,8 +1392,7 @@ object EventStream {
     * (seq, src_batch) so tiebreaks are unchanged. Crash-safe and
     * fail-closed: the horizon marker commits FIRST (a crash between
     * marker and rewrite refuses some still-reconstructible versions —
-    * conservative), then the log rewrites via the [[recoverSwap]] swap
-    * protocol. The ledger is untouched: batch ids stay ledgered, replay
+    * conservative), then the log rewrites via [[swapDir]]. The ledger is untouched: batch ids stay ledgered, replay
     * still skips them, and the reserved base id −1 can never collide
     * with a live batch. Monotone: a new horizon below the current one is
     * rejected (those versions are already gone).
@@ -1464,23 +1406,10 @@ object EventStream {
     val prev = snapshotHorizon(spark, statePath)
     require(horizon >= prev,
       s"compactSnapshotLog: horizon $horizon below the existing $prev")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def swapWrite(path: String)(write: String => Unit): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
-      val fs = dst.getFileSystem(conf)
-      fs.delete(tmp, true)
-      write(tmp.toString)
-      // marker EXPLICITLY and LAST — the swapCommit ledger-last contract
-      fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
-      fs.delete(dst, true)
-      fs.rename(tmp, dst)
-      ()
-    }
     import spark.implicits._
     // marker first: fail-closed (versions ≤ horizon refuse before the
     // events that reconstruct them can be folded away)
-    swapWrite(statePath + "/horizon") { tmp =>
+    swapDir(spark, statePath + "/horizon") { tmp =>
       Seq(horizon).toDF("horizon").coalesce(1).write.parquet(tmp)
     }
     val log = spark.read.parquet(logP).localCheckpoint()
@@ -1494,7 +1423,7 @@ object EventStream {
     val tail = log.where(col("seq") > horizon)
       .select(col("doc_id"), col("op"), col("fp"), col("seq"),
         col("src_batch"), col("batch"))
-    swapWrite(logP) { tmp =>
+    swapDir(spark, logP) { tmp =>
       base.write.parquet(s"$tmp/batch=-1")
       if (!tail.isEmpty)
         tail.write.mode("append").partitionBy("batch").parquet(tmp)
@@ -1787,12 +1716,11 @@ object EventStream {
     * sides and output): after thousands of micro-batches the stores hold
     * thousands of tiny `batch=<id>` partitions — a listing and
     * small-files problem at 100 TB. Compaction rewrites the WHOLE table
-    * into a single reserved `batch=-1` partition via the swap protocol
-    * (write to `_tmp` with the parquet job's `_SUCCESS` at its root,
-    * delete + rename — [[recoverSwap]]'s contract, which the maintainers
-    * now run on these stores before every read, so a crash in the rename
-    * window is recovered and a half-written `_tmp` beside the live store
-    * is ignored). Correctness under replay is preserved by construction:
+    * into a single reserved `batch=-1` partition via [[swapDir]]
+    * ([[recoverSwap]]'s contract, which the maintainers run on these
+    * stores before every read, so a crash in the rename window is
+    * recovered and a half-written `_tmp` beside the live store is
+    * ignored). Correctness under replay is preserved by construction:
     * only LEDGERED batches get compacted (run this between stream runs —
     * the single-maintainer caveat), a ledgered batch id is skipped on
     * replay so its now-merged partition is never recomputed, and the
@@ -1801,27 +1729,15 @@ object EventStream {
     */
   def compactState(spark: SparkSession, tablePath: String): Unit = {
     recoverSwap(spark, tablePath)
-    if (stateExists(spark, tablePath)) {
-      val dst = new org.apache.hadoop.fs.Path(tablePath)
-      val tmp = new org.apache.hadoop.fs.Path(tablePath + "_tmp")
-      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // tiered-aware: fold the LIVE view (manifest-filtered), not the raw
-      // directory — a raw read would double-count a committed segment
-      // together with not-yet-GC'd member partitions, or include an
-      // uncommitted orphan segment from a crashed tier fold
-      readTiered(spark, tablePath).drop("batch")
-        .write.mode("overwrite").parquet(tmp.toString + "/batch=-1")
-      // the tmp-root completeness marker recoverSwap keys on is written
-      // EXPLICITLY and LAST (the swapCommit ledger-last contract) — a
-      // partitionBy write's own root marker placement depends on the
-      // session's partitionOverwriteMode committer (dynamic mode stages
-      // partitions and leaves no root _SUCCESS), and an absent marker
-      // makes recovery DELETE the renamed store as a half-written orphan
-      fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
-      fs.delete(dst, true)
-      fs.rename(tmp, dst)
-      ()
-    }
+    if (stateExists(spark, tablePath))
+      swapDir(spark, tablePath) { tmp =>
+        // tiered-aware: fold the LIVE view (manifest-filtered), not the
+        // raw directory — a raw read would double-count a committed
+        // segment together with not-yet-GC'd member partitions, or
+        // include an uncommitted orphan segment from a crashed tier fold
+        readTiered(spark, tablePath).drop("batch")
+          .write.mode("overwrite").parquet(tmp + "/batch=-1")
+      }
   }
 
   // ───────────────────────────────────────────────────────────────────
@@ -2124,55 +2040,35 @@ object EventStream {
     * aggregates in stream processors keep per-key heaps); avg derives at
     * read time. Fully-retracted types (n = 0) drop from the view.
     * Signed sums are sum-merged ⇒ NOT replay-idempotent ⇒ the
-    * atomically-committed [[swapCommit]] ledger rides along, same as
-    * [[decayedMaintain]]. State is #types rows forever.
+    * [[atomicCommitBatch]] protocol. State is #types rows forever.
     */
   def cdcRollupMaintain(spark: SparkSession, changes: DataFrame,
       statePath: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val commitP = statePath + "/commit"
     val cellsP = commitP + "/cells"
-    val ledgerP = commitP + "/ledger"
     guardOldLayout(spark, statePath, commitP, "cdcRollupMaintain")
     def partials(df: DataFrame): DataFrame = df
       .groupBy(col("event_type"))
       .agg(sum(col("op").cast("long")).as("n"),
         sum((col("op") * col("value")).cast(DecimalType(18, 4)))
           .cast(DecimalType(18, 4)).as("total_dec"))
-    val q = changes.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recoverCommit(spark, commitP)
-        // STRICT ledger read (not the corrupt-tolerant readLedger): for
-        // sum-merged state a swallowed ledger row means a double-merge;
-        // inside the atomic commit dir a partial ledger cannot exist, so
-        // a read failure here is real corruption and must surface
-        val done: Set[Long] =
-          if (stateExists(spark, ledgerP))
-            spark.read.parquet(ledgerP).select(col("batch_id"))
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
-          val incoming = partials(batch)
-          val merged =
-            if (stateExists(spark, cellsP))
-              spark.read.parquet(cellsP)
-                .withColumn("total_dec",
-                  col("total_dec").cast(DecimalType(18, 4)))
-                .unionByName(incoming)
-                .groupBy(col("event_type"))
-                .agg(sum(col("n")).as("n"),
-                  sum(col("total_dec")).cast(DecimalType(18, 4))
-                    .as("total_dec"))
-            else incoming
-          swapCommit(spark, merged, commitP, done, batchId)
-        }
+    runMaintainer(changes) { (batch, batchId) =>
+      atomicCommitBatch(spark, commitP, batchId) {
+        val incoming = partials(batch)
+        if (stateExists(spark, cellsP))
+          spark.read.parquet(cellsP)
+            .withColumn("total_dec",
+              col("total_dec").cast(DecimalType(18, 4)))
+            .unionByName(incoming)
+            .groupBy(col("event_type"))
+            .agg(sum(col("n")).as("n"),
+              sum(col("total_dec")).cast(DecimalType(18, 4))
+                .as("total_dec"))
+        else incoming
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    recoverCommit(spark, commitP)
+    }
+    recoverSwap(spark, commitP, CommitMarker)
     spark.read.parquet(cellsP)
       .where(col("n") > 0L)
       .withColumn("total", col("total_dec").cast("double"))
@@ -2191,11 +2087,8 @@ object EventStream {
     * pair space is never re-joined — and the emitted pairs are complete
     * because a pair (i∈batch p, j∈batch q) is produced exactly once, in
     * batch max(p, q) (same-batch pairs via the ΔA⋈ΔB term). Exactly-once
-    * is [[dedupMaintain]]'s grow-only posture: both side stores and the
-    * output land as per-batch OVERWRITE partitions, reads exclude the
-    * batch's own partition, so a replayed crash recomputes identical
-    * deterministic rows and clobbers the stale attempt; the
-    * corrupt-tolerant whole-rewrite ledger only skips work. At 100 TB
+    * is the [[skipLedgerBatch]] protocol over both side stores and the
+    * output. At 100 TB
     * both side stores are tables bucketed on k (the
     * [[graft.ext.Dedup.writeBandIndexBucketed]] layout), so each delta
     * probe shuffles only the batch; a hot key is the join's own
@@ -2207,42 +2100,29 @@ object EventStream {
     val aP = statePath + "/a"
     val bP = statePath + "/b"
     val outP = statePath + "/out"
-    val ledgerP = statePath + "/ledger"
-    val q = rows.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ledgerP: same rename-window recovery as dedupMaintain's list
-        Seq(aP, bP, outP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          val da = batch.where(col("side") === "a")
-            .select(col("k"), col("id")).localCheckpoint()
-          val db = batch.where(col("side") === "b")
-            .select(col("k"), col("id")).localCheckpoint()
-          def old(p: String): DataFrame =
-            if (stateExists(spark, p))
-              readTiered(spark, p).where(col("batch") =!= batchId)
-                .select(col("k"), col("id"))
-            else da.limit(0)
-          val aSide = da.unionByName(old(aP))
-          val delta = aSide
-            .join(db.select(col("k"), col("id").as("id_b")), Seq("k"))
-            .select(col("k"), col("id").as("id_a"), col("id_b"))
-            .unionByName(da
-              .join(old(bP).select(col("k"), col("id").as("id_b")), Seq("k"))
-              .select(col("k"), col("id").as("id_a"), col("id_b")))
-          delta.write.mode("overwrite").parquet(s"$outP/batch=$batchId")
-          da.write.mode("overwrite").parquet(s"$aP/batch=$batchId")
-          db.write.mode("overwrite").parquet(s"$bP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          Seq(aP, bP, outP)
-            .foreach(tierCompact(spark, _, done + batchId, tierK))
-        }
+    runMaintainer(rows) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId, Seq(aP, bP, outP), tierK) {
+        val da = batch.where(col("side") === "a")
+          .select(col("k"), col("id")).localCheckpoint()
+        val db = batch.where(col("side") === "b")
+          .select(col("k"), col("id")).localCheckpoint()
+        def old(p: String): DataFrame =
+          if (stateExists(spark, p))
+            readTiered(spark, p).where(col("batch") =!= batchId)
+              .select(col("k"), col("id"))
+          else da.limit(0)
+        val aSide = da.unionByName(old(aP))
+        val delta = aSide
+          .join(db.select(col("k"), col("id").as("id_b")), Seq("k"))
+          .select(col("k"), col("id").as("id_a"), col("id_b"))
+          .unionByName(da
+            .join(old(bP).select(col("k"), col("id").as("id_b")), Seq("k"))
+            .select(col("k"), col("id").as("id_a"), col("id_b")))
+        delta.write.mode("overwrite").parquet(s"$outP/batch=$batchId")
+        da.write.mode("overwrite").parquet(s"$aP/batch=$batchId")
+        db.write.mode("overwrite").parquet(s"$bP/batch=$batchId")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, outP)
     readTiered(spark, outP).drop("batch")
   }
@@ -2302,10 +2182,9 @@ object EventStream {
     * member ids, the maintained root of every node equals the batch
     * CC's cluster_id over ALL edges seen so far, for ANY arrival order
     * or batching (StreamingSpec pins it over interleaved chain/star
-    * waves). Sum-free but not idempotent (a replayed merge is harmless,
-    * a replayed APPEND of new singleton nodes is too — but the ledger
-    * still guards the map swap so a replayed batch never races a
-    * concurrent one; same posture as [[dedupMaintain]]). At 100 TB the
+    * waves). A replayed merge is harmless and so is a replayed APPEND of
+    * new singleton nodes, so the map (swapped whole, BEFORE the ledger
+    * row) runs under the [[skipLedgerBatch]] protocol. At 100 TB the
     * map-rewrite join touches only partitions holding AFFECTED roots in
     * a root-partitioned table; here the parquet map is swapped whole.
     * Returns the accumulated (id, root) map.
@@ -2313,56 +2192,46 @@ object EventStream {
   def ccMaintain(spark: SparkSession, edges: DataFrame,
       statePath: String): DataFrame = {
     val rootsP = statePath + "/roots"
-    val ledgerP = statePath + "/ledger"
-    val q = edges.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ledgerP: same rename-window recovery as dedupMaintain's list
-        Seq(rootsP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          val eb = batch.select(col("a"), col("b")).localCheckpoint()
-          val nodesB = eb.select(col("a").as("id"))
-            .union(eb.select(col("b").as("id"))).distinct()
-          val haveMap = stateExists(spark, rootsP)
-          val roots0 =
-            if (haveMap) spark.read.parquet(rootsP)
-            else nodesB.select(col("id"), col("id").as("root")).limit(0)
-          // nodes never seen before enter as their own root
-          val newNodes = nodesB.join(roots0, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("root"))
-          val base = roots0.unionByName(newNodes).localCheckpoint()
-          val lk = base.select(col("id"), col("root"))
-          val rel = eb
-            .join(lk.select(col("id").as("a"), col("root").as("ra")), Seq("a"))
-            .join(lk.select(col("id").as("b"), col("root").as("rb")), Seq("b"))
-            .where(col("ra") =!= col("rb"))
-            .select(col("ra"), col("rb")).distinct()
-          val merged =
-            if (rel.isEmpty) base
-            else {
-              // batch-bounded root graph → star-contraction CC → root
-              // rewrites. Star (O(log² n) rounds), NOT label-prop: the
-              // relabeled root graph of an adversarial arrival order is
-              // a long path (every third chain edge per wave stitches
-              // into a diameter-n/3 root chain), exactly the shape
-              // label-prop's O(diameter) rounds can't take.
-              val cc = graft.ext.Dedup.connectedComponentsStar(
-                rel, "ra", "rb")
-              base.join(
-                  cc.select(col("id").as("root"), col("cluster_id")),
-                  Seq("root"), "left")
-                .select(col("id"),
-                  coalesce(col("cluster_id"), col("root")).as("root"))
-            }
-          swapWrite(spark, merged, rootsP)
-          ledgerCommit(spark, ledgerP, done, batchId)
-        }
+    runMaintainer(edges) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId, Nil, 0,
+          untiered = Seq(rootsP)) {
+        val eb = batch.select(col("a"), col("b")).localCheckpoint()
+        val nodesB = eb.select(col("a").as("id"))
+          .union(eb.select(col("b").as("id"))).distinct()
+        val haveMap = stateExists(spark, rootsP)
+        val roots0 =
+          if (haveMap) spark.read.parquet(rootsP)
+          else nodesB.select(col("id"), col("id").as("root")).limit(0)
+        // nodes never seen before enter as their own root
+        val newNodes = nodesB.join(roots0, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("root"))
+        val base = roots0.unionByName(newNodes).localCheckpoint()
+        val lk = base.select(col("id"), col("root"))
+        val rel = eb
+          .join(lk.select(col("id").as("a"), col("root").as("ra")), Seq("a"))
+          .join(lk.select(col("id").as("b"), col("root").as("rb")), Seq("b"))
+          .where(col("ra") =!= col("rb"))
+          .select(col("ra"), col("rb")).distinct()
+        val merged =
+          if (rel.isEmpty) base
+          else {
+            // batch-bounded root graph → star-contraction CC → root
+            // rewrites. Star (O(log² n) rounds), NOT label-prop: the
+            // relabeled root graph of an adversarial arrival order is
+            // a long path (every third chain edge per wave stitches
+            // into a diameter-n/3 root chain), exactly the shape
+            // label-prop's O(diameter) rounds can't take.
+            val cc = graft.ext.Dedup.connectedComponentsStar(
+              rel, "ra", "rb")
+            base.join(
+                cc.select(col("id").as("root"), col("cluster_id")),
+                Seq("root"), "left")
+              .select(col("id"),
+                coalesce(col("cluster_id"), col("root")).as("root"))
+          }
+        swapWrite(spark, merged, rootsP)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, rootsP)
     spark.read.parquet(rootsP)
   }
@@ -2385,11 +2254,7 @@ object EventStream {
     * batch whose ids don't start at 0 still seeds k centroids) — at
     * scale you would train the init offline (k-means‖,
     * `trainCodebookParallel`) and let the stream only refresh. Sum-merged
-    * state is NOT replay-idempotent, so this maintainer carries the
-    * batch-id ledger, committed ATOMICALLY with the cell table via
-    * [[swapCommit]] (one directory rename covers both) — a crash between
-    * state write and ledger write cannot double-merge the sums under
-    * replay, unlike a ledger appended after the swap would allow.
+    * state is NOT replay-idempotent ⇒ the [[atomicCommitBatch]] protocol.
     * Returns the centroid table (cid, ce, cn2, n_vectors).
     */
   def kmeansMaintain(spark: SparkSession, vecs: DataFrame,
@@ -2398,7 +2263,6 @@ object EventStream {
     import graft.functions.GraftFunctions.dotExact
     val commitP = statePath + "/commit"
     val cellsP = commitP + "/cells"
-    val ledgerP = commitP + "/ledger"
     guardOldLayout(spark, statePath, commitP, "kmeansMaintain")
     def centroidsOf(cells: DataFrame): DataFrame = cells
       .select(col("cid"), col("dim"),
@@ -2412,72 +2276,58 @@ object EventStream {
         max(col("n")).as("n_vectors"))
       .withColumn("cn2", dotExact(col("ce"), col("ce")))
       .select(col("cid"), col("ce"), col("cn2"), col("n_vectors"))
-    val q = vecs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        recoverCommit(spark, commitP)
-        val done: Set[Long] =
-          if (stateExists(spark, ledgerP))
-            spark.read.parquet(ledgerP).select(col("batch_id"))
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
-          val e = batch
-            .select(col("vec_id"),
-              transform(col("embedding"), x => x.cast("double"))
-                .as("embedding"))
-            .withColumn("n2", dotExact(col("embedding"), col("embedding")))
-            .localCheckpoint()
-          // init = the ACTUAL k smallest vec_ids of the first batch (an
-          // orderBy+limit, k rows) — the batch trainer's `vec_id < k`
-          // shortcut assumes ids start at 0 and would leave the centroid
-          // set EMPTY on a first batch whose ids all exceed k (ranged
-          // arrival), silently assigning nothing forever. Identical to
-          // the shortcut whenever ids 0..k−1 are present (the parity
-          // fixture), robust when they aren't; fail loudly on an empty
-          // first batch rather than persist degenerate state.
-          val cents =
-            if (stateExists(spark, cellsP))
-              centroidsOf(spark.read.parquet(cellsP))
-            else {
-              val c0 = e.orderBy(col("vec_id")).limit(k)
-                .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-                  col("n2").as("cn2"))
-                .localCheckpoint()
-              require(c0.count() > 0,
-                s"kmeansMaintain: empty first batch cannot seed centroids")
-              c0
-            }
-          val scored = e.join(broadcast(
-              cents.select(col("cid"), col("ce"), col("cn2"))))
-            .select(col("vec_id"), col("cid"),
-              graft.ext.Similarity.cosine(
-                dotExact(col("embedding"), col("ce")),
-                col("n2"), col("cn2")).as("c_sim"))
-          val assign = scored.groupBy(col("vec_id"))
-            .agg(max_by(col("cid"), struct(col("c_sim"), -col("cid")))
-              .as("cid"))
-          val newCells = e.join(assign, "vec_id")
-            .select(col("cid"), posexplode(col("embedding"))
-              .as(Seq("dim", "v")))
+    runMaintainer(vecs) { (batch, batchId) =>
+      atomicCommitBatch(spark, commitP, batchId) {
+        val e = batch
+          .select(col("vec_id"),
+            transform(col("embedding"), x => x.cast("double"))
+              .as("embedding"))
+          .withColumn("n2", dotExact(col("embedding"), col("embedding")))
+          .localCheckpoint()
+        // init = the ACTUAL k smallest vec_ids of the first batch (an
+        // orderBy+limit, k rows) — the batch trainer's `vec_id < k`
+        // shortcut assumes ids start at 0 and would leave the centroid
+        // set EMPTY on a first batch whose ids all exceed k (ranged
+        // arrival), silently assigning nothing forever. Identical to
+        // the shortcut whenever ids 0..k−1 are present (the parity
+        // fixture), robust when they aren't; fail loudly on an empty
+        // first batch rather than persist degenerate state.
+        val cents =
+          if (stateExists(spark, cellsP))
+            centroidsOf(spark.read.parquet(cellsP))
+          else {
+            val c0 = e.orderBy(col("vec_id")).limit(k)
+              .select(col("vec_id").as("cid"), col("embedding").as("ce"),
+                col("n2").as("cn2"))
+              .localCheckpoint()
+            require(c0.count() > 0,
+              s"kmeansMaintain: empty first batch cannot seed centroids")
+            c0
+          }
+        val scored = e.join(broadcast(
+            cents.select(col("cid"), col("ce"), col("cn2"))))
+          .select(col("vec_id"), col("cid"),
+            graft.ext.Similarity.cosine(
+              dotExact(col("embedding"), col("ce")),
+              col("n2"), col("cn2")).as("c_sim"))
+        val assign = scored.groupBy(col("vec_id"))
+          .agg(max_by(col("cid"), struct(col("c_sim"), -col("cid")))
+            .as("cid"))
+        val newCells = e.join(assign, "vec_id")
+          .select(col("cid"), posexplode(col("embedding"))
+            .as(Seq("dim", "v")))
+          .groupBy(col("cid"), col("dim"))
+          .agg(sum(floor(col("v") * lit(1e9)).cast("long")).as("s1e9"),
+            count(lit(1)).as("n"))
+        if (stateExists(spark, cellsP))
+          spark.read.parquet(cellsP).unionByName(newCells)
             .groupBy(col("cid"), col("dim"))
-            .agg(sum(floor(col("v") * lit(1e9)).cast("long")).as("s1e9"),
-              count(lit(1)).as("n"))
-          val merged =
-            if (stateExists(spark, cellsP))
-              spark.read.parquet(cellsP).unionByName(newCells)
-                .groupBy(col("cid"), col("dim"))
-                .agg(sum(col("s1e9")).as("s1e9"), sum(col("n")).as("n"))
-            else newCells
-          swapCommit(spark, merged, commitP, done, batchId)
-        }
+            .agg(sum(col("s1e9")).as("s1e9"), sum(col("n")).as("n"))
+        else newCells
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     // zero-batch restart: recover a rename-window crash before reading
-    recoverCommit(spark, commitP)
+    recoverSwap(spark, commitP, CommitMarker)
     centroidsOf(spark.read.parquet(cellsP))
   }
 
@@ -2490,11 +2340,9 @@ object EventStream {
     * broadcast k-row codebook join + `max_by` partial agg, one shuffled
     * row per vector, exact-decimal cosine with ties to the smallest cid —
     * and landed in the postings store as an OVERWRITE of its own
-    * `batch=<id>` partition with the swapWrite batch-id ledger.
-    * Assignment under a fixed codebook is deterministic and batching-
-    * invariant, so a replayed batch recomputes identical rows and
-    * clobbers its stale partition ([[dedupMaintain]]'s exactly-once
-    * posture); [[compactState]] applies unchanged. At 100 TB the
+    * `batch=<id>` partition under the [[skipLedgerBatch]] protocol
+    * (assignment under a fixed codebook is deterministic and batching-
+    * invariant); [[compactState]] applies unchanged. At 100 TB the
     * postings store is a cell-bucketed table (probe joins prune to the
     * nprobe cells — [[graft.ext.Dedup.writeBandIndexBucketed]]'s analog
     * for IVF); here it is a per-batch parquet directory carrying the
@@ -2505,28 +2353,17 @@ object EventStream {
       statePath: String, codebook: DataFrame,
       tierK: Int = 8): DataFrame = {
     val postP = statePath + "/postings"
-    val ledgerP = statePath + "/ledger"
     // k rows by construction — materialized once for every batch's join
     val cb = codebook.select(col("cid"), col("ce"), col("cn2"))
       .localCheckpoint()
-    val q = vectors.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Seq(postP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          // the shared q45 assignment kernel — single source of truth with
-          // the batch index builder (KMeans.writePostingsBucketed)
-          graft.ext.KMeans.assignPostings(batch, cb)
-            .write.mode("overwrite").parquet(s"$postP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          tierCompact(spark, postP, done + batchId, tierK)
-        }
+    runMaintainer(vectors) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId, Seq(postP), tierK) {
+        // the shared q45 assignment kernel — single source of truth with
+        // the batch index builder (KMeans.writePostingsBucketed)
+        graft.ext.KMeans.assignPostings(batch, cb)
+          .write.mode("overwrite").parquet(s"$postP/batch=$batchId")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, postP)
     readTiered(spark, postP).drop("batch")
   }
@@ -2598,9 +2435,8 @@ object EventStream {
     * BM25 serving ([[bm25Search]]). State is two per-batch-partitioned
     * stores: `postings` (term, doc_id, tf — the FULL vocabulary, since
     * ingest can't know future queries) and `doclens` (doc_id, dl). Both
-    * are deterministic functions of the batch ⇒ per-batch overwrite
-    * partitions + the swapWrite batch-id ledger ([[dedupMaintain]]'s
-    * exactly-once posture), and [[compactState]] applies unchanged.
+    * are deterministic functions of the batch ⇒ the [[skipLedgerBatch]]
+    * protocol, and [[compactState]] applies unchanged.
     * The corpus statistics BM25 needs (N, Σdl, per-term df) DERIVE from
     * the stores at query time — df re-aggregates the postings (strictly
     * fewer rows than the token stream), so no sum-merged state exists
@@ -2613,32 +2449,20 @@ object EventStream {
     import graft.ext.TextAnalysis
     val postP = statePath + "/postings"
     val dlP = statePath + "/doclens"
-    val ledgerP = statePath + "/ledger"
-    val q = docs.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Seq(postP, dlP, ledgerP).foreach(recoverSwap(spark, _))
-        val done: Set[Long] = readLedger(spark, ledgerP)
-        if (!done.contains(batchId)) {
-          val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-          val tf = b
-            .select(col("doc_id"),
-              explode(TextAnalysis.tokens(col("text"))).as("term"))
-            .groupBy(col("term"), col("doc_id"))
-            .agg(count(lit(1)).as("tf"))
-          val dl = b.select(col("doc_id"),
-            TextAnalysis.tokenCount(col("text")).cast("long").as("dl"))
-          tf.write.mode("overwrite").parquet(s"$postP/batch=$batchId")
-          dl.write.mode("overwrite").parquet(s"$dlP/batch=$batchId")
-          ledgerCommit(spark, ledgerP, done, batchId)
-          Seq(postP, dlP)
-            .foreach(tierCompact(spark, _, done + batchId, tierK))
-        }
+    runMaintainer(docs) { (batch, batchId) =>
+      skipLedgerBatch(spark, statePath, batchId, Seq(postP, dlP), tierK) {
+        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+        val tf = b
+          .select(col("doc_id"),
+            explode(TextAnalysis.tokens(col("text"))).as("term"))
+          .groupBy(col("term"), col("doc_id"))
+          .agg(count(lit(1)).as("tf"))
+        val dl = b.select(col("doc_id"),
+          TextAnalysis.tokenCount(col("text")).cast("long").as("dl"))
+        tf.write.mode("overwrite").parquet(s"$postP/batch=$batchId")
+        dl.write.mode("overwrite").parquet(s"$dlP/batch=$batchId")
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
+    }
     recoverSwap(spark, dlP)
     readTiered(spark, dlP).drop("batch")
   }

@@ -111,6 +111,18 @@ class Round16Spec extends SparkSpec {
     // member state must handle late-arriving LOW doc_ids
     def fpOf(id: Long): Long = ((id / 3) * 37 % 128) * 2 + (id % 3) % 2
     val waves = Seq(30L until 60L, 0L until 30L, 60L until 90L)
+    def docStream(ddir: String) = spark.readStream
+      .schema(spark.read.parquet(ddir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(ddir)
+    def verdictMap(fin: org.apache.spark.sql.DataFrame)
+        : Map[Long, (Long, Boolean, Option[Long], Option[Int])] =
+      fin.collect().map { r =>
+        r.getAs[Long]("doc_id") -> ((r.getAs[Long]("batch_id"),
+          r.getAs[Boolean]("is_dup"),
+          Option(r.getAs[java.lang.Long]("best_match")).map(_.toLong),
+          Option(r.getAs[java.lang.Integer]("best_hamming"))
+            .map(_.toInt)))
+      }.toMap
     def run(tag: String, f: (org.apache.spark.sql.DataFrame, String,
         Option[String]) => org.apache.spark.sql.DataFrame)
         : Map[Long, (Long, Boolean, Option[Long], Option[Int])] = {
@@ -121,17 +133,9 @@ class Round16Spec extends SparkSpec {
       waves.foreach { w =>
         w.map(id => (id, fpOf(id))).toDF("doc_id", "fp")
           .coalesce(1).write.mode("append").parquet(ddir)
-        fin = f(spark.readStream
-          .schema(spark.read.parquet(ddir).schema)
-          .option("maxFilesPerTrigger", "1").parquet(ddir), st, Some(cp))
+        fin = f(docStream(ddir), st, Some(cp))
       }
-      fin.collect().map { r =>
-        r.getAs[Long]("doc_id") -> ((r.getAs[Long]("batch_id"),
-          r.getAs[Boolean]("is_dup"),
-          Option(r.getAs[java.lang.Long]("best_match")).map(_.toLong),
-          Option(r.getAs[java.lang.Integer]("best_hamming"))
-            .map(_.toInt)))
-      }.toMap
+      verdictMap(fin)
     }
     val base = run("base", (d, st, cp) => EventStream.fpDedupMaintain(
       spark, d, st, radius = 2, fpBits = 8, tierK = 2, checkpoint = cp))
@@ -155,6 +159,21 @@ class Round16Spec extends SparkSpec {
       "fixture must saturate some bucket (fall-through path exercised)")
     assert(cells.count() <= 2L * 16 * 2,
       "capped index must stay within keyspace*capC")
+    // full replay: the three landed waves again, over the same state,
+    // through a FRESH source checkpoint — batch ids 0..2 re-present and
+    // the atomic-commit ledger must skip every one (a re-merge would
+    // double the sum-merged bucket counts)
+    def cellRows(): Seq[String] = spark.read
+      .parquet(s"$root/capped/state/capcommit/cells")
+      .collect().map(_.toString).toSeq.sorted
+    val cellsBefore = cellRows()
+    val replayed = verdictMap(EventStream.fpDedupMaintainCapped(spark,
+      docStream(s"$root/capped/docs"), s"$root/capped/state", radius = 2,
+      fpBits = 8, capC = 2, tierK = 2,
+      checkpoint = Some(s"$root/capped/cp_replay")))
+    assert(cellRows() == cellsBefore,
+      "replayed batches must not re-merge the capped index")
+    assert(replayed == capped, "replay must leave the verdicts unchanged")
   }
 
   test("fpDedupMaintainCapped(fallThrough=false) is the pure q347 dial: " +
