@@ -329,7 +329,8 @@ object Bench {
     // judge item 1): consumers then always measure warm-substrate, so a
     // per-query time means "this query's own plan", and a flag on a
     // substrate line is adjudicated by an invalidate-then-rebuild replay
-    // (see Substrates.invalidators below). Skipped in filtered runs —
+    // (caches register under their line name in SessionCaches, which the
+    // replay below invalidates). Skipped in filtered runs —
     // a SPARK_GRAFT_ONLY repro deliberately pays the substrate it
     // consumes, preserving the two-scale repro semantics builders use.
     val substrateLines =
@@ -475,7 +476,7 @@ object Bench {
           // unadjudicable (r13's q36: retime 0.313s vs prev 3.203s said
           // nothing). Scoped per line: a knnedges replay keeps lshbands
           // warm, reproducing the line's original timed condition.
-          Substrates.invalidate(f.name, spark)
+          SessionCaches.invalidate(f.name, spark.sparkContext.applicationId)
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() }
           catch { case _: Throwable => }

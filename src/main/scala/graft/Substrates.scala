@@ -21,8 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * q56/q57 already use, extended to every substrate). Consumers then
   * always measure warm — their per-query numbers mean "the query's own
   * plan" — and a flag on a substrate line is adjudicated by an
-  * invalidate-then-rebuild replay ([[invalidators]]), which re-pays the
-  * build and is therefore comparable with the line's recorded baseline.
+  * invalidate-then-rebuild replay: each substrate's caches register under
+  * its line name in [[SessionCaches]], so the replay's
+  * `SessionCaches.invalidate(line, app)` re-pays exactly that line's
+  * build (a knnedges replay keeps lshbands warm), comparable with the
+  * line's recorded baseline.
   *
   * Line names are q-prefixed ("q00x_sub_*") so the bench baseline's
   * per-query regex tracks them across rounds; they are NOT correctness
@@ -61,53 +64,4 @@ object Substrates {
       queries.ExtQueries.phashSubstrateCached(s, dir)),
     "q00i_sub_orderpairs" -> ((s, dir) =>
       queries.AnalyticsQueries.orderPartCached(s, dir)))
-
-  private def app(s: SparkSession): String = s.sparkContext.applicationId
-
-  /** Per-line cache invalidation, called by the bench replay immediately
-    * before re-timing a flagged line so the retime re-pays the build.
-    * Includes the trainer queries (q56/q57) — their replays had the same
-    * blind spot. Scoped per line (not invalidate-everything) so a
-    * knnedges replay keeps lshbands warm, reproducing the condition the
-    * line was originally timed under.
-    */
-  private val substrateInvalidators: Map[String, SparkSession => Unit] = Map(
-    "q00a_sub_minhash" -> (s => ext.Dedup.invalidateMinhash(app(s))),
-    "q00b_sub_simhash" -> (s => ext.Dedup.invalidateSimhash(app(s))),
-    "q00c_sub_trigrams" ->
-      (s => queries.TextQueries.invalidateTrigrams(app(s))),
-    "q00d_sub_langscores" ->
-      (s => queries.TextQueries.invalidateLangScores(app(s))),
-    "q00e_sub_lshbands" ->
-      (s => queries.SimilarityQueries.invalidateLshBands(app(s))),
-    "q00f_sub_knnedges" ->
-      (s => queries.SimilarityQueries.invalidateKnnEdges(app(s))),
-    "q00g_sub_fspairs" ->
-      (s => queries.DedupQueries.invalidateSubstrates(app(s))),
-    "q00h_sub_phash" ->
-      (s => queries.ExtQueries.invalidateSubstrates(app(s))),
-    "q00i_sub_orderpairs" ->
-      (s => queries.AnalyticsQueries.invalidateOrderPairs(app(s))),
-    "q56_kmeans_codebook" ->
-      (s => queries.TrainingDataQueries.invalidateTrained(app(s))),
-    "q57_bpe_merges" ->
-      (s => queries.TrainingDataQueries.invalidateTrained(app(s))))
-
-  val invalidators: Map[String, SparkSession => Unit] =
-    substrateInvalidators
-
-  /** TOTAL per-line invalidation dispatch for the bench replay: the
-    * explicit substrate/trainer invalidators above, plus EVERY
-    * session-cached protocol gate via [[SessionCaches]] — gates register
-    * there by constructing their cache, so a new cached gate is covered
-    * the moment it exists, with no second hand-maintained list to forget
-    * (r14 ADVICE: the gate→cache map and the gate-name list here were
-    * parallel lists; a gate added to one but not the other silently
-    * reverted to the unadjudicable-flag blind spot). Unknown names are a
-    * no-op, so the replay can call this for any flagged line.
-    */
-  def invalidate(name: String, s: SparkSession): Unit = {
-    substrateInvalidators.get(name).foreach(_(s))
-    SessionCaches.invalidate(name, app(s))
-  }
 }

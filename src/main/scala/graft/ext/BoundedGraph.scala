@@ -27,9 +27,11 @@ object BoundedGraph {
   /** Collect up to `cap` rows of an all-LongType frame; None when over
     * cap, non-long, or any null (the caller's distributed loop keeps its
     * legacy semantics for those). The frame must already be materialized
-    * (localCheckpoint) — the probe is then a scan of cached blocks.
+    * (localCheckpoint) — the probe is then a scan of cached blocks. The
+    * one size-adaptive dispatch: the CC driver engine
+    * ([[Dedup.connectedComponents]]) goes through it too.
     */
-  private def collectLongs(df: DataFrame, cap: Int): Option[Array[Row]] = {
+  private[ext] def collectLongs(df: DataFrame, cap: Int): Option[Array[Row]] = {
     if (cap <= 0) return None
     if (!df.schema.fields.forall(_.dataType == LongType)) return None
     // size probe FIRST (a bounded count — per-partition counts cross, no

@@ -439,27 +439,17 @@ object Dedup {
     labels.toDF("id", "cluster_id")
   }
 
-  /** The adaptive probe both CC variants share: collect at most
-    * `driverCap + 1` rows of the ALREADY-CHECKPOINTED edge frame; if the
-    * list fits, both ids are longs and none is null, run the driver
-    * union-find; otherwise signal the caller to run its distributed loop.
-    * `driverCap <= 0` disables the dispatch (tests pin the distributed
-    * engines through it).
+  /** The adaptive probe both CC variants share: the size-adaptive
+    * dispatch's bounded collect ([[BoundedGraph.collectLongs]]) of the
+    * ALREADY-CHECKPOINTED edge frame, then the driver union-find; None
+    * signals the caller to run its distributed loop. `driverCap <= 0`
+    * disables the dispatch (tests pin the distributed engines through
+    * it).
     */
   private def ccDriverAttempt(fwd: DataFrame,
-      driverCap: Int): Option[DataFrame] = {
-    if (driverCap <= 0) return None
-    val longIds = fwd.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (!longIds) return None
-    // size probe FIRST (bounded count, no rows to the driver) — an
-    // over-cap list pays only the counting job, never a cap+1-row
-    // collect it would discard
-    if (fwd.limit(driverCap + 1).count() > driverCap) return None
-    val edges = fwd.limit(driverCap + 1).collect()
-    if (edges.exists(e => e.isNullAt(0) || e.isNullAt(1))) None
-    else Some(driverUnionFind(fwd.sparkSession, edges))
-  }
+      driverCap: Int): Option[DataFrame] =
+    BoundedGraph.collectLongs(fwd, driverCap)
+      .map(driverUnionFind(fwd.sparkSession, _))
 
   /** Skew-and-diameter-safe connected components: alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
@@ -726,31 +716,14 @@ object Dedup {
     * materialized-view analog, same posture as the trained codebook/BPE
     * caches. `key` should identify the corpus (e.g. the fixture dir).
     */
-  // r16 ADVICE: TrieMap.getOrElseUpdate may evaluate its thunk more than
-  // once under concurrent first callers, duplicating an expensive eager
-  // checkpoint build (wasted jobs + an orphaned checkpoint until GC).
-  // ConcurrentHashMap.computeIfAbsent evaluates exactly once per key; the
-  // builds never re-enter the same map, so the in-computation lock is safe.
-  private type CacheKey = (String, String, String, String)
-  private def newCache() =
-    new java.util.concurrent.ConcurrentHashMap[CacheKey, DataFrame]()
-  private def evictApp(
-      m: java.util.concurrent.ConcurrentHashMap[CacheKey, DataFrame],
-      app: String): Unit =
-    m.keySet().removeIf(k => k._1 == app)
-
-  private val simhashCache = newCache()
+  private val simhashCache = graft.SessionCaches
+    .memo[(String, String, String), DataFrame]("q00b_sub_simhash")
 
   def simhashCached(docs: DataFrame, key: String,
-      idCol: String, textCol: String): DataFrame = {
-    // the cached value is a localCheckpoint-backed frame whose blocks live
-    // in one SparkContext's block manager — key on the context identity so
-    // a session restart in the same JVM re-trains instead of handing out
-    // stale handles
-    val app = docs.sparkSession.sparkContext.applicationId
-    simhashCache.computeIfAbsent((app, key, idCol, textCol),
-      _ => simhash(docs, idCol, textCol).localCheckpoint())
-  }
+      idCol: String, textCol: String): DataFrame =
+    simhashCache.getOrElseUpdate(
+      (docs.sparkSession.sparkContext.applicationId, (key, idCol, textCol)),
+      simhash(docs, idCol, textCol).localCheckpoint())
 
   /** Session-scoped cache of the MinHash/LSH substrate — the hashed
     * shingles, band rows, and default-cap candidate pairs that q36
@@ -760,11 +733,14 @@ object Dedup {
     * as [[simhashCached]] and the trained codebook/BPE caches; at cluster
     * scale these are bucketed tables maintained alongside the corpus).
     * Bench attribution: the build is benched as its own named line
-    * (q00a_sub_minhash, [[graft.Substrates]]) so consumers measure warm.
+    * (q00a_sub_minhash, [[graft.Substrates]]) so consumers measure warm;
+    * all three layers register under that name.
     */
-  private val shingleCache = newCache()
-  private val bandCache = newCache()
-  private val candCache = newCache()
+  private def minhashLayer() = graft.SessionCaches
+    .memo[(String, String, String), DataFrame]("q00a_sub_minhash")
+  private val shingleCache = minhashLayer()
+  private val bandCache = minhashLayer()
+  private val candCache = minhashLayer()
 
   /** The hashed-shingle layer alone (r16): q265 and the field-similarity
     * substrate (q00g) consume ONLY the shingles — building bands +
@@ -774,42 +750,25 @@ object Dedup {
     * the full build is the same work as before, just demand-driven.
     */
   def hashedShinglesCached(docs: DataFrame, key: String,
-      idCol: String, textCol: String): DataFrame = {
-    val app = docs.sparkSession.sparkContext.applicationId
-    shingleCache.computeIfAbsent((app, key, idCol, textCol),
-      _ => hashedShingleRows(docs, idCol, textCol).localCheckpoint())
-  }
+      idCol: String, textCol: String): DataFrame =
+    shingleCache.getOrElseUpdate(
+      (docs.sparkSession.sparkContext.applicationId, (key, idCol, textCol)),
+      hashedShingleRows(docs, idCol, textCol).localCheckpoint())
 
   /** (hashedShingles, bandRows, candidatePairs) for a corpus, cached per
     * SparkContext + corpus key. All three are localCheckpoint-backed.
     */
   def minhashSubstrateCached(docs: DataFrame, key: String,
       idCol: String, textCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val app = docs.sparkSession.sparkContext.applicationId
-    val k = (app, key, idCol, textCol)
+    val k = (docs.sparkSession.sparkContext.applicationId,
+      (key, idCol, textCol))
     val sh = hashedShinglesCached(docs, key, idCol, textCol)
-    val bands = bandCache.computeIfAbsent(k,
-      _ => bandRows(minhashSignaturesAgg(sh, idCol), idCol).localCheckpoint())
-    val cands = candCache.computeIfAbsent(k,
-      _ => candidatePairs(bands, idCol).localCheckpoint())
+    val bands = bandCache.getOrElseUpdate(k,
+      bandRows(minhashSignaturesAgg(sh, idCol), idCol).localCheckpoint())
+    val cands = candCache.getOrElseUpdate(k,
+      candidatePairs(bands, idCol).localCheckpoint())
     (sh, bands, cands)
   }
-
-  /** Drop this context's cached minhash/simhash substrates so the next
-    * call re-pays the build — the bench replay adjudicator uses this to
-    * make a flagged substrate-build line's retime measure the build
-    * instead of returning the session-cached frame (r13 judge item 1).
-    * Dropped frames' checkpoint blocks are reclaimed by the
-    * ContextCleaner once unreferenced; substrate size is fixture-bounded.
-    */
-  private[graft] def invalidateMinhash(app: String): Unit = {
-    evictApp(shingleCache, app)
-    evictApp(bandCache, app)
-    evictApp(candCache, app)
-  }
-
-  private[graft] def invalidateSimhash(app: String): Unit =
-    evictApp(simhashCache, app)
 
   /** 32-bit SimHash per document: for each bit j, sum ±1 votes of the
     * distinct-token hash bits; bit set iff the vote is positive. One

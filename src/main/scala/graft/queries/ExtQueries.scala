@@ -3067,46 +3067,56 @@ object ExtQueries {
 
   /** Once-per-session capped-fp-maintainer gate run for q350. */
   private val cappedFpStreamCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q350_capped_fp_stream")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q350_capped_fp_stream")
 
   /** Once-per-session index-deletion gate run for q331. */
   private val indexDeletionCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q331_index_deletion")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q331_index_deletion")
 
   /** Once-per-session tombstone-retirement gate run for q330. */
   private val tombstoneGateCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q330_tombstone_retire")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q330_tombstone_retire")
 
   /** Once-per-session deletion-propagation run for q325. */
   private val deletionCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q325_deletion_propagation")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q325_deletion_propagation")
 
   /** Once-per-session history-scrub run for q326. */
   private val scrubCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q326_history_scrub")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q326_history_scrub")
 
   /** Once-per-session horizon-compaction run for q327. */
   private val horizonCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q327_snapshot_horizon")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q327_snapshot_horizon")
 
   /** Once-per-session probe/reset run for q328. */
   private val probeResetCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q328_probe_reset_gate")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q328_probe_reset_gate")
 
   /** Once-per-session serving-merge gate run for q329. */
   private val servingGateCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q329_serving_merge_gate")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q329_serving_merge_gate")
 
   /** Once-per-session compaction run for q324. */
   private val compactionCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q324_compaction_gate")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q324_compaction_gate")
 
   /** Once-per-session bucketed (doc_id, fp) landings of both snapshot
     * generations for q323 — q104's durable co-location contract applied
     * to reconciliation: one shuffle at write time, zero at every diff.
     */
   private val bucketedSnapCache =
-    graft.SessionCaches.gate[(String, String)]("q323_bucketed_snapshot_diff")
+    graft.SessionCaches
+      .memo[String, (String, String)]("q323_bucketed_snapshot_diff")
 
   private def bucketedSnapshots(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) =
@@ -3216,11 +3226,13 @@ object ExtQueries {
 
   /** Once-per-session tri-codec landing for q319. */
   private val codecCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q319_codec_roundtrip")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q319_codec_roundtrip")
 
   /** Once-per-session CDC-stream reconciliation run for q321. */
   private val snapshotStreamCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q321_stream_snapshot_diff")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q321_stream_snapshot_diff")
 
   /** The q321 run's store path — q322's time-travel reads fold over it. */
   private val snapshotStatePath = scala.collection.concurrent.TrieMap
@@ -3228,15 +3240,18 @@ object ExtQueries {
 
   /** Once-per-session two-generation parquet landing for q317. */
   private val schemaEvoCache =
-    graft.SessionCaches.gate[String]("q317_schema_evolution")
+    graft.SessionCaches
+      .memo[String, String]("q317_schema_evolution")
 
   /** Once-per-session PERMISSIVE-load landing for q318. */
   private val permissiveCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q318_permissive_load")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q318_permissive_load")
 
   /** Once-per-session streamed-variant landing for q316. */
   private val variantStreamCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q316_variant_stream")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q316_variant_stream")
 
   /** Session-shared perceptual-hash substrate for the q308/q312/q313
     * family: the closed-form PNG fixture (groups of 4 near-identical 8×8
@@ -3245,20 +3260,10 @@ object ExtQueries {
     * dHash24-fingerprinted, is built ONCE per session — the three gates
     * consume (doc_id, dhash) without each re-paying the corpus-sized
     * encode+decode (the dominant cost of all three; q313 alone was the
-    * suite's top line before sharing). Mirrors every other shared
-    * substrate here: keyed on applicationId + fixture dir,
-    * localCheckpoint cuts the lineage.
+    * suite's top line before sharing). localCheckpoint cuts the lineage.
     */
-  private val phashCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
-
-  /** Bench-replay hook: drop this context's perceptual-hash substrate so
-    * a flagged substrate line's retime re-pays the encode+decode build
-    * (r13 judge item 1). Only the in-memory derived frame is dropped —
-    * the landed serving tables (bucketed indexes, variant stores) are
-    * durable artifacts, not session substrates. */
-  private[graft] def invalidateSubstrates(app: String): Unit =
-    phashCache.keys.filter(_._1 == app).foreach(phashCache.remove)
+  private val phashCache = graft.SessionCaches
+    .memo[String, org.apache.spark.sql.DataFrame]("q00h_sub_phash")
 
   private[graft] def phashSubstrateCached(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -3299,14 +3304,15 @@ object ExtQueries {
     * the gated report is the checkpointed single row.
     */
   private val medallionReportCache =
-    graft.SessionCaches.gate[org.apache.spark.sql.DataFrame]("q315_medallion_gate")
+    graft.SessionCaches
+      .memo[String, org.apache.spark.sql.DataFrame]("q315_medallion_gate")
 
   /** Once-per-session stored-variant landing for q314 (the Bronze write:
-    * parse_json at load, parquet stores the encoded variant) — keyed on
-    * applicationId + fixture dir like every session substrate.
+    * parse_json at load, parquet stores the encoded variant).
     */
   private val variantStoreCache =
-    graft.SessionCaches.gate[String]("q314_variant_store")
+    graft.SessionCaches
+      .memo[String, String]("q314_variant_store")
 
   /** Synthesize a 32×32 grayscale JPEG whose sixteen 8×8 blocks are each
     * FLAT at the given cell luma — the construction that makes a LOSSY

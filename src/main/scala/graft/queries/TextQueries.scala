@@ -14,14 +14,12 @@ object TextQueries {
 
   /** Session-scoped char-trigram substrate (doc_id, lang, trigram) —
     * one corpus-scale explode shared by its consumers (q50 language ID
-    * uses it with `lang`; q91 LM scoring projects it down), keyed on the
-    * SparkContext identity like the other derived-artifact caches.
+    * uses it with `lang`; q91 LM scoring projects it down).
     * Benched as its own named line (q00c_sub_trigrams,
     * [[graft.Substrates]]); consumers measure warm.
     */
-  private val trigramCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String), org.apache.spark.sql.DataFrame]
+  private val trigramCache = graft.SessionCaches
+    .memo[String, org.apache.spark.sql.DataFrame]("q00c_sub_trigrams")
 
   private[graft] def trigramsCached(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -48,9 +46,8 @@ object TextQueries {
     * NOTE: the composed one-scan pipelines (q62/q135/q143) deliberately do
     * NOT use this — their design claim is "all signals from one projection".
     */
-  private val langScoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String), org.apache.spark.sql.DataFrame]
+  private val langScoreCache = graft.SessionCaches
+    .memo[String, org.apache.spark.sql.DataFrame]("q00d_sub_langscores")
 
   private[graft] def langScoresCached(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -65,15 +62,6 @@ object TextQueries {
 
   private val stopwordListSql =
     TextAnalysis.stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
-
-  /** Bench-replay hook: drop this context's trigram/lang-score substrates
-    * so a flagged substrate line's retime re-pays the build (r13 judge
-    * item 1). */
-  private[graft] def invalidateTrigrams(app: String): Unit =
-    trigramCache.keys.filter(_._1 == app).foreach(trigramCache.remove)
-
-  private[graft] def invalidateLangScores(app: String): Unit =
-    langScoreCache.keys.filter(_._1 == app).foreach(langScoreCache.remove)
 
   def defs: Seq[QueryDef] = Seq(
 

@@ -184,37 +184,22 @@ object TrainingDataQueries {
     * codebook): training is deterministic in (corpus dir, params), so the
     * result is a materialized view — the first consumer trains, later
     * consumers (q45+q56 share the codebook; q57+q60 share the merges)
-    * reuse. Values hold localCheckpoint-backed DataFrames, which live in
-    * the JVM-wide SparkContext's block manager.
+    * reuse. Each registers under its trainer's bench line, so a flagged
+    * q56 retime re-trains the codebook and a q57 retime the merges.
     */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Int), (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame)]
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, Int, Int), org.apache.spark.sql.DataFrame]
-
-  // cache keys include the SparkContext identity: the cached values hold
-  // localCheckpoint-backed frames bound to one context's block manager, so
-  // a session restart in the same JVM must re-train, not reuse stale handles
-
-  /** Bench-replay hook: drop this context's trained artifacts (BPE
-    * merges, k-means codebook) so a flagged trainer line's (q56/q57)
-    * retime re-pays training instead of returning the session cache —
-    * without this the replay adjudicator structurally cannot adjudicate
-    * a trainer flag (r13 judge item 1). */
-  private[graft] def invalidateTrained(app: String): Unit = {
-    bpeCache.keys.filter(_._1 == app).foreach(bpeCache.remove)
-    codebookCache.keys.filter(_._1 == app).foreach(codebookCache.remove)
-  }
+  private val bpeCache = graft.SessionCaches.memo[(String, Int),
+    (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame)]("q57_bpe_merges")
+  private val codebookCache = graft.SessionCaches.memo[(String, Int, Int),
+    org.apache.spark.sql.DataFrame]("q56_kmeans_codebook")
 
   private def trainedMerges(s: org.apache.spark.sql.SparkSession, dir: String) =
-    bpeCache.getOrElseUpdate((s.sparkContext.applicationId, dir, BpeMerges),
+    bpeCache.getOrElseUpdate((s.sparkContext.applicationId, (dir, BpeMerges)),
       Bpe.trainMerges(letterVocab(s, dir), BpeMerges))
 
   private[queries] def trainedCodebook(s: org.apache.spark.sql.SparkSession, dir: String,
       k: Int, iters: Int) =
-    codebookCache.getOrElseUpdate((s.sparkContext.applicationId, dir, k, iters), {
+    codebookCache.getOrElseUpdate(
+      (s.sparkContext.applicationId, (dir, k, iters)), {
       import s.implicits._
       KMeans.trainCodebook(
         Tables.embeddings(s, dir).select($"vec_id", $"embedding"), k, iters)

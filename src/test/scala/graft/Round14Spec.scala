@@ -50,12 +50,14 @@ class Round14Spec extends SparkSpec {
   test("bench substrate/gate invalidator registry is consistent: every " +
       "substrate line has an invalidator, every gate invalidator names " +
       "a real query") {
-    Substrates.builds.foreach { case (n, _) =>
-      assert(Substrates.invalidators.contains(n),
-        s"substrate line $n has no replay invalidator")
+    val qnames = SparkEntry.queries.keySet // forces module (and cache) init
+    val registered = SessionCaches.registered
+    (Substrates.builds.map(_._1) ++
+        Seq("q56_kmeans_codebook", "q57_bpe_merges")).foreach { n =>
+      assert(registered.contains(n),
+        s"substrate line $n has no registered replay cache")
     }
-    val qnames = SparkEntry.queries.keySet
-    Substrates.invalidators.keys.filterNot(_.startsWith("q00"))
+    registered.filterNot(_.startsWith("q00"))
       .foreach { n =>
         assert(qnames.contains(n),
           s"invalidator registered for unknown query '$n' — a typo here " +

@@ -72,10 +72,12 @@ class Round15Spec extends SparkSpec {
   test("SessionCaches: every registered gate names a real query, and " +
       "the full q314-q337 protocol-gate family is registered") {
     val qnames = SparkEntry.queries.keySet // forces module (and cache) init
-    val gates = SessionCaches.registeredGates
-    gates.foreach(g => assert(qnames.contains(g),
-      s"SessionCaches gate '$g' is not a query name — a typo here " +
-        "silently reverts that gate to the unadjudicable blind spot"))
+    val lines = qnames ++ Substrates.builds.map(_._1)
+    val gates = SessionCaches.registered
+    gates.foreach(g => assert(lines.contains(g),
+      s"SessionCaches name '$g' is not a query or substrate line — a " +
+        "typo here silently reverts that cache to the unadjudicable " +
+        "blind spot"))
     val expected = Set(
       "q314_variant_store", "q315_medallion_gate", "q316_variant_stream",
       "q317_schema_evolution", "q318_permissive_load",
@@ -90,49 +92,135 @@ class Round15Spec extends SparkSpec {
   }
 
   test("SessionCaches.invalidate drops only the given app's entries") {
-    val g = SessionCaches.gate[String]("q315_medallion_gate")
+    import java.util.concurrent.CountDownLatch
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    val name = "q315_medallion_gate"
+    val g = SessionCaches.memo[String, String](name)
     g.getOrElseUpdate(("appA", "/d"), "va")
     g.getOrElseUpdate(("appB", "/d"), "vb")
-    SessionCaches.invalidate("q315_medallion_gate", "appA")
+    SessionCaches.invalidate(name, "appA")
     // appA's entry is gone (recomputes), appB's survives
     assert(g.getOrElseUpdate(("appA", "/d"), "va2") == "va2")
     assert(g.getOrElseUpdate(("appB", "/d"), "vb2") == "vb")
-    SessionCaches.invalidate("q315_medallion_gate", "appA")
-    SessionCaches.invalidate("q315_medallion_gate", "appB")
+    SessionCaches.invalidate(name, "appA")
+    SessionCaches.invalidate(name, "appB")
+
+    // The memo contract, Spark-free: synthetic app ids, and latches (no
+    // sleeps) hold a build in flight. The caches register under a real
+    // query name, so the registered-name check holds in any test order.
+    val app = s"r15-memo-${System.nanoTime()}"
+    def await(l: CountDownLatch): Unit =
+      assert(l.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    // run `body` on its own thread; the returned thunk joins it
+    def spawn(body: => String): (Thread, () => String) = {
+      val out = new AtomicReference[String]()
+      val t = new Thread(() => out.set(body))
+      t.setDaemon(true)
+      t.start()
+      (t, () => { t.join(30000); assert(!t.isAlive); out.get })
+    }
+    // a first call on key "A" whose build counts itself, signals
+    // `started` and blocks until `release`
+    def blockedBuild(m: SessionCaches.Memo[String, String], v: String,
+        started: CountDownLatch, release: CountDownLatch,
+        builds: AtomicInteger): (Thread, () => String) =
+      spawn(m.getOrElseUpdate((app, "A"), {
+        builds.incrementAndGet()
+        started.countDown()
+        await(release)
+        v
+      }))
+    try {
+      // two threads that first-call one key run the build once
+      val once = SessionCaches.memo[String, String](name)
+      val builds = new AtomicInteger()
+      val started = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val (_, first) = blockedBuild(once, "v1", started, release, builds)
+      await(started)
+      val (t2, second) =
+        blockedBuild(once, "v2", new CountDownLatch(1), release, builds)
+      // release only once the second caller is parked: on the in-flight
+      // handle, or on `release` inside a duplicate build
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def parked = t2.getState == Thread.State.WAITING ||
+        t2.getState == Thread.State.TIMED_WAITING
+      while (!parked && System.nanoTime() < deadline) Thread.onSpinWait()
+      release.countDown()
+      val (v1, v2) = (first(), second())
+      assert(builds.get == 1, "two first callers built twice")
+      assert(v1 == "v1" && v2 == "v1")
+
+      // a build blocked on key A does not block key B
+      val keys = SessionCaches.memo[String, String](name)
+      val startedA = new CountDownLatch(1)
+      val releaseA = new CountDownLatch(1)
+      val (_, a) =
+        blockedBuild(keys, "a", startedA, releaseA, new AtomicInteger())
+      await(startedA)
+      try {
+        val (_, b) = spawn(keys.getOrElseUpdate((app, "B"), "b"))
+        assert(b() == "b")
+      } finally releaseA.countDown()
+      assert(a() == "a")
+
+      // invalidate during A's in-flight build: the next call rebuilds
+      val inv = SessionCaches.memo[String, String](name)
+      val startedI = new CountDownLatch(1)
+      val releaseI = new CountDownLatch(1)
+      val (_, stale) =
+        blockedBuild(inv, "stale", startedI, releaseI, new AtomicInteger())
+      await(startedI)
+      SessionCaches.invalidate(name, app)
+      releaseI.countDown()
+      assert(stale() == "stale")
+      assert(inv.getOrElseUpdate((app, "A"), "fresh") == "fresh")
+
+      // a failed build is not cached
+      val failing = SessionCaches.memo[String, String](name)
+      intercept[IllegalStateException](failing.getOrElseUpdate((app, "A"),
+        throw new IllegalStateException("build failed")))
+      assert(failing.getOrElseUpdate((app, "A"), "ok") == "ok")
+
+      // two caches registered under one name never return each other's
+      // values, and one invalidate drops both
+      val c1 = SessionCaches.memo[String, String](name)
+      val c2 = SessionCaches.memo[String, String](name)
+      assert(c1.getOrElseUpdate((app, "A"), "one") == "one")
+      assert(c2.getOrElseUpdate((app, "A"), "two") == "two")
+      assert(c1.getOrElseUpdate((app, "A"), "x") == "one")
+      SessionCaches.invalidate(name, app)
+      assert(c1.getOrElseUpdate((app, "A"), "one2") == "one2")
+      assert(c2.getOrElseUpdate((app, "A"), "two2") == "two2")
+    } finally SessionCaches.invalidate(name, app)
   }
 
   test("no raw session-keyed TrieMap caches outside the documented " +
       "exemptions — new gates must register via SessionCaches") {
-    // the tripwire that keeps the registry TOTAL: a future gate that
-    // declares its own (String, String)-keyed TrieMap instead of
-    // SessionCaches.gate(...) silently escapes the bench replay's
-    // invalidate-before-retime hook. Exemptions are the named substrate
-    // caches (each covered by an explicit Substrates invalidator) and
-    // the durable-artifact path caches (landed tables are durable by
-    // design — see ExtQueries.invalidateSubstrates's comment).
-    val exempt = Set(
-      "phashCache", "fsPairsCache", // q00h / q00g substrate carriers
-      "snapshotStatePath", // q321's landed store path (durable artifact)
-      "partitionedCache", "bucketedCache", // q130/q104 durable landings
-      "orderPartCache", // q00i substrate carrier
-      "lshBandsCache", "knnEdgesCache", // q00e / q00f substrate carriers
-      "trigramCache", "langScoreCache", // q00c / q00d substrate carriers
-      "bpeCache", "codebookCache") // q56/q57 trainer caches
-    val declPat =
+    // the tripwire that keeps the registry TOTAL: a future cache that
+    // declares its own session-keyed TrieMap or ConcurrentHashMap instead
+    // of SessionCaches.memo(...) silently escapes the bench replay's
+    // invalidate-before-retime hook. The one exemption is q321's store
+    // path, a side channel q322's reads fold over, not a memo.
+    val exempt = Set("snapshotStatePath")
+    val declPats = Seq(
       ("""(?s)val (\w+)(?::[^=]{0,120})? =\s*""" +
-        """scala\.collection\.concurrent\.TrieMap\s*""" +
-        """\.empty\[\(String, String\)""").r
-    val qdir = new java.io.File("src/main/scala/graft/queries")
-    val offenders = qdir.listFiles.filter(_.getName.endsWith(".scala"))
+        """(?:scala\.collection\.concurrent\.)?TrieMap\s*""" +
+        """\.empty\[\(String, String""").r,
+      ("""(?s)(?:val|def) (\w+)(?:\(\))?(?::[^=]{0,120})? =\s*""" +
+        """new\s+(?:java\.util\.concurrent\.)?ConcurrentHashMap\b""").r)
+    val offenders = Seq("queries", "ext")
+      .flatMap(d => new java.io.File(s"src/main/scala/graft/$d").listFiles)
+      .filter(_.getName.endsWith(".scala"))
       .flatMap { f =>
         val txt = new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        declPat.findAllMatchIn(txt).map(_.group(1))
+        declPats.flatMap(_.findAllMatchIn(txt).map(_.group(1)))
           .filterNot(exempt.contains)
           .map(n => s"${f.getName}:$n")
       }
     assert(offenders.isEmpty,
-      s"raw session caches found (use SessionCaches.gate): " +
+      s"raw session caches found (use SessionCaches.memo): " +
         offenders.mkString(", "))
   }
 

@@ -1382,8 +1382,9 @@ class StreamingSpec extends SparkSpec {
       hpath(statePath + "/commit_tmp")))
     assert(fs.exists(hpath(statePath + "/commit_tmp/ledger/_SUCCESS")),
       "fixture: a real commit must carry the ledger _SUCCESS marker")
-    // restart WITH batches: the first foreachBatch's recoverCommit must
-    // promote the orphan, after which the ledger skips every replayed id
+    // restart WITH batches: the first foreachBatch's
+    // recoverSwap(path, CommitMarker) must promote the orphan, after
+    // which the ledger skips every replayed id
     val fin2 = EventStream.decayedMaintain(spark, stream, statePath)
     assert(fin2.exceptAll(batch).isEmpty && batch.exceptAll(fin2).isEmpty)
     assert(!fs.exists(hpath(statePath + "/commit_tmp")))
@@ -1410,8 +1411,9 @@ class StreamingSpec extends SparkSpec {
     // the footprint of a FIRST commit that died mid-cells-write: no commit
     // dir has ever existed, the _tmp holds half-written cells and no
     // ledger — promoting it would wedge every restart on unreadable
-    // parquet; recoverCommit must see the missing ledger/_SUCCESS and
-    // delete it so the batch replays against genuinely-empty state
+    // parquet; recoverSwap(path, CommitMarker) must see the missing
+    // ledger/_SUCCESS and delete it so the batch replays against
+    // genuinely-empty state
     plantJunk(statePath + "/commit_tmp/cells")
     val fin = EventStream.decayedMaintain(spark,
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
@@ -1440,8 +1442,8 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(ddir)
     EventStream.decayedMaintain(spark, stream, statePath)
     // a concurrent-looking attempt died mid-tmp-write NEXT TO the live
-    // commit: recoverCommit must ignore it (dst exists) and the next
-    // swapCommit must clobber it rather than trip over it
+    // commit: recoverSwap(path, CommitMarker) must ignore it (dst exists)
+    // and the next swapCommit must clobber it rather than trip over it
     plantJunk(statePath + "/commit_tmp/cells")
     ev.where($"event_id" % 5 === 4).coalesce(1)
       .write.mode("append").parquet(ddir)
