@@ -386,12 +386,25 @@ object EventStream {
     * writes wave w+1 — each run sees only the files that exist, so
     * ordering needs no filesystem mtime/listing assumptions at all, and
     * batch ids continue monotonically from the checkpoint.
+    *
+    * `perBatch` runs in the CALLER's session: the micro-batch is rebound
+    * into `input.sparkSession` before the body sees it, so every plan the
+    * body builds from it executes there. Spark keys its generated-class
+    * cache on (task classloader, source), and the executor builds one
+    * classloader per session: each `start()` clones the session, so a
+    * body left in the clone would recompile every generated class of
+    * every plan on every call. The body therefore also runs under the
+    * caller's SQL conf, adaptive execution included, not the clone's
+    * (which turns adaptive execution off).
     */
   private def runMaintainer(input: DataFrame,
       checkpoint: Option[String] = None)(
       perBatch: (DataFrame, Long) => Unit): Unit = {
+    val session = input.sparkSession
+    val rebound: (DataFrame, Long) => Unit = (batch, batchId) =>
+      perBatch(session.createDataFrame(batch.rdd, batch.schema), batchId)
     val writer = input.writeStream.outputMode(OutputMode.Update())
-      .foreachBatch(perBatch)
+      .foreachBatch(rebound)
     val q = checkpoint.fold(writer)(
         cp => writer.option("checkpointLocation", cp))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -399,11 +412,21 @@ object EventStream {
     try q.awaitTermination() finally q.stop()
   }
 
+  /** The applied-batch ids of a ledger table. The schema is given, so the
+    * read runs no schema-inference job; an unreadable ledger fails at the
+    * `collect`, where each protocol below decides what that means.
+    */
+  private def readLedger(spark: SparkSession, ledgerP: String): Set[Long] =
+    spark.read.schema("batch_id LONG").parquet(ledgerP)
+      .collect().map(_.getLong(0)).toSet
+
   /** SKIP-LEDGER protocol, for the REPLAY-IDEMPOTENT maintainers. Their
     * batch body lands each store's contribution as an OVERWRITE of its own
     * `batch=<id>` partition (or, for [[ccMaintain]], an idempotent
-    * min-merge swapped whole), and every index read EXCLUDES the batch's
-    * own partition. So a batch replayed after a crash at ANY point before
+    * min-merge swapped whole), and every index read either EXCLUDES the
+    * batch's own partition or reads it only after this attempt has
+    * overwritten it (the dedup maintainers land their delta first). So a
+    * batch replayed after a crash at ANY point before
     * its ledger row recomputes the identical deterministic rows against
     * the same prior state and clobbers its stale attempt instead of
     * doubling it: exactly-once holds without the ledger, which only SKIPS
@@ -422,8 +445,8 @@ object EventStream {
     *     [[swapWrite]] — never `mode("append")`, whose task/job-commit
     *     crash window can leave a visible partial parquet file;
     *  5. [[tierCompact]] folds the `tiered` stores. Only LEDGERED
-    *     partitions fold, so the in-flight batch's own-partition
-    *     exclusion and overwrite-on-replay are untouched.
+    *     partitions fold, so the in-flight batch's own partition
+    *     stays a plain `batch=<id>` and overwrite-on-replay is untouched.
     *
     * `untiered` stores are recovered but never tier-folded. The
     * SUM-merged maintainers must NOT use this protocol: for them a lost
@@ -439,8 +462,7 @@ object EventStream {
     val done: Set[Long] =
       if (!stateExists(spark, ledgerP)) Set.empty
       else
-        try spark.read.parquet(ledgerP).select(col("batch_id"))
-          .collect().map(_.getLong(0)).toSet
+        try readLedger(spark, ledgerP)
         catch { case scala.util.control.NonFatal(_) => Set.empty }
     if (done.contains(batchId)) None
     else {
@@ -483,10 +505,14 @@ object EventStream {
     recoverSwap(spark, commitP, CommitMarker)
     tiered.foreach(recoverSwap(spark, _))
     val done: Set[Long] =
-      if (stateExists(spark, ledgerP))
-        spark.read.parquet(ledgerP).select(col("batch_id"))
-          .collect().map(_.getLong(0)).toSet
-      else Set.empty
+      if (!stateExists(spark, ledgerP)) Set.empty
+      else {
+        // a committed ledger holds at least the batch that committed it,
+        // so an empty one is corruption, not "nothing applied yet"
+        val ids = readLedger(spark, ledgerP)
+        require(ids.nonEmpty, s"empty committed ledger at $ledgerP")
+        ids
+      }
     if (!done.contains(batchId)) {
       swapCommit(spark, cells, commitP, done, batchId)
       tiered.foreach(tierCompact(spark, _, done + batchId, tierK))
@@ -712,10 +738,12 @@ object EventStream {
     * daily-crawl contract run continuously: each micro-batch (the
     * "delta") is LSH-banded, candidate-paired against the ACCUMULATED
     * corpus band index plus its own earlier rows (same-batch pairs are
-    * oriented `doc_b < doc_a`, exactly q88's delta convention),
-    * Jaccard-verified on the hashed-shingle store, and then APPENDED to
-    * the index — candidate cost per batch is ∝ |delta| and the old×old
-    * pair space is never re-examined. State = three grow-only tables
+    * oriented `doc_b < doc_a`, exactly q88's delta convention), and
+    * Jaccard-verified on the hashed-shingle store; the old×old pair space
+    * is never re-examined. The per-batch scans are not delta-sized,
+    * though: the bucket-cap count reads the whole band index and
+    * [[graft.ext.Dedup.overlapFor]]'s per-doc shingle sizes read the
+    * whole shingle store, every batch. State = three grow-only tables
     * (band index, shingle store, per-doc verdicts), each PARTITIONED BY
     * BATCH, under the [[skipLedgerBatch]] protocol. The skew cap is q36's:
     * bucket counts over ALL band rows (index + delta) partial-agg'd, so
@@ -745,25 +773,20 @@ object EventStream {
     runMaintainer(docs, checkpoint) { (batch, batchId) =>
       skipLedgerBatch(spark, statePath, batchId,
           Seq(bandsP, shP, verdictsP), tierK) {
-        // delta substrate: checkpointed once (delta-sized), consumed by
-        // candidate generation, verification, and the index append
+        // LAND FIRST: the delta's shingles and bands OVERWRITE their own
+        // batch=<id> partitions before any index read, so a crashed
+        // attempt's stale rows there are clobbered before they can be
+        // seen, and the index reads then take the delta from the store
+        // itself (`_delta` = own partition). Only ledgered batches
+        // tier-fold, so the own partition is always a plain batch=<id>.
         val sh = Dedup.hashedShingleRows(batch, "doc_id", "text")
-          .localCheckpoint()
-        val bands = Dedup.bandRows(
-          Dedup.minhashSignatures(sh, "doc_id"), "doc_id")
-          .localCheckpoint()
-        // index reads EXCLUDE this batch's own partition: a crashed
-        // attempt may have landed batch=<id> rows before the ledger
-        // said so, and pairing the delta against its own stale copy
-        // would break the `doc_b < doc_a` same-batch orientation
-        val haveIdx = stateExists(spark, bandsP)
-        val allBands = bands.withColumn("_delta", lit(true))
-          .unionByName(
-            if (haveIdx)
-              readTiered(spark, bandsP)
-                .where(col("batch") =!= batchId).drop("batch")
-                .withColumn("_delta", lit(false))
-            else bands.withColumn("_delta", lit(true)).limit(0))
+        sh.write.mode("overwrite").parquet(s"$shP/batch=$batchId")
+        val bands = Dedup.bandRows(Dedup.minhashSignatures(
+          spark.read.schema(sh.schema).parquet(s"$shP/batch=$batchId"),
+          "doc_id"), "doc_id")
+        bands.write.mode("overwrite").parquet(s"$bandsP/batch=$batchId")
+        val allBands = readTiered(spark, bandsP, Some(bands.schema))
+          .withColumn("_delta", col("batch") === batchId).drop("batch")
         val keep = allBands.groupBy(col("band_id"), col("band_key"))
           .agg(count(lit(1)).as("bucket_n"))
           .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
@@ -779,11 +802,7 @@ object EventStream {
             (!col("_delta_b") || col("doc_b") < col("doc_a")))
           .select(col("doc_a"), col("doc_b")).distinct()
           .localCheckpoint()
-        val allSh =
-          if (stateExists(spark, shP))
-            sh.unionByName(readTiered(spark, shP)
-              .where(col("batch") =!= batchId).drop("batch"))
-          else sh
+        val allSh = readTiered(spark, shP, Some(sh.schema)).drop("batch")
         val best = Dedup.jaccardFor(cands, allSh, "doc_id")
           .where(col("jaccard") >= threshold)
           .groupBy(col("doc_a"))
@@ -791,21 +810,19 @@ object EventStream {
             struct(col("jaccard"), -col("doc_b"))).as("bm"))
           .select(col("doc_a"), col("bm.doc_b").as("best_match"),
             col("bm.jaccard").as("best_jaccard"))
-        val verdicts = batch.select(col("doc_id"))
+        batch.select(col("doc_id"))
           .join(best, col("doc_id") === col("doc_a"), "left")
           .select(col("doc_id"), lit(batchId).as("batch_id"),
             col("best_match").isNotNull.as("is_dup"),
             col("best_match"), col("best_jaccard"))
-        // verdicts computed BEFORE the index grows; each table's batch
-        // contribution lands as an OVERWRITE of its own batch=<id>
-        // partition (the skip-ledger replay contract)
-        verdicts.write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
-        bands.write.mode("overwrite").parquet(s"$bandsP/batch=$batchId")
-        sh.write.mode("overwrite").parquet(s"$shP/batch=$batchId")
+          .write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
       }
     }
     recoverSwap(spark, verdictsP)
-    readTiered(spark, verdictsP).drop("batch")
+    val id = docs.schema("doc_id").dataType.sql
+    readTiered(spark, verdictsP, Some(StructType.fromDDL(s"doc_id $id, " +
+      s"batch_id BIGINT, is_dup BOOLEAN, best_match $id, best_jaccard DOUBLE")))
+      .drop("batch")
   }
 
   /** Streaming PERCEPTUAL-dedup index maintenance — [[dedupMaintain]]'s
@@ -816,8 +833,9 @@ object EventStream {
     * state store serves every modality; widths are enforced in-plan, a
     * wider fp fails the batch rather than degrading band recall
     * silently). Per batch: the delta's two (fpBits/2)-bit band
-    * rows probe the accumulated fingerprint index (own-batch partition
-    * excluded — the stale-replay guard), candidates respect the
+    * rows probe the accumulated fingerprint index (the delta lands
+    * first, overwriting its own batch partition — the stale-replay
+    * guard, as in [[dedupMaintain]]), candidates respect the
     * bucket cap and the arrival orientation (index docs, or same-batch
     * docs with smaller id), survivors verify with popcount ≤ radius, and
     * each delta doc reports its best match (min distance, deterministic
@@ -860,15 +878,11 @@ object EventStream {
             shiftright(col("fp"), fpBits) === 0,
             lit(s"fpDedupMaintain: fp exceeds fpBits=$fpBits — " +
               "widen fpBits or narrow the fingerprint")).isNull)
-          .localCheckpoint()
-        val haveIdx = stateExists(spark, fpsP)
-        val allFps = fps.withColumn("_delta", lit(true))
-          .unionByName(
-            if (haveIdx)
-              readTiered(spark, fpsP)
-                .where(col("batch") =!= batchId).drop("batch")
-                .withColumn("_delta", lit(false))
-            else fps.withColumn("_delta", lit(true)).limit(0))
+        // land first, as dedupMaintain: the delta overwrites its own
+        // batch=<id> partition before the index read takes it back
+        fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
+        val allFps = readTiered(spark, fpsP, Some(fps.schema))
+          .withColumn("_delta", col("batch") === batchId).drop("batch")
         val allBands = allFps.select(col("doc_id"), col("fp"),
           col("_delta"),
           posexplode(array(
@@ -899,18 +913,18 @@ object EventStream {
             struct(-col("hamming"), -col("doc_b"))).as("bm"))
           .select(col("doc_a"), col("bm.doc_b").as("best_match"),
             col("bm.hamming").as("best_hamming"))
-        val verdicts = fps.select(col("doc_id"))
+        allFps.where(col("_delta")).select(col("doc_id"))
           .join(best, col("doc_id") === col("doc_a"), "left")
           .select(col("doc_id"), lit(batchId).as("batch_id"),
             col("best_match").isNotNull.as("is_dup"),
             col("best_match"), col("best_hamming"))
-        verdicts.write.mode("overwrite")
-          .parquet(s"$verdictsP/batch=$batchId")
-        fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
+          .write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
       }
     }
     recoverSwap(spark, verdictsP)
-    readTiered(spark, verdictsP).drop("batch")
+    readTiered(spark, verdictsP, Some(StructType.fromDDL("doc_id BIGINT, " +
+      "batch_id BIGINT, is_dup BOOLEAN, best_match BIGINT, best_hamming INT")))
+      .drop("batch")
   }
 
   /** [[fpDedupMaintain]] with q347's CAPPED-index fast path wired into
@@ -1928,16 +1942,18 @@ object EventStream {
     * [[compactState]] fold. Everything else in the directory (orphan
     * segments from a crashed fold, stale members a crash left un-GC'd)
     * is invisible. With no manifest this is a plain read — zero overhead
-    * for never-tiered stores.
+    * for never-tiered stores. A caller that knows the store's data
+    * schema (`batch` excluded) passes it, so the read runs no
+    * schema-inference job; `batch` is still discovered from the paths.
     */
-  private[graft] def readTiered(spark: SparkSession,
-      storeP: String): DataFrame = {
+  private[graft] def readTiered(spark: SparkSession, storeP: String,
+      dataSchema: Option[StructType] = None): DataFrame = {
     // manifest (and its recovery side effects — tmp promote, first-fold
     // orphan delete) BEFORE the parquet read: the read lists files
     // eagerly, so a post-listing delete would leave the plan pointing at
     // removed files
     val segs = readSegManifest(spark, storeP)
-    val df = spark.read.parquet(storeP)
+    val df = dataSchema.fold(spark.read)(spark.read.schema).parquet(storeP)
     if (segs.isEmpty) df
     else {
       // covered batch ids compress to contiguous RANGES before entering

@@ -609,6 +609,57 @@ class StreamingSpec extends SparkSpec {
     assert(fin2.exceptAll(twin).isEmpty && twin.exceptAll(fin2).isEmpty)
   }
 
+  test("dedupMaintain runs every state write in the caller's session, " +
+      "not the stream's clone") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_dedup_session").toString
+    val (ddir, st, cp) = (root + "/docs", root + "/state", root + "/cp")
+    val sentinel = root + "/sentinel"
+    // (output path, written in `spark` itself?) per write command
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.collectFirst {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString
+        }.foreach(p => writes.add(p -> (qe.sparkSession eq spark)))
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def landWave(w: Int): Unit = (0 until 4)
+      .map(i => (w * 10L + i, s"wave $w doc ${i % 2} of the quick brown " +
+        "fox that jumps over the lazy dog"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(ddir)
+    landWave(0)
+    val schema = spark.read.parquet(ddir).schema
+    def stream = spark.readStream.schema(schema).parquet(ddir)
+    // registered before start(): the stream's cloned session inherits
+    // the listener, so its writes are reported too
+    spark.listenerManager.register(listener)
+    try {
+      EventStream.dedupMaintain(spark, stream, st, checkpoint = Some(cp))
+      landWave(1)
+      val fin =
+        EventStream.dedupMaintain(spark, stream, st, checkpoint = Some(cp))
+      assert(fin.count() == 8)
+      // one listener queue delivers in order: once the sentinel write is
+      // reported, every write before it has been
+      Seq(1).toDF("x").write.parquet(sentinel)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!writes.asScala.exists(_._1.endsWith("/sentinel")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val state = writes.asScala.toSeq.filter(_._1.contains(st))
+    for (t <- Seq("shingles", "bands", "verdicts"); b <- 0 to 1)
+      assert(state.exists(_._1.endsWith(s"/$t/batch=$b")),
+        s"no write of $t/batch=$b reported: ${state.map(_._1)}")
+    val foreign = state.filterNot(_._2).map(_._1)
+    assert(foreign.isEmpty, s"state writes outside the caller's session: " +
+      foreign.mkString(", "))
+  }
+
   test("streaming perceptual dedup (fpDedupMaintain) matches a brute-force " +
       "twin, survives replay, and serves identically after compaction") {
     // fingerprints via q308's closed form (md5 luma -> dHash bits), all
