@@ -387,22 +387,26 @@ object EventStream {
     * ordering needs no filesystem mtime/listing assumptions at all, and
     * batch ids continue monotonically from the checkpoint.
     *
-    * `perBatch` runs in the CALLER's session: the micro-batch is rebound
-    * into `input.sparkSession` before the body sees it, so every plan the
-    * body builds from it executes there. Spark keys its generated-class
-    * cache on (task classloader, source), and the executor builds one
-    * classloader per session: each `start()` clones the session, so a
-    * body left in the clone would recompile every generated class of
-    * every plan on every call. The body therefore also runs under the
-    * caller's SQL conf, adaptive execution included, not the clone's
-    * (which turns adaptive execution off).
+    * `perBatch` runs in the CALLER's session: the micro-batch's plan is
+    * rebound into `input.sparkSession`
+    * ([[org.apache.spark.sql.SessionRebind]]) before the body sees it, so
+    * every plan the body builds from it executes there. Spark keys its
+    * generated-class cache on (task classloader, source), and the
+    * executor builds one classloader per session: each `start()` clones
+    * the session, so a body left in the clone would recompile every
+    * generated class of every plan on every call. That saves the most on
+    * calls of few micro-batches; within one call the clone's classes were
+    * already shared. The body therefore also runs under the caller's SQL
+    * conf, adaptive execution included, not the clone's (which turns
+    * adaptive execution off), and adaptive planning costs a fixed amount
+    * per query: calls of many tiny batches pay it on every batch.
     */
   private def runMaintainer(input: DataFrame,
       checkpoint: Option[String] = None)(
       perBatch: (DataFrame, Long) => Unit): Unit = {
     val session = input.sparkSession
     val rebound: (DataFrame, Long) => Unit = (batch, batchId) =>
-      perBatch(session.createDataFrame(batch.rdd, batch.schema), batchId)
+      perBatch(org.apache.spark.sql.SessionRebind(session, batch), batchId)
     val writer = input.writeStream.outputMode(OutputMode.Update())
       .foreachBatch(rebound)
     val q = checkpoint.fold(writer)(
@@ -819,10 +823,7 @@ object EventStream {
       }
     }
     recoverSwap(spark, verdictsP)
-    val id = docs.schema("doc_id").dataType.sql
-    readTiered(spark, verdictsP, Some(StructType.fromDDL(s"doc_id $id, " +
-      s"batch_id BIGINT, is_dup BOOLEAN, best_match $id, best_jaccard DOUBLE")))
-      .drop("batch")
+    readTiered(spark, verdictsP).drop("batch")
   }
 
   /** Streaming PERCEPTUAL-dedup index maintenance — [[dedupMaintain]]'s
@@ -922,9 +923,7 @@ object EventStream {
       }
     }
     recoverSwap(spark, verdictsP)
-    readTiered(spark, verdictsP, Some(StructType.fromDDL("doc_id BIGINT, " +
-      "batch_id BIGINT, is_dup BOOLEAN, best_match BIGINT, best_hamming INT")))
-      .drop("batch")
+    readTiered(spark, verdictsP).drop("batch")
   }
 
   /** [[fpDedupMaintain]] with q347's CAPPED-index fast path wired into
