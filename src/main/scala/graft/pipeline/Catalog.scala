@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** Path-based medallion warehouse: `schema.table` → `<root>/<schema>/<table>`
@@ -33,30 +36,94 @@ final class Catalog(val spark: SparkSession, val root: String) {
     fs(p).exists(new HPath(p))
   }
 
-  def read(schema: String, table: String): DataFrame =
-    spark.read.parquet(path(schema, table))
+  /** Reads a table. A table whose last write went through a Catalog in
+    * this JVM is read with the schema that write produced, so the read
+    * runs no schema-inference job (Spark runs one per parquet read without
+    * a schema). Any other table infers its schema from its files, as
+    * `spark.read.parquet` does.
+    *
+    * The schema is kept per table path, shared by every Catalog instance:
+    * `overwrite` replaces it; `append`, `appendBatched` and
+    * `overwriteBatch` keep it when the written schema matches it (or
+    * record it when they create the table) and drop it when the schema
+    * differs, so a table of mixed file schemas infers again. Single-writer
+    * assumption, the same one the ledgers make: every write to a catalog
+    * root goes through a Catalog in this driver JVM, and one table has one
+    * writer at a time (different tables may be written from different
+    * threads). A write from another process or around the Catalog is not
+    * seen, and a read after it would use the schema this JVM recorded.
+    *
+    * Visible difference from inference: the `load_id` partition column
+    * reads as the type it was written with (BIGINT for every pipeline
+    * table), where partition-value inference reads small ids as INT.
+    */
+  def read(schema: String, table: String): DataFrame = {
+    val p = path(schema, table)
+    Option(Catalog.schemas.get(key(p)))
+      .fold(spark.read)(spark.read.schema(_)).parquet(p)
+  }
 
   /** Append rows (ledgers, Bronze landings). */
   def append(df: DataFrame, schema: String, table: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path(schema, table))
+    recorded(df, schema, table, partitioned = false, replaces = false)(
+      df.write.mode(SaveMode.Append).parquet(_))
 
   /** Append partitioned by load_id so per-batch rewrite prunes to one
     * partition and batch-scoped reads (`WHERE load_id = ?`) prune files.
     */
   def appendBatched(df: DataFrame, schema: String, table: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy("load_id")
-      .parquet(path(schema, table))
+    recorded(df, schema, table, partitioned = true, replaces = false)(
+      df.write.mode(SaveMode.Append).partitionBy("load_id").parquet(_))
 
   /** Idempotent batch rewrite: dynamic overwrite of just the partitions
     * present in `df` (the reference's delete+insert, S11).
     */
   def overwriteBatch(df: DataFrame, schema: String, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy("load_id")
-      .parquet(path(schema, table))
+    recorded(df, schema, table, partitioned = true, replaces = false)(
+      df.write.mode(SaveMode.Overwrite).partitionBy("load_id").parquet(_))
 
   /** Full rebuild (CTAS, S12/S13). */
   def overwrite(df: DataFrame, schema: String, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path(schema, table))
+    recorded(df, schema, table, partitioned = false, replaces = true)(
+      df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** Durability read-back of one batch write: the rows under exactly the
+    * table's `load_id=<loadId>` directory, read with the schema of the
+    * `written` rows. Reading the table root with `WHERE load_id` would
+    * prune to the same files but pays an O(#loads) root listing per load —
+    * a metadata storm at production cadence. A zero-row load writes no
+    * partition directory at all, which counts as 0, not an error. The
+    * count runs as one Spark job: `Dataset.count` plans a single-partition
+    * shuffle, which adaptive execution runs as a job of its own.
+    */
+  def countBatch(schema: String, table: String, loadId: Long,
+      written: StructType): Long = {
+    val p = new HPath(s"${path(schema, table)}/load_id=$loadId")
+    if (!fs(p.toString).exists(p)) 0L
+    else spark.read.schema(StructType(written.filterNot(_.name == "load_id")))
+      .parquet(p.toString).select().rdd.count()
+  }
+
+  private def key(p: String): String = fs(p).makeQualified(new HPath(p)).toString
+
+  /** Runs `write` on the table's path and records the schema a read of
+    * the table returns after it (see [[read]]). The entry is dropped while
+    * the write runs, so a concurrent read infers rather than pairing the
+    * old schema with new files, and stays dropped if the write fails.
+    */
+  private def recorded(df: DataFrame, schema: String, table: String,
+      partitioned: Boolean, replaces: Boolean)(write: String => Unit): Unit = {
+    val p = path(schema, table)
+    val k = key(p)
+    val written = Catalog.asRead(df.schema, partitioned)
+    val keep = replaces || (Catalog.schemas.get(k) match {
+      case null => !fs(p).exists(new HPath(p))
+      case known => known == written
+    })
+    Catalog.schemas.remove(k)
+    write(p)
+    if (keep) Catalog.schemas.put(k, written)
+  }
 
   /** Bucketed managed table (Hive-layout parquet in the session warehouse):
     * co-locates both sides of a recurring join on the bucket key so the
@@ -85,7 +152,7 @@ final class Catalog(val spark: SparkSession, val root: String) {
   def compact(schema: String, table: String,
       targetBytes: Long = 128L * 1024 * 1024): Long = {
     val p = path(schema, table)
-    val df = spark.read.parquet(p)
+    val df = read(schema, table)
     val hfs = fs(p)
     val partitioned = df.columns.contains("load_id") &&
       hfs.listStatus(new HPath(p))
@@ -148,5 +215,25 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val p = new HPath(s"$root/$schema")
     val hfs = fs(p.toString)
     if (hfs.exists(p)) { hfs.delete(p, true); () }
+    val prefix = key(p.toString) + "/"
+    Catalog.schemas.keySet.removeIf(_.startsWith(prefix))
+  }
+}
+
+object Catalog {
+
+  /** Qualified table path → the schema a read of that table returns after
+    * its last write through a Catalog (see [[Catalog.read]]).
+    */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  /** The schema Spark reads back for a write of `written`: parquet reads
+    * every column as nullable, and a partitioned write's `load_id` comes
+    * back as the last column.
+    */
+  private def asRead(written: StructType, partitioned: Boolean): StructType = {
+    val (part, data) =
+      written.fields.partition(f => partitioned && f.name == "load_id")
+    StructType((data ++ part).map(_.copy(nullable = true)))
   }
 }

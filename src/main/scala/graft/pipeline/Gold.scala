@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -158,6 +160,12 @@ object Gold {
   /** SP_GET_DAILY_TRAVEL_SUMMARY reconstruction (§2.10; field contract from
     * `streamlit/daily_travel_summary.py:32-102`): one nested JSON document
     * for a date — scalar metrics + per-section row arrays.
+    *
+    * One plan and one collect: a tagged union of the two totals (summed by
+    * Spark) and the five row sections (each row already a JSON object).
+    * The few rows of a date are sorted on the driver the way Spark's
+    * `orderBy` sorts them: nulls first, strings by their UTF-8 bytes, and
+    * ties in scan order.
     */
   def dailySummary(date: String, dailySpend: DataFrame, stepsHourly: DataFrame,
       sleepScores: DataFrame, manualLogs: DataFrame, flightLogs: DataFrame,
@@ -165,36 +173,56 @@ object Gold {
     val spark = dailySpend.sparkSession
     import spark.implicits._
     val d = to_date(lit(date))
-
-    val spent = dailySpend.where($"date" === d)
-      .agg(coalesce(sum($"total_amount"), lit(0.0))).as[Double].head()
+    val spend = dailySpend.where($"date" === d)
     val steps = stepsHourly.where($"date" === d)
-      .agg(coalesce(sum($"steps"), lit(0L))).as[Long].head()
-    val spendRows = dailySpend.where($"date" === d)
-      .select($"type", $"total_amount").orderBy($"type").toJSON.collect()
-    val sleepRows = sleepScores.where($"wake_up_date" === d)
-      .select($"overall_score", $"deep_sleep_in_minutes", $"resting_heart_rate")
-      .orderBy($"overall_score").toJSON.collect()
-    val logRows = manualLogs.where($"log_date" === d)
-      .select($"country", $"city", $"description", $"comments")
-      .toJSON.collect()
-    val flightRows = flightLogs.where($"flight_date" === d)
-      .select($"flight_number", $"from", $"to", $"duration_hours")
-      .orderBy($"flight_number").toJSON.collect()
-    val segRows = timelineSegments
-      .where(to_date($"start_time") === d)
-      .select($"start_time", $"end_time", $"segment_type", $"activity_type",
+
+    // columns: tag, string sort key, numeric sort key, JSON row, spent, steps
+    val none = lit(null)
+    def section(tag: Int, df: DataFrame, skey: Column, nkey: Column,
+        cols: Column*): DataFrame =
+      df.select(lit(tag), skey.cast("string"), nkey.cast("long"),
+        to_json(struct(cols: _*)), none.cast("double"), none.cast("long"))
+    val totals = spend
+      .select($"total_amount".as("spent"), none.cast("long").as("steps"))
+      .unionByName(steps.select(none.cast("double").as("spent"), $"steps"))
+      .agg(coalesce(sum($"spent"), lit(0.0)), coalesce(sum($"steps"), lit(0L)))
+      .select(lit(0), none.cast("string"), none.cast("long"),
+        none.cast("string"), col("*"))
+    val rows = totals
+      .union(section(1, spend, $"type", none,
+        $"type", $"total_amount"))
+      .union(section(2, sleepScores.where($"wake_up_date" === d), none,
+        $"overall_score",
+        $"overall_score", $"deep_sleep_in_minutes", $"resting_heart_rate"))
+      .union(section(3, manualLogs.where($"log_date" === d), none, none,
+        $"country", $"city", $"description", $"comments"))
+      .union(section(4, flightLogs.where($"flight_date" === d),
+        $"flight_number", none,
+        $"flight_number", $"from", $"to", $"duration_hours"))
+      .union(section(5,
+        timelineSegments.where(to_date($"start_time") === d), none,
+        unix_micros($"start_time"),
+        $"start_time", $"end_time", $"segment_type", $"activity_type",
         $"distance_meters",
         $"visit_latitude".as("visit_lat"), $"visit_longitude".as("visit_lon"),
         $"start_latitude".as("start_lat"), $"start_longitude".as("start_lon"),
-        $"end_latitude".as("end_lat"), $"end_longitude".as("end_lon"))
-      .orderBy($"start_time").toJSON.collect()
+        $"end_latitude".as("end_lat"), $"end_longitude".as("end_lon")))
+      .collect()
 
-    s"""{"DATE":"$date","TOTAL_SPENT":$spent,"TOTAL_STEPS":$steps,
-       |"SPENDING_ITEMS":${spendRows.mkString("[", ",", "]")},
-       |"SLEEP_DATA":${sleepRows.mkString("[", ",", "]")},
-       |"MANUAL_LOGS":${logRows.mkString("[", ",", "]")},
-       |"FLIGHTS":${flightRows.mkString("[", ",", "]")},
-       |"TIMELINE_SEGMENTS":${segRows.mkString("[", ",", "]")}}""".stripMargin
+    // Spark's ascending order: nulls first, strings by unsigned UTF-8 bytes
+    implicit val bytes: Ordering[Array[Byte]] =
+      java.util.Arrays.compareUnsigned(_, _)
+    def key(r: Row) = (Option(r.getString(1)).map(_.getBytes(UTF_8)),
+      if (r.isNullAt(2)) None else Some(r.getLong(2)))
+    def json(tag: Int): String = rows.filter(_.getInt(0) == tag)
+      .sortBy(key).map(_.getString(3)).mkString("[", ",", "]")
+    val total = rows.find(_.getInt(0) == 0).get
+
+    s"""{"DATE":"$date","TOTAL_SPENT":${total.getDouble(4)},"TOTAL_STEPS":${total.getLong(5)},
+       |"SPENDING_ITEMS":${json(1)},
+       |"SLEEP_DATA":${json(2)},
+       |"MANUAL_LOGS":${json(3)},
+       |"FLIGHTS":${json(4)},
+       |"TIMELINE_SEGMENTS":${json(5)}}""".stripMargin
   }
 }

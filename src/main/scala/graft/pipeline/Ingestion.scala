@@ -34,17 +34,25 @@ final class Ingestion(catalog: Catalog) {
     else st.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
   }
 
-  /** S6: files already loaded with SUCCESS for this table are skipped. */
-  def alreadyLoaded(targetTable: String): Set[String] =
-    if (!catalog.exists(ADMIN, "ingestion_logs")) Set.empty
-    else catalog.read(ADMIN, "ingestion_logs")
-      .where($"status" === "SUCCESS" && $"target_table" === targetTable)
-      .select($"file_name").distinct().as[String].collect().toSet
+  private type Ledger = Seq[(Long, String, String, String)]
 
-  private def nextLoadId(): Long =
-    if (!catalog.exists(ADMIN, "ingestion_logs")) 1L
+  /** One read of the load ledger, (load_id, file_name, target_table,
+    * status) per row: [[ingest]] derives the orphan reconcile, the
+    * SUCCESS-only skip set and the next load id from the same snapshot,
+    * so a config row pays one ledger read instead of three. The ledger
+    * is control-plane sized (one row per file attempt).
+    */
+  private def ledger(): Ledger =
+    if (!catalog.exists(ADMIN, "ingestion_logs")) Seq.empty
     else catalog.read(ADMIN, "ingestion_logs")
-      .agg(max($"load_id")).as[Option[Long]].head().getOrElse(0L) + 1L
+      .select($"load_id", $"file_name", $"target_table", $"status")
+      .as[(Long, String, String, String)].collect().toSeq
+
+  /** S6: files already loaded with SUCCESS for this table are skipped. */
+  private def succeeded(ledger: Ledger, targetTable: String): Set[String] =
+    ledger.collect {
+      case (_, file, table, "SUCCESS") if table == targetTable => file
+    }.toSet
 
   private def log(entry: Schemas.IngestionLog): Unit =
     catalog.append(Seq(entry).toDF(), ADMIN, "ingestion_logs")
@@ -52,7 +60,7 @@ final class Ingestion(catalog: Catalog) {
   /** Reconcile orphaned RUNNING claims before a new run: the batched
     * up-front claim (see [[ingest]]) means a driver crash mid-run leaves
     * a RUNNING row for every never-attempted file in the config — and
-    * because [[alreadyLoaded]] only honors SUCCESS, those files retry
+    * because the skip set only honors SUCCESS, those files retry
     * under FRESH load_ids, permanently stranding the crashed run's
     * claimed rows as RUNNING. A ledger consumer computing "in-flight
     * loads" would count ghosts forever. So each ingest starts by marking
@@ -63,24 +71,23 @@ final class Ingestion(catalog: Catalog) {
     * documents): a concurrent ingest's live claims would be
     * indistinguishable from a crash's orphans.
     */
-  def reconcileOrphans(): Seq[Long] = {
-    if (!catalog.exists(ADMIN, "ingestion_logs")) Seq.empty
-    else {
-      val ledger = catalog.read(ADMIN, "ingestion_logs")
-      val orphans = ledger.where($"status" === "RUNNING")
-        .join(ledger.where($"status".isin("SUCCESS", "FAILURE", "ABANDONED"))
-          .select($"load_id"), Seq("load_id"), "left_anti")
-        .select($"load_id", $"file_name", $"target_table", $"started_at")
-        .collect()
-      if (orphans.nonEmpty) {
-        val t = new Timestamp(System.currentTimeMillis())
-        catalog.append(orphans.toSeq.map { r =>
-          Schemas.IngestionLog(r.getLong(0), r.getString(1), r.getString(2),
-            "ABANDONED", 0L, "orphaned RUNNING claim from a crashed run", t)
-        }.toDF(), ADMIN, "ingestion_logs")
-      }
-      orphans.map(_.getLong(0)).toSeq.sorted
+  def reconcileOrphans(): Seq[Long] = reconcile(ledger())
+
+  private def reconcile(ledger: Ledger): Seq[Long] = {
+    val terminal = ledger.collect {
+      case (id, _, _, "SUCCESS" | "FAILURE" | "ABANDONED") => id
+    }.toSet
+    val orphans = ledger.filter { case (id, _, _, status) =>
+      status == "RUNNING" && !terminal.contains(id)
     }
+    if (orphans.nonEmpty) {
+      val t = new Timestamp(System.currentTimeMillis())
+      catalog.append(orphans.map { case (id, file, table, _) =>
+        Schemas.IngestionLog(id, file, table,
+          "ABANDONED", 0L, "orphaned RUNNING claim from a crashed run", t)
+      }.toDF(), ADMIN, "ingestion_logs")
+    }
+    orphans.map(_._1).sorted
   }
 
   /** S4/S5: load one file into Bronze with audit columns; returns rows
@@ -126,16 +133,8 @@ final class Ingestion(catalog: Catalog) {
       .withColumn("_source_file", lit(file))
       .withColumn("load_id", lit(loadId))
     catalog.appendBatched(withAudit, detail.target_schema, detail.target_table)
-    // durability-verifying row count: read back exactly the partition this
-    // load wrote. Going through the table root (read + WHERE load_id) would
-    // prune to the same files but pays an O(#loads) root listing per load —
-    // a metadata storm at production cadence. A zero-row load writes no
-    // partition directory at all, which counts as 0, not an error.
-    val partPath = new org.apache.hadoop.fs.Path(
-      s"${catalog.path(detail.target_schema, detail.target_table)}/load_id=$loadId")
-    val fs = partPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(partPath)) 0L
-    else spark.read.parquet(partPath.toString).count()
+    catalog.countBatch(detail.target_schema, detail.target_table, loadId,
+      withAudit.schema)
   }
 
   /** Ingest every pending file for one config row; one load_id per file
@@ -143,17 +142,20 @@ final class Ingestion(catalog: Catalog) {
     * Returns (file, load_id, rows) for loaded files.
     */
   def ingest(detail: Schemas.FileDetail): Seq[(String, Long, Long)] = {
-    reconcileOrphans()
-    val done = alreadyLoaded(detail.target_table)
+    val snapshot = ledger()
+    // the ABANDONED rows reuse their orphans' ids, so the snapshot's skip
+    // set and maximum id still hold after the reconcile
+    reconcile(snapshot)
+    val done = succeeded(snapshot, detail.target_table)
     val pending = listFiles(detail.source_path, detail.file_pattern)
       .filterNot(done.contains)
-    // allocate the whole id range up front: one ledger max-scan per CONFIG
-    // instead of per FILE — the per-file scan grows with ledger size and at
-    // production load cadence is a pure metadata storm.
-    val baseId = nextLoadId()
+    // allocate the whole id range up front, from the snapshot: no ledger
+    // max-scan per FILE, which would grow with ledger size and at
+    // production load cadence be a pure metadata storm.
+    val baseId = snapshot.map(_._1).maxOption.getOrElse(0L) + 1L
     val t0 = new Timestamp(System.currentTimeMillis())
     // claim the ENTIRE allocated range with one batched RUNNING append
-    // BEFORE any file loads: a concurrent ingest computing nextLoadId
+    // BEFORE any file loads: a concurrent ingest taking its snapshot
     // mid-run sees every claimed id, so the collision window is this one
     // append — not "until the last file finishes loading" (which a lazy
     // per-file RUNNING write would leave open)

@@ -10,8 +10,9 @@ import java.sql.Timestamp
   * batch-incremental via
   * the transformation ledger: each run discovers pending load_ids
   * (Bronze ∖ SUCCESS — the reference's set difference, transactions.py:19-23,
-  * here a left-anti join), transforms only those batches, and writes
-  * idempotently (load_id-partitioned dynamic overwrite).
+  * taken on the driver against one ledger snapshot per run), transforms
+  * only those batches, and writes idempotently (load_id-partitioned
+  * dynamic overwrite).
   */
 final class SilverTransforms(catalog: Catalog) {
   import catalog.spark
@@ -21,30 +22,47 @@ final class SilverTransforms(catalog: Catalog) {
   private val BRONZE = "bronze"
   private val SILVER = "silver"
 
-  /** J5: pending = bronze distinct load_ids anti-joined against SUCCESS. */
-  def pendingLoadIds(dataset: String, reprocess: Boolean = false): Seq[Long] = {
-    if (!catalog.exists(BRONZE, dataset)) return Seq.empty
-    val bronzeIds = catalog.read(BRONZE, dataset).select($"load_id").distinct()
-    val ids =
-      if (reprocess || !catalog.exists(ADMIN, "transformation_logs")) bronzeIds
-      else {
-        val done = catalog.read(ADMIN, "transformation_logs")
-          .where($"dataset_name" === dataset && $"status" === "SUCCESS")
-          .select($"load_id").distinct()
-        bronzeIds.join(done, Seq("load_id"), "left_anti")
-      }
-    ids.as[Long].collect().toSeq.sorted
+  /** One read of the transformation ledger: the SUCCESS load ids of each
+    * dataset, and an allocator of transformation ids counting up from one
+    * past the ledger's largest. [[runAll]] takes one per call and derives
+    * every pending set and every id it logs from it (single-driver
+    * assumption, as for the load ids of [[Ingestion.ingest]]).
+    */
+  private def ledger(): (Map[String, Set[Long]], Iterator[Long]) = {
+    val rows =
+      if (!catalog.exists(ADMIN, "transformation_logs")) Seq.empty
+      else catalog.read(ADMIN, "transformation_logs")
+        .select($"transformation_id", $"dataset_name", $"load_id", $"status")
+        .as[(Long, String, Long, String)].collect().toSeq
+    val done = rows.collect { case (_, ds, id, "SUCCESS") => ds -> id }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    (done, Iterator.iterate(rows.map(_._1).maxOption.getOrElse(0L) + 1L)(_ + 1))
   }
 
-  private def nextTransformationId(): Long =
-    if (!catalog.exists(ADMIN, "transformation_logs")) 1L
-    else catalog.read(ADMIN, "transformation_logs")
-      .agg(max($"transformation_id")).as[Option[Long]].head().getOrElse(0L) + 1L
+  /** A fresh allocator, for a processor called outside [[runAll]]. */
+  private def transformationIds(): Iterator[Long] = ledger()._2
 
-  private def log(dataset: String, loadId: Long, status: String,
-      rows: Long, err: String = ""): Unit =
+  /** The allocator of the [[runAll]] call running on this thread. */
+  private val runIds = new scala.util.DynamicVariable[Option[Iterator[Long]]](None)
+
+  /** J5: pending = bronze distinct load_ids minus the dataset's SUCCESS
+    * ids (the reference's set difference, transactions.py:19-23).
+    */
+  def pendingLoadIds(dataset: String, reprocess: Boolean = false): Seq[Long] =
+    pending(dataset, reprocess, ledger()._1)
+
+  private def pending(dataset: String, reprocess: Boolean,
+      done: Map[String, Set[Long]]): Seq[Long] = {
+    if (!catalog.exists(BRONZE, dataset)) return Seq.empty
+    val skip = if (reprocess) Set.empty[Long] else done.getOrElse(dataset, Set.empty)
+    catalog.read(BRONZE, dataset).select($"load_id").distinct()
+      .as[Long].collect().toSeq.filterNot(skip.contains).sorted
+  }
+
+  private def log(ids: Iterator[Long], dataset: String, loadId: Long,
+      status: String, rows: Long, err: String = ""): Unit =
     catalog.append(
-      Seq(Schemas.TransformationLog(nextTransformationId(), dataset, loadId,
+      Seq(Schemas.TransformationLog(ids.next(), dataset, loadId,
         status, rows, err, new Timestamp(System.currentTimeMillis()))).toDF(),
       ADMIN, "transformation_logs")
 
@@ -56,17 +74,23 @@ final class SilverTransforms(catalog: Catalog) {
     */
   private def runBatch(dataset: String, target: String, loadId: Long)(
       transform: DataFrame => DataFrame): Long = {
+    val ids = runIds.value.getOrElse(transformationIds())
     try {
       val out = transform(bronzeBatch(dataset, loadId))
-      catalog.overwriteBatch(out, SILVER, target)
-      val rows = catalog.read(SILVER, target).where($"load_id" === loadId).count()
-      log(dataset, loadId, "SUCCESS", rows)
+      val rows = writeBatch(out, target, loadId)
+      log(ids, dataset, loadId, "SUCCESS", rows)
       rows
     } catch {
       case e: Exception =>
-        log(dataset, loadId, "FAILURE", 0L, String.valueOf(e.getMessage))
+        log(ids, dataset, loadId, "FAILURE", 0L, String.valueOf(e.getMessage))
         throw e
     }
+  }
+
+  /** Rewrites one batch of a Silver table; returns the rows read back. */
+  private def writeBatch(out: DataFrame, target: String, loadId: Long): Long = {
+    catalog.overwriteBatch(out, SILVER, target)
+    catalog.countBatch(SILVER, target, loadId, out.schema)
   }
 
   // ── transactions (transformations/transactions.py): default missing
@@ -88,8 +112,7 @@ final class SilverTransforms(catalog: Catalog) {
       .where($"date".isNotNull)
       .groupBy($"date", $"type", $"load_id")
       .agg(sum($"amount").as("total_amount"), count(lit(1)).as("n_transactions"))
-    catalog.overwriteBatch(daily, SILVER, "daily_spend")
-    daily.count()
+    writeBatch(daily, "daily_spend", loadId)
   }
 
   // ── fitbit_heart_rate (fitbit_heart_rate.py): fuzzy column resolution,
@@ -148,8 +171,7 @@ final class SilverTransforms(catalog: Catalog) {
         sum(when($"hr_zone" === "Normal", 1L).otherwise(0L)).as("minutes_in_normal"),
         sum(when($"hr_zone" === "Elevated", 1L).otherwise(0L)).as("minutes_in_elevated"),
         sum(when($"hr_zone" === "High", 1L).otherwise(0L)).as("minutes_in_high"))
-    catalog.overwriteBatch(hourly, SILVER, "heart_rate_hourly")
-    hourly.count()
+    writeBatch(hourly, "heart_rate_hourly", loadId)
   }
 
   // ── fitbit_steps (fitbit_steps.py): hourly sums densified to all 24
@@ -213,25 +235,29 @@ final class SilverTransforms(catalog: Catalog) {
     * transformation_logic.py:12-56). `only` mirrors the DAG's
     * `transformation` run-parameter (restrict to one dataset,
     * transformation_logic.py:30-38). Returns dataset → rows per batch.
+    * One ledger snapshot serves the whole call.
     */
   def runAll(reprocess: Boolean = false,
       only: Option[String] = None): Map[String, Seq[(Long, Long)]] = {
+    val (done, ids) = ledger()
     def run(ds: String, f: Long => Long): (String, Seq[(Long, Long)]) =
       if (only.exists(_ != ds)) ds -> Seq.empty
-      else ds -> pendingLoadIds(ds, reprocess).map { id =>
+      else ds -> pending(ds, reprocess, done).map { id =>
         id -> (try f(id) catch { case _: Exception => -1L })
       }
-    Map(
-      run("transactions", id => {
-        val n = processTransactions(id); buildDailySpend(id); n
-      }),
-      run("fitbit_heart_rate", id => {
-        val n = processHeartRate(id); buildHeartRateHourly(id); n
-      }),
-      run("fitbit_steps", processSteps),
-      run("fitbit_sleep_score", processSleep),
-      run("manual_logs", processManualLogs),
-      run("flight_logs", processFlightLogs),
-      run("google_timeline", processTimeline))
+    runIds.withValue(Some(ids)) {
+      Map(
+        run("transactions", id => {
+          val n = processTransactions(id); buildDailySpend(id); n
+        }),
+        run("fitbit_heart_rate", id => {
+          val n = processHeartRate(id); buildHeartRateHourly(id); n
+        }),
+        run("fitbit_steps", processSteps),
+        run("fitbit_sleep_score", processSleep),
+        run("manual_logs", processManualLogs),
+        run("flight_logs", processFlightLogs),
+        run("google_timeline", processTimeline))
+    }
   }
 }

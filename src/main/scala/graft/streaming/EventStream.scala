@@ -400,6 +400,13 @@ object EventStream {
     * conf, adaptive execution included, not the clone's (which turns
     * adaptive execution off), and adaptive planning costs a fixed amount
     * per query: calls of many tiny batches pay it on every batch.
+    *
+    * The reuse needs a generated-class cache larger than the calls'
+    * working set: a one-wave `dedupMaintain` call compiles 8–22 classes
+    * under Spark's default 100-entry cache and 0 with 5,000 entries. The
+    * caller sets `spark.sql.codegen.cache.maxEntries` (the tests and
+    * `graft.Bench` use 5,000) before the JVM's first session is created:
+    * it is a JVM-wide static conf, so the library cannot set it itself.
     */
   private def runMaintainer(input: DataFrame,
       checkpoint: Option[String] = None)(
@@ -2652,9 +2659,9 @@ object EventStream {
   }
 
   /** Exactly-once ledgered streaming ingestion — the continuous analog of
-    * the batch load ledger (`Ingestion.alreadyLoaded`, the reference's
-    * idempotent delete+insert): Structured Streaming replays a failed
-    * micro-batch under the SAME batchId, so the foreachBatch sink is
+    * the batch load ledger (`Ingestion.ingest`'s SUCCESS-only skip, the
+    * reference's idempotent delete+insert): Structured Streaming replays
+    * a failed micro-batch under the SAME batchId, so the foreachBatch sink is
     * exactly-once iff it skips batch ids already committed to the ledger.
     * Each committed batch appends its rows partitioned by
     * `load_id = batchId` plus one ledger row; a replayed (or re-run)

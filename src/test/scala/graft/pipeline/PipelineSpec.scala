@@ -2,6 +2,10 @@ package graft.pipeline
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end medallion test on reference-shaped fixtures
   * (FIXTURES.md §B): CSV/JSON landing → Bronze (audit cols, ledger,
@@ -24,7 +28,9 @@ class PipelineSpec extends SparkSpec {
   private lazy val ingestion = new Ingestion(catalog)
   private lazy val silver = new SilverTransforms(catalog)
 
-  private lazy val config = Seq(
+  private lazy val config = configFor(landing)
+
+  private def configFor(landing: String) = Seq(
     Schemas.FileDetail(1, "c", "s", landing, "transactions*.csv", "bronze",
       "transactions", "CSV"),
     Schemas.FileDetail(2, "c", "s", landing, "manual_logs*.csv", "bronze",
@@ -40,7 +46,7 @@ class PipelineSpec extends SparkSpec {
     Schemas.FileDetail(7, "c", "s", landing, "timeline*.json", "bronze",
       "google_timeline", "JSON"))
 
-  private def seedFixtures(): Unit = {
+  private def seedFixtures(landing: String = landing): Unit = {
     write(landing, "transactions_1.csv",
       """country,date,name,type,amount,comments
         |Japan,2026-02-19,Hotel Tokyo,Hotel,"$1,200.50",Shinjuku hotel
@@ -98,6 +104,38 @@ class PipelineSpec extends SparkSpec {
         |  { "startTime": "2026-02-19T13:00:00", "endTime": "2026-02-19T13:05:00" }
         |] }
         |""".stripMargin)
+  }
+
+  /** Runs `body` and returns the number of Spark jobs each phase ran; the
+    * body names the current phase through the function it is given. Jobs
+    * carry the phase as a job-local property (adaptive execution's stage
+    * jobs inherit it). Listener events arrive in posting order, so once a
+    * marker job's start has been seen every earlier job has been counted.
+    */
+  private def jobsByPhase(body: (String => Unit) => Unit): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body(sc.setLocalProperty(key, _))
+      sc.setLocalProperty(key, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq.filter(_ != "marker").groupBy(identity)
+      .map { case (k, v) => k -> v.size }
   }
 
   test("e2e: ingest -> silver -> gold with dedup and idempotency") {
@@ -477,5 +515,129 @@ class PipelineSpec extends SparkSpec {
       "transactions*.csv", "bronze", "transactions", "CSV")).isEmpty)
     assert(cat.read("admin", "ingestion_logs")
       .where($"status" === "ABANDONED").count() == 2L)
+  }
+
+  test("catalog schema contract: a read after this catalog's own write " +
+      "runs no schema-inference job and sees the written schema") {
+    import spark.implicits._
+    val cat = new Catalog(spark, Files.createTempDirectory("graft_schema").toString)
+    def readJobs(table: String): Int =
+      jobsByPhase { label => label("read"); cat.read("silver", table); () }
+        .getOrElse("read", 0)
+    cat.overwrite(Seq((1L, "a")).toDF("id", "v"), "silver", "known")
+    assert(readJobs("known") == 0)
+    // the probe sees inference: a plain parquet read of the same path runs it
+    assert(jobsByPhase { label =>
+      label("read"); spark.read.parquet(cat.path("silver", "known")); ()
+    }.getOrElse("read", 0) >= 1)
+    // an overwrite with an added column replaces the known schema
+    cat.overwrite(Seq((2L, "b", 2.5)).toDF("id", "v", "extra"), "silver", "known")
+    assert(readJobs("known") == 0)
+    val wider = cat.read("silver", "known")
+    assert(wider.columns.toSeq == Seq("id", "v", "extra"))
+    assert(wider.select("extra").as[Double].collect().toSeq == Seq(2.5))
+    // same-schema appends keep the known schema
+    cat.append(Seq((3L, "c", 3.5)).toDF("id", "v", "extra"), "silver", "known")
+    assert(readJobs("known") == 0)
+    assert(cat.read("silver", "known").count() == 2)
+    // the visible change: load_id reads as the BIGINT it was written with,
+    // where partition-value inference reads small ids as INT
+    cat.appendBatched(Seq((1L, "x"), (2L, "y")).toDF("load_id", "v"),
+      "silver", "batched")
+    assert(readJobs("batched") == 0)
+    val batched = cat.read("silver", "batched")
+    assert(batched.columns.toSeq == Seq("v", "load_id"))
+    assert(batched.schema("load_id").dataType == LongType)
+    assert(spark.read.parquet(cat.path("silver", "batched"))
+      .schema("load_id").dataType == IntegerType)
+    // dropSchema forgets the schemas of the dropped tables
+    cat.dropSchema("silver")
+    cat.append(Seq(("z", 9L)).toDF("v", "other"), "silver", "known")
+    assert(cat.read("silver", "known").columns.toSeq == Seq("v", "other"))
+  }
+
+  test("catalog schema contract: a table another Catalog instance appended " +
+      "with a different schema is never read with the stale schema") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_schema2").toString
+    val a = new Catalog(spark, root)
+    val b = new Catalog(spark, root)
+    a.overwrite(Seq((1L, "x")).toDF("id", "v"), "silver", "shared")
+    b.append(Seq((2L, "y", 3.0)).toDF("id", "v", "w"), "silver", "shared")
+    // the schemas differ, so the table's files mix two schemas: A's read
+    // infers, exactly as a plain parquet read of the path does
+    val inferred = jobsByPhase { label =>
+      label("read"); a.read("silver", "shared"); ()
+    }.getOrElse("read", 0)
+    assert(inferred >= 1, "read used a stored schema after a differing append")
+    assert(a.read("silver", "shared").schema ==
+      spark.read.parquet(a.path("silver", "shared")).schema)
+    assert(a.read("silver", "shared").count() == 2)
+    // another instance's overwrite with a new column: A reads that schema
+    b.overwrite(Seq((3L, "z", 4.0)).toDF("id", "v", "w"), "silver", "shared")
+    val after = a.read("silver", "shared")
+    assert(after.columns.toSeq == Seq("id", "v", "w"))
+    assert(after.select("w").as[Double].collect().toSeq == Seq(4.0))
+  }
+
+  test("catalog schema contract: concurrent overwrites from threads") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val cat = new Catalog(spark, Files.createTempDirectory("graft_schema3").toString)
+    val pool = Executors.newFixedThreadPool(3)
+    try {
+      val done = (0 until 3).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 3).foreach { round =>
+            cat.overwrite((1 to 5).map(i => (i.toLong, s"t$t")).toDF("id", "v")
+              .withColumn(s"c$round", lit(round)), "gold", s"t$t")
+          }
+        })
+      }
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    (0 until 3).foreach { t =>
+      assert(jobsByPhase { label =>
+        label("read"); cat.read("gold", s"t$t"); ()
+      }.getOrElse("read", 0) == 0)
+      val r = cat.read("gold", s"t$t")
+      assert(r.columns.toSeq == Seq("id", "v", "c2"))
+      assert(r.where($"v" === s"t$t" && $"c2" === 2).count() == 5)
+    }
+  }
+
+  test("job-count tripwire over the e2e fixture: jobs per loaded file, " +
+      "per Silver batch and per dailySummary call") {
+    val land = Files.createTempDirectory("graft_jobs_land").toString
+    val cat = new Catalog(spark, Files.createTempDirectory("graft_jobs_wh").toString)
+    seedFixtures(land)
+    val ing = new Ingestion(cat)
+    val sil = new SilverTransforms(cat)
+    var files = 0
+    var batches = 0
+    val jobs = jobsByPhase { label =>
+      label("ingest")
+      files = ing.ingestAll(configFor(land)).values.map(_.size).sum
+      label("silver")
+      batches = sil.runAll().values.map(_.size).sum
+      label("summary")
+      def s(t: String) = cat.read("silver", t)
+      Gold.dailySummary("2026-02-19", s("daily_spend"), s("steps_hourly"),
+        s("sleep_scores"), s("manual_logs"), s("flight_logs"),
+        s("timeline_segments"))
+      ()
+    }
+    assert(files == 7 && batches == 7, s"$files files, $batches batches")
+    val perFile = jobs.getOrElse("ingest", 0).toDouble / files
+    val perBatch = jobs.getOrElse("silver", 0).toDouble / batches
+    val summary = jobs.getOrElse("summary", 0)
+    info(f"jobs: $perFile%.2f per loaded file, $perBatch%.2f per Silver " +
+      f"batch, $summary per dailySummary call")
+    // this fixture runs 4.86, 6.86 and 2; inferring every read's schema,
+    // reading a ledger per decision and a summary of seven collects ran
+    // 12.86, 16 and 23
+    assert(perFile <= 6.0, f"$perFile%.2f jobs per loaded file")
+    assert(perBatch <= 9.0, f"$perBatch%.2f jobs per Silver batch")
+    assert(summary <= 3, s"$summary jobs per dailySummary call")
   }
 }
