@@ -1,9 +1,12 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** Path-based medallion warehouse: `schema.table` → `<root>/<schema>/<table>`
@@ -36,31 +39,37 @@ final class Catalog(val spark: SparkSession, val root: String) {
     fs(p).exists(new HPath(p))
   }
 
-  /** Reads a table. A table whose last write went through a Catalog in
-    * this JVM is read with the schema that write produced, so the read
-    * runs no schema-inference job (Spark runs one per parquet read without
-    * a schema). Any other table infers its schema from its files, as
-    * `spark.read.parquet` does.
+  /** Reads a table. A table whose last write went through a Catalog is
+    * read with the schema that write produced, so the read runs no
+    * schema-inference job (Spark runs one per parquet read without a
+    * schema). Any other table infers its schema from its files, as
+    * `spark.read.parquet` does; an empty table directory then fails as
+    * that read does.
     *
-    * The schema is kept per table path, shared by every Catalog instance:
-    * `overwrite` replaces it; `append`, `appendBatched` and
-    * `overwriteBatch` keep it when the written schema matches it (or
-    * record it when they create the table) and drop it when the schema
-    * differs, so a table of mixed file schemas infers again. Single-writer
-    * assumption, the same one the ledgers make: every write to a catalog
-    * root goes through a Catalog in this driver JVM, and one table has one
-    * writer at a time (different tables may be written from different
-    * threads). A write from another process or around the Catalog is not
-    * seen, and a read after it would use the schema this JVM recorded.
+    * The schema is stored with the warehouse, one JSON file per table at
+    * `<root>/_schemas/<schema>/<table>.json`, so it holds for every
+    * Catalog instance and every process over the root, a restarted one
+    * included. `overwrite` replaces it; `append`, `appendBatched` and
+    * `overwriteBatch` keep it when the written schema matches and drop it
+    * when the schema differs, so a table of mixed file schemas infers
+    * again. A write to a table without a stored schema stores one when
+    * the table is new or its current (inferred) schema matches the
+    * written one. Single-writer assumption, the same one the ledgers
+    * make: every write to a catalog root goes through a Catalog, and one
+    * table has one writer at a time (different tables may be written from
+    * different threads). A write around the Catalog is not seen, and a
+    * read after it would use the stored schema.
     *
-    * Visible difference from inference: the `load_id` partition column
-    * reads as the type it was written with (BIGINT for every pipeline
-    * table), where partition-value inference reads small ids as INT.
+    * `load_id` reads as BIGINT on both paths, the type every pipeline
+    * table writes it with: partition-value inference reads small ids as
+    * INT, so an inferred `load_id` of type INT is cast back.
     */
   def read(schema: String, table: String): DataFrame = {
     val p = path(schema, table)
-    Option(Catalog.schemas.get(key(p)))
-      .fold(spark.read)(spark.read.schema(_)).parquet(p)
+    stored(schema, table) match {
+      case Some(s) => spark.read.schema(s).parquet(p)
+      case None => Catalog.loadIdAsLong(spark.read.parquet(p))
+    }
   }
 
   /** Append rows (ledgers, Bronze landings). */
@@ -104,25 +113,56 @@ final class Catalog(val spark: SparkSession, val root: String) {
       .parquet(p.toString).select().rdd.count()
   }
 
-  private def key(p: String): String = fs(p).makeQualified(new HPath(p)).toString
+  /** Where the read schema of `schema.table` is stored: beside the
+    * schema directories, not in the table's, so the table's own listing
+    * (and anything counting its files) is unchanged.
+    */
+  private def schemaFile(schema: String, table: String): HPath =
+    new HPath(s"$root/_schemas/$schema/$table.json")
 
-  /** Runs `write` on the table's path and records the schema a read of
-    * the table returns after it (see [[read]]). The entry is dropped while
-    * the write runs, so a concurrent read infers rather than pairing the
-    * old schema with new files, and stays dropped if the write fails.
+  /** The stored read schema of a table, if any: one small file read on
+    * the driver.
+    */
+  private def stored(schema: String, table: String): Option[StructType] = {
+    val f = schemaFile(schema, table)
+    try {
+      val in = fs(f.toString).open(f)
+      try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8))
+        .asInstanceOf[StructType])
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
+  }
+
+  /** Runs `write` on the table's path and stores the schema a read of the
+    * table returns after it (see [[read]]). The stored schema is deleted
+    * while the write runs, so a concurrent read infers rather than pairing
+    * the old schema with new files, and stays deleted if the write fails.
+    * The new one is written to a temporary file and renamed into place, so
+    * a reader sees all of it or none.
     */
   private def recorded(df: DataFrame, schema: String, table: String,
       partitioned: Boolean, replaces: Boolean)(write: String => Unit): Unit = {
     val p = path(schema, table)
-    val k = key(p)
     val written = Catalog.asRead(df.schema, partitioned)
-    val keep = replaces || (Catalog.schemas.get(k) match {
-      case null => !fs(p).exists(new HPath(p))
-      case known => known == written
+    val keep = replaces || (stored(schema, table) match {
+      case Some(known) => known == written
+      case None =>
+        !fs(p).exists(new HPath(p)) ||
+          (try Catalog.asRead(read(schema, table).schema, partitioned) == written
+          catch { case _: AnalysisException => false }) // no file to infer from
     })
-    Catalog.schemas.remove(k)
+    val f = schemaFile(schema, table)
+    val hfs = fs(f.toString)
+    hfs.delete(f, false)
     write(p)
-    if (keep) Catalog.schemas.put(k, written)
+    if (keep) {
+      val tmp = new HPath(f.getParent, s".${f.getName}.${UUID.randomUUID()}")
+      val out = hfs.create(tmp, true)
+      try out.write(written.json.getBytes(UTF_8)) finally out.close()
+      // a failed rename means another writer's file is in place: leave
+      // the table to inference
+      if (!hfs.rename(tmp, f)) { hfs.delete(tmp, false); hfs.delete(f, false) }
+    }
   }
 
   /** Bucketed managed table (Hive-layout parquet in the session warehouse):
@@ -214,18 +254,13 @@ final class Catalog(val spark: SparkSession, val root: String) {
   def dropSchema(schema: String): Unit = {
     val p = new HPath(s"$root/$schema")
     val hfs = fs(p.toString)
-    if (hfs.exists(p)) { hfs.delete(p, true); () }
-    val prefix = key(p.toString) + "/"
-    Catalog.schemas.keySet.removeIf(_.startsWith(prefix))
+    hfs.delete(p, true)
+    hfs.delete(new HPath(s"$root/_schemas/$schema"), true)
+    ()
   }
 }
 
 object Catalog {
-
-  /** Qualified table path → the schema a read of that table returns after
-    * its last write through a Catalog (see [[Catalog.read]]).
-    */
-  private val schemas = new ConcurrentHashMap[String, StructType]()
 
   /** The schema Spark reads back for a write of `written`: parquet reads
     * every column as nullable, and a partitioned write's `load_id` comes
@@ -236,4 +271,10 @@ object Catalog {
       written.fields.partition(f => partitioned && f.name == "load_id")
     StructType((data ++ part).map(_.copy(nullable = true)))
   }
+
+  /** Casts an inferred INT `load_id` back to the BIGINT it was written as. */
+  private def loadIdAsLong(df: DataFrame): DataFrame =
+    if (df.schema.exists(f => f.name == "load_id" && f.dataType == IntegerType))
+      df.withColumn("load_id", col("load_id").cast(LongType))
+    else df
 }

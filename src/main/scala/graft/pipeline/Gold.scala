@@ -1,8 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -162,10 +160,11 @@ object Gold {
     * for a date — scalar metrics + per-section row arrays.
     *
     * One plan and one collect: a tagged union of the two totals (summed by
-    * Spark) and the five row sections (each row already a JSON object).
-    * The few rows of a date are sorted on the driver the way Spark's
-    * `orderBy` sorts them: nulls first, strings by their UTF-8 bytes, and
-    * ties in scan order.
+    * Spark) and the five row sections (each row already a JSON object),
+    * sorted by (section, sort key) in one partition. No shuffle: the few
+    * rows of a date meet in one task, and its sort is Spark's ascending
+    * order (nulls first) and stable, so ties keep scan order as the
+    * sections' own `orderBy` did.
     */
   def dailySummary(date: String, dailySpend: DataFrame, stepsHourly: DataFrame,
       sleepScores: DataFrame, manualLogs: DataFrame, flightLogs: DataFrame,
@@ -207,15 +206,12 @@ object Gold {
         $"visit_latitude".as("visit_lat"), $"visit_longitude".as("visit_lon"),
         $"start_latitude".as("start_lat"), $"start_longitude".as("start_lon"),
         $"end_latitude".as("end_lat"), $"end_longitude".as("end_lon")))
+      .toDF("tag", "skey", "nkey", "json", "spent", "steps")
+      .coalesce(1).sortWithinPartitions($"tag", $"skey", $"nkey")
       .collect()
 
-    // Spark's ascending order: nulls first, strings by unsigned UTF-8 bytes
-    implicit val bytes: Ordering[Array[Byte]] =
-      java.util.Arrays.compareUnsigned(_, _)
-    def key(r: Row) = (Option(r.getString(1)).map(_.getBytes(UTF_8)),
-      if (r.isNullAt(2)) None else Some(r.getLong(2)))
     def json(tag: Int): String = rows.filter(_.getInt(0) == tag)
-      .sortBy(key).map(_.getString(3)).mkString("[", ",", "]")
+      .map(_.getString(3)).mkString("[", ",", "]")
     val total = rows.find(_.getInt(0) == 0).get
 
     s"""{"DATE":"$date","TOTAL_SPENT":${total.getDouble(4)},"TOTAL_STEPS":${total.getLong(5)},

@@ -578,6 +578,56 @@ class PipelineSpec extends SparkSpec {
     val after = a.read("silver", "shared")
     assert(after.columns.toSeq == Seq("id", "v", "w"))
     assert(after.select("w").as[Double].collect().toSeq == Seq(4.0))
+    // the schema is stored with the warehouse: a Catalog created later
+    // over the same root, as a restarted or separate process would, reads
+    // without inference
+    val fresh = new Catalog(spark, root)
+    assert(jobsByPhase { label =>
+      label("read"); fresh.read("silver", "shared"); ()
+    }.getOrElse("read", 0) == 0)
+    assert(fresh.read("silver", "shared").schema == after.schema)
+  }
+
+  test("catalog schema contract: a table written around the catalog " +
+      "infers, reads load_id as BIGINT, and stores its schema on the next " +
+      "matching write") {
+    import spark.implicits._
+    val cat = new Catalog(spark, Files.createTempDirectory("graft_schema4").toString)
+    def readJobs(table: String): Int =
+      jobsByPhase { label => label("read"); cat.read("silver", table); () }
+        .getOrElse("read", 0)
+    // written by plain Spark, as a warehouse from before the catalog
+    // stored schemas was
+    Seq(("x", 1L), ("y", 2L)).toDF("v", "load_id")
+      .write.partitionBy("load_id").parquet(cat.path("silver", "legacy"))
+    assert(readJobs("legacy") >= 1)
+    val inferred = cat.read("silver", "legacy")
+    assert(inferred.columns.toSeq == Seq("v", "load_id"))
+    assert(inferred.schema("load_id").dataType == LongType)
+    assert(inferred.where($"load_id" === 2L).select("v").as[String]
+      .collect().toSeq == Seq("y"))
+    // a write whose schema matches the inferred one stores it
+    cat.appendBatched(Seq(("z", 3L)).toDF("v", "load_id"), "silver", "legacy")
+    assert(readJobs("legacy") == 0)
+    assert(cat.read("silver", "legacy").schema == inferred.schema)
+    assert(cat.read("silver", "legacy").count() == 3)
+    // an empty batch writes no data file: the stored schema still reads
+    // it, where inference has no file to infer from
+    cat.appendBatched(Seq.empty[(String, Long)].toDF("v", "load_id"),
+      "silver", "empty")
+    assert(cat.read("silver", "empty").count() == 0)
+    assert(cat.read("silver", "empty").schema("load_id").dataType == LongType)
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(cat.path("silver", "empty")))
+    // a table written around the catalog with no data file has nothing to
+    // infer: a write to it still lands, and the one after stores the schema
+    Seq.empty[(String, Long)].toDF("v", "load_id")
+      .write.partitionBy("load_id").parquet(cat.path("silver", "legacy_empty"))
+    cat.appendBatched(Seq(("w", 4L)).toDF("v", "load_id"), "silver", "legacy_empty")
+    assert(cat.read("silver", "legacy_empty").count() == 1)
+    cat.appendBatched(Seq(("u", 5L)).toDF("v", "load_id"), "silver", "legacy_empty")
+    assert(readJobs("legacy_empty") == 0)
+    assert(cat.read("silver", "legacy_empty").count() == 2)
   }
 
   test("catalog schema contract: concurrent overwrites from threads") {
