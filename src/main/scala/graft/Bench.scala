@@ -112,6 +112,206 @@ object Bench {
       .find(_.length <= maxLen).getOrElse(line(0))
   }
 
+  /** The tripwire baseline: the per-query times, the plan fingerprints
+    * and the canary sequence of the committed seed run.
+    */
+  private[graft] final case class Baseline(times: Map[String, Double],
+    plans: Map[String, String], canaries: Seq[Double])
+
+  /** The bench's only baseline: a committed full-run record. Refresh it
+    * by committing a new seed (a full run's `bench_queries.json`).
+    */
+  private[graft] val SeedPath =
+    "tools/bench_history/bench_queries_driver_seed.json"
+
+  /** Loads the seed as the baseline of a run at `sfDir`. The seed is only
+    * trusted when its recorded sf matches this run's, compared by
+    * BASENAME (sf0.1 vs sf0.1), not absolute path, so a seed recorded on
+    * another machine's fixture layout still matches: per-query times at a
+    * different scale factor are ~10x off across the board and every entry
+    * would flag as a bogus regression. A rejected seed logs why and loads
+    * empty. Every section parses failure-isolated: a truncated seed
+    * degrades that section to empty, never aborts the run.
+    */
+  private[graft] def baseline(sfDir: String): Baseline = {
+    def sfToken(p: String): String = new java.io.File(p).getName
+    val text: Option[String] =
+      try {
+        val txt = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(SeedPath)),
+          java.nio.charset.StandardCharsets.UTF_8)
+        val recorded = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
+          .map(_.group(1))
+        if (recorded.exists(r => sfToken(r) == sfToken(sfDir))) Some(txt)
+        else {
+          System.err.println(s"[bench] baseline $SeedPath rejected: " +
+            s"recorded sf ${recorded.getOrElse("<none>")} does not " +
+            s"match $sfDir")
+          None
+        }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    def parsed[A](empty: A)(f: String => A): A =
+      text.map { txt =>
+        try f(txt)
+        catch { case scala.util.control.NonFatal(_) => empty }
+      }.getOrElse(empty)
+    Baseline(
+      times = parsed(Map.empty[String, Double]) { txt =>
+        val parts = txt.split("\"queries\":\\{", 2)
+        if (parts.length < 2) Map.empty[String, Double]
+        else "\"(q[^\"]+)\":([0-9.]+)".r
+          .findAllMatchIn(parts(1).takeWhile(_ != '}'))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      },
+      // absent in pre-r11 baselines → every plan compares "unknown"
+      plans = parsed(Map.empty[String, String]) { txt =>
+        val parts = txt.split("\"plans\":\\{", 2)
+        if (parts.length < 2) Map.empty[String, String]
+        else "\"(q[^\"]+)\":\"([0-9a-f]+|err)\"".r
+          .findAllMatchIn(parts(1).takeWhile(_ != '}'))
+          .map(m => m.group(1) -> m.group(2)).toMap
+      },
+      canaries = parsed(Seq.empty[Double]) { txt =>
+        val parts = txt.split("\"canaries\":\\[", 2)
+        // all-or-nothing: baseline canaries are consumed POSITIONALLY
+        // (same-segment probes are paired by index), so silently dropping
+        // one malformed entry would shift every later index. A throw here
+        // degrades the whole seq to empty — positionally safe.
+        if (parts.length < 2) Seq.empty[Double]
+        else parts(1).takeWhile(_ != ']').split(',').toSeq
+          .map(_.trim.toDouble)
+      })
+  }
+
+  /** The same-window DuckDB pair's fixed window: every full run times
+    * exactly these oracles in DuckDB, so its pair compares across runs and
+    * hosts. Picked from one DuckDB run of every oracle at sf0.1 (4 cores,
+    * 60 s cap per query): from each of the 12 query modules, its first
+    * eight oracles in numeric order that ran within 5 s, GoldQueries' all
+    * four. 92 queries, 35.3 s of DuckDB in that run, inside the 120 s
+    * budget. A query joins or leaves by an edit of this list; keep it
+    * within the budget and keep every module in it (BenchSpec checks).
+    *
+    * Known stalls it leaves out, with their DuckDB time at sf0.1:
+    *  - among the modules' first eight, over 5 s: q41_embedding_near_dup
+    *    5.3 s, q145_semantic_leakage 9.9 s, q49_dup_clusters 23.1 s,
+    *    q61_lsh_near_dup 42.2 s and q56_kmeans_codebook 52.2 s, each a
+    *    large share of the budget alone;
+    *  - past the 60 s cap, so a single one would take half the budget:
+    *    q45_ivf_ann, q74_semdedup (258.6 s uncapped in an earlier
+    *    full-suite run, past 2x the budget), q103_hard_negatives,
+    *    q109_ann_recall and the kNN-graph family, which rebuilds its
+    *    neighbour graph per query: q149_knn_graph, q151_semantic_clusters,
+    *    q153_inbatch_collisions, q171_pagerank, q199_triangles, q205_hits,
+    *    q206_knn_classifier, q214_kcore, q215_mrr_eval, q220_bfs_hops,
+    *    q221_ndcg_eval, q233_assortativity, q234_negative_sampling,
+    *    q236_two_hop, q242_clustering_coef, q249_cheapest_path,
+    *    q250_conductance, q273_modularity, q291_harmonic_seeds and
+    *    q298_knn_hubness.
+    */
+  private[graft] val oracleWindow: Seq[String] = Seq(
+    "q01_group_agg", "q02_filter_project", "q03_join_agg",
+    "q04_dedup_latest", "q05_running_total", "q06_topk", "q07_pivot_sumcase",
+    "q08_listagg", "q11_full_outer_date_shift", "q12_left_anti",
+    "q13_zone_counts", "q14_two_level_rollup", "q15_date_extract",
+    "q16_string_clean", "q17_distinct", "q18_semi_join", "q21_cost_report",
+    "q22_tax_report", "q23_transport_mode", "q24_daily_summary",
+    "q25_rollup", "q26_sessionize", "q27_asof_join", "q28_ranking",
+    "q29_length_percentiles", "q30_token_stats", "q31_quality_score",
+    "q32_lang_id", "q33_fingerprint", "q34_dedup_exact", "q35_ngram_jaccard",
+    "q36_minhash_lsh", "q37_simhash", "q38_binary_meta", "q39_bearing",
+    "q40_cosine_topk", "q42_lsh_buckets", "q43_hourly_window",
+    "q44_bpe_tokens", "q46_near_dup_keep", "q47_label_centroids",
+    "q48_vocab_topk", "q50_lang_trigram", "q51_chunk_sample",
+    "q52_cube_profile", "q53_range_window", "q54_stream_hourly",
+    "q55_pivot_api", "q57_bpe_merges", "q58_byte_features",
+    "q59_simhash_hamming", "q60_bpe_apply", "q62_curation", "q63_hash_split",
+    "q65_decontam", "q70_passage_dedup", "q72_hybrid_search",
+    "q76_span_coverage", "q77_rrf_fusion", "q79_novelty",
+    "q80_grouping_sets", "q81_int8_quant", "q83_bm25", "q84_containment",
+    "q93_embed_drift", "q98_heavy_hitters", "q99_stratified_sample",
+    "q101_histogram", "q105_length_deciles", "q106_simpson",
+    "q107_chi2_drift", "q148_mmr_diverse", "q160_frame_sample",
+    "q164_gopher_rules", "q165_incremental_agg", "q166_salted_join",
+    "q167_priority_sample", "q168_rolling_distinct", "q169_setops",
+    "q170_unpivot", "q172_asof_forward", "q197_symspell", "q198_auc_rank",
+    "q200_ols_trend", "q201_grid_join", "q202_cusum_shift",
+    "q203_quantile_norm", "q204_lift_rules", "q207_weighted_median",
+    "q223_benford", "q226_exact_median", "q301_image_decode")
+
+  /** The outer hang guard on `tools/oracle_bench.py`. The script
+    * interrupts its own in-flight query at its 270 s deadline and still
+    * prints its summary; this kill is only for a hung interpreter, so it
+    * leaves generous headroom.
+    */
+  private val OracleWatchdogS = 600L
+
+  /** The same-window DuckDB engine pair: the bench and its DuckDB oracle
+    * measured on the same machine in the same window, over the fixed
+    * [[oracleWindow]]. The Spark side sums its own just-measured times over
+    * exactly the queries DuckDB timed; queries whose Spark run errored
+    * (fingerprint "err") are excluded from both sides, since summing a
+    * time-to-failure against a DuckDB success would skew the ratio. Any
+    * failure (no python3 or duckdb, the deadline, no valid query) returns
+    * an `oracle_pair` line with an `error` field saying why.
+    */
+  private def oraclePair(spark: SparkSession, sfDir: String,
+      sparkTimes: Map[String, Double], erred: Set[String]): String = {
+    val window = oracleWindow.size
+    def error(reason: String): String =
+      s"""{"metric":"oracle_pair","error":${Verify.jsonString(reason)},""" +
+        s""""window":$window,"sf":"$sfDir"}"""
+    try {
+      val odir = TempDirs.createPath(spark, "bench_oracle")
+      Verify.writeOracleSql(odir,
+        SparkEntry.oracleSql.filter { case (k, _) => oracleWindow.contains(k) })
+      val pb = new ProcessBuilder("python3", "tools/oracle_bench.py",
+        sfDir, odir.toString)
+      pb.redirectErrorStream(true)
+      val proc = pb.start()
+      val watchdog = new Thread(() => {
+        if (!proc.waitFor(OracleWatchdogS,
+            java.util.concurrent.TimeUnit.SECONDS)) {
+          proc.destroyForcibly(); ()
+        }
+      })
+      watchdog.setDaemon(true)
+      watchdog.start()
+      val out = new String(proc.getInputStream.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val exit = proc.waitFor()
+      val lines = out.linesIterator.toSeq
+      lines.reverseIterator.find(_.contains("\"metric\": \"oracle_total\"")) match {
+        case None =>
+          error(s"oracle_bench.py exited $exit without a summary: " +
+            lines.lastOption.getOrElse(""))
+        case Some(summary) =>
+          "\"error\": \"([^\"]*)\"".r.findFirstMatchIn(summary) match {
+            case Some(m) => error(m.group(1))
+            case None =>
+              val duckTimes: Map[String, Double] =
+                "\"(q[^\"]+)\": ([0-9.]+)".r.findAllMatchIn(
+                  "\"times\": \\{([^}]*)\\}".r.findFirstMatchIn(summary)
+                    .map(_.group(1)).getOrElse(""))
+                  .map(m => m.group(1) -> m.group(2).toDouble).toMap
+              val valid = (duckTimes.keySet -- erred).toSeq
+              val duckSub = valid.map(duckTimes).sum
+              if (duckSub <= 0) error("no window query ran on both engines")
+              else {
+                val sparkSub = valid.map(sparkTimes).sum
+                s"""{"metric":"oracle_pair",""" +
+                  s""""spark_sec":${f3num(sparkSub)},""" +
+                  s""""duckdb_sec":${f3num(duckSub)},"n":${valid.size},""" +
+                  s""""excluded":${window - valid.size},"window":$window,""" +
+                  s""""ratio":${f3num(sparkSub / duckSub)},"sf":"$sfDir"}"""
+              }
+          }
+      }
+    } catch {
+      case scala.util.control.NonFatal(e) => error(e.toString)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -138,18 +338,11 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_MEMDIAG=1: accumulate task-level spill/peak-memory
-    // counters (the UI is disabled in bench runs, so this is the only
-    // window into them) and print one extra JSON line at the end — the
-    // instrumentation behind the constrained-heap soak (r14 judge item
-    // 3: prove the pairwise families SPILL instead of OOM when the heap
-    // halves). Zero cost when unset; listener callbacks are counter adds.
-    val memDiag: Option[MemDiagListener] =
-      if (sys.env.get("SPARK_GRAFT_MEMDIAG").contains("1")) {
-        val l = new MemDiagListener
-        spark.sparkContext.addSparkListener(l)
-        Some(l)
-      } else None
+    // task-level spill/peak-memory totals for the full record (the UI is
+    // disabled in bench runs, so this is the only window into them);
+    // the listener's callbacks are counter adds
+    val memDiag = new MemDiagListener
+    spark.sparkContext.addSparkListener(memDiag)
     // warm the session (executor threads, codegen, parquet footers) so the
     // first timed query doesn't absorb one-time startup cost; every table
     // is touched once, no query work is precomputed
@@ -241,73 +434,13 @@ object Bench {
     val ioCanaries = scala.collection.mutable.ArrayBuffer.empty[Double]
     val calibStart = calibrate()
     ioCanaries += ioCalibrate()
-    // Regression tripwire: bench_queries.json in the working dir still
-    // holds the PREVIOUS round's per-query times when this run starts
-    // (it's committed each round; this run overwrites it at the end).
-    // Any query >2x slower AND >0.5s absolute lands in a "regressions"
-    // key of the artifact — r8's q289 (1.77s -> 7.53s with zero code
-    // delta) would have been flagged automatically. Cross-read against
-    // the interleaved canaries: each flagged entry carries the canary
-    // nearest in time and a host/code attribution.
-    // The baseline is only trusted when its recorded sf matches this
-    // run's — compared by BASENAME (sf0.1 vs sf0.1), not absolute path,
-    // so a committed seed recorded on another machine's fixture layout
-    // still matches: per-query times at a different scale factor are
-    // ~10x off across the board and every entry would flag as a bogus
-    // regression. The working-dir file is gitignored, so a FRESH CLONE
-    // of the repo has no baseline at all (no tripwire, oracle window
-    // back to offset 0) — the committed seed under tools/bench_history
-    // is the fallback that survives a re-clone. Selection picks the
-    // first TRUSTED candidate (readable AND sf-matching), so a stale
-    // working-dir file from a different-sf smoke run cannot shadow a
-    // valid seed; a rejected candidate logs why. Every parse below is
-    // failure-isolated: a truncated baseline (a previous bench killed
-    // mid-write) degrades that section to empty, never aborts the run.
-    def sfToken(p: String): String =
-      new java.io.File(p).getName
-    val baselineText: Option[String] =
-      Seq("bench_queries.json",
-        "tools/bench_history/bench_queries_driver_seed.json")
-        .view.flatMap { p =>
-          try {
-            val txt = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(p)),
-              java.nio.charset.StandardCharsets.UTF_8)
-            val recorded = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-              .map(_.group(1))
-            if (recorded.exists(r => sfToken(r) == sfToken(sfDir)))
-              Some(txt)
-            else {
-              System.err.println(s"[bench] baseline $p rejected: " +
-                s"recorded sf ${recorded.getOrElse("<none>")} does not " +
-                s"match $sfDir")
-              None
-            }
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }.headOption
-    def parsed[A](empty: A)(f: String => A): A =
-      baselineText.map { txt =>
-        try f(txt)
-        catch { case scala.util.control.NonFatal(_) => empty }
-      }.getOrElse(empty)
-    val prevTimes: Map[String, Double] =
-      parsed(Map.empty[String, Double]) { txt =>
-        val parts = txt.split("\"queries\":\\{", 2)
-        if (parts.length < 2) Map.empty[String, Double]
-        else "\"(q[^\"]+)\":([0-9.]+)".r
-          .findAllMatchIn(parts(1).takeWhile(_ != '}'))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    // the baseline's per-query plan fingerprints (absent in pre-r11
-    // baselines → every plan compares "unknown")
-    val prevPlans: Map[String, String] =
-      parsed(Map.empty[String, String]) { txt =>
-        val parts = txt.split("\"plans\":\\{", 2)
-        if (parts.length < 2) Map.empty[String, String]
-        else "\"(q[^\"]+)\":\"([0-9a-f]+|err)\"".r
-          .findAllMatchIn(parts(1).takeWhile(_ != '}'))
-          .map(m => m.group(1) -> m.group(2)).toMap
-      }
+    // Regression tripwire: any query >2x slower AND >0.5s absolute than
+    // in the committed seed lands in a "regressions" key of the artifact —
+    // r8's q289 (1.77s -> 7.53s with zero code delta) would have been
+    // flagged automatically. Cross-read against the interleaved canaries:
+    // each flagged entry carries the canary nearest in time and a
+    // host/code attribution.
+    val prev = baseline(sfDir)
     val trainersFirst = Seq("q56_kmeans_codebook", "q57_bpe_merges")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     def qnum(name: String): Int = name.drop(1).takeWhile(_.isDigit).toInt
@@ -374,23 +507,9 @@ object Bench {
       // segment index and resolve after the end canary lands)
       (name, t, i, ph, trivial)
     }
-    // compact total-only line LAST: the driver captures the TAIL of the
-    // output, so truncation removes the head — BENCH_r06 shipped
-    // "parsed": null because the compact line printed first fell off the
-    // front of the window while the ~10 KB per-query line was cut
-    // mid-JSON. With the short guaranteed-parsable record printed after
-    // the detail it always survives tail capture; the full per-query map
-    // additionally lands in bench_queries.json so no timing is ever lost
-    // to line truncation.
     val calibEnd = calibrate()
     canaries += calibEnd
     ioCanaries += ioCalibrate()
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val plans = results.map { case (k, _, _, ph, _) =>
-      s"\"" + k + "\":\"" + ph + "\"" }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
     // canary k (k < last) was taken just before query k*CanaryEvery; the
     // end canary just after the last query — nearest-in-sequence stamp
     val canaryPos = canaries.indices.map(k =>
@@ -403,25 +522,13 @@ object Bench {
     // small-file I/O — was measured under ambient load, not a code change
     val quiet = canaries.min
     val ioQuiet = ioCanaries.min
-    // the BASELINE run's canary sequence: with 325+ queries the run is
-    // long enough for segment-local host drift that the run-local quiet
-    // minimum averages away, so a flagged query's nearest canary is also
-    // compared against the SAME segment's canary in the baseline run —
-    // the fixed probe slower than it was when the baseline was recorded
-    // is demonstrated ambient load at that point in the sequence
-    val prevCanaries: Seq[Double] =
-      parsed(Seq.empty[Double]) { txt =>
-        val parts = txt.split("\"canaries\":\\[", 2)
-        // all-or-nothing: baseline canaries are consumed POSITIONALLY
-        // (prevCanaries.lift(nearestIdx(i)) pairs same-segment probes), so
-        // silently dropping one malformed entry would shift every later
-        // index and misalign baseline-vs-current segment comparisons. A
-        // throw here is caught by parsed{} and degrades the whole seq to
-        // empty — positionally safe (r13 advice).
-        if (parts.length < 2) Seq.empty[Double]
-        else parts(1).takeWhile(_ != ']').split(',').toSeq
-          .map(_.trim.toDouble)
-      }
+    // the BASELINE run's canary sequence (prev.canaries): with 325+
+    // queries the run is long enough for segment-local host drift that the
+    // run-local quiet minimum averages away, so a flagged query's nearest
+    // canary is also compared against the SAME segment's canary in the
+    // baseline run — the fixed probe slower than it was when the baseline
+    // was recorded is demonstrated ambient load at that point in the
+    // sequence
     // three-way attribution, most-specific signal first: an inflated
     // canary on either axis — vs the run's quietest OR vs the baseline's
     // same-segment canary = ambient load ("host"); quiet canaries but a
@@ -432,24 +539,24 @@ object Bench {
     // and stays "code"; quiet canaries AND a changed/unknown plan = a
     // real candidate ("code")
     val preFlags = results.collect {
-      case (name, t, i, ph, trivial) if prevTimes.get(name)
+      case (name, t, i, ph, trivial) if prev.times.get(name)
           .exists(p => t > 2 * p && t - p > 0.5) =>
         val c = canaries(nearestIdx(i))
         val io = ioCanaries(nearestIdx(i))
-        val plan = prevPlans.get(name) match {
-          case Some(prev) if prev != "err" && ph != "err" =>
-            if (prev != ph) "changed"
+        val plan = prev.plans.get(name) match {
+          case Some(p) if p != "err" && ph != "err" =>
+            if (p != ph) "changed"
             else if (trivial) "trivial"
             else "same"
           case _ => "unknown"
         }
-        val segDrift = prevCanaries.lift(nearestIdx(i))
+        val segDrift = prev.canaries.lift(nearestIdx(i))
           .exists(p => p > 0 && c > 1.4 * p)
         val attrib =
           if (c > 1.4 * quiet || io > 1.4 * ioQuiet || segDrift) "host"
           else if (plan == "same") "jit"
           else "code"
-        Bench.Flag(name, prevTimes(name), t, c, io, plan, attrib)
+        Bench.Flag(name, prev.times(name), t, c, io, plan, attrib)
     }
     // ---- flagged-query REPLAY (r12 judge item 1): re-time each tripwire
     // flag ONCE in the same JVM, after the end canary, worst relative
@@ -493,198 +600,60 @@ object Bench {
         if (f.attrib == "code" && transient) "jit" else f.attrib
       f.copy(retime = rt, attrib = attrib)
     }
-    val regs = Bench.regJson(flagged)
-    // ---- SAFETY RECORDS BEFORE THE ORACLE PHASE: everything below this
-    // point (the DuckDB oracle pair) can take many minutes under a wide
-    // SPARK_GRAFT_ORACLE_BUDGET, and a driver-side timeout that kills the
-    // JVM mid-oracle would otherwise lose EVERY measurement of the run —
-    // nothing had printed yet. Print the full per-query line and a
-    // bounded compact record now; after the oracle completes, the pair
-    // and a final compact record print again so the tail capture still
-    // ends with one parseable JSON either way (a duplicate compact line
-    // is harmless — consumers read the last parseable record).
-    locally {
-      val f3p = (v: Double) =>
-        "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      val qsPre = results.map { case (k, v, _, _, _) =>
-        s"\"" + k + "\":" + f3p(v) }.mkString("{", ",", "}")
-      val totalPre = results.map(_._2).sum
-      val calibPre =
-        s""""calib_start":${f3p(calibStart)},"calib_end":${f3p(calibEnd)},""" +
-          s""""canaries":${canaries.map(f3p).mkString("[", ",", "]")},""" +
-          s""""io_canaries":${ioCanaries.map(f3p).mkString("[", ",", "]")},""" +
-          s""""regressions":$regs"""
-      println(s"""{"metric":"total","value":${f3p(totalPre)},"unit":"sec",$calibPre,"queries":$qsPre,"sf":"$sfDir"}""")
-      println(Bench.compactRecord(totalPre, calibStart, calibEnd,
-        canaries.toSeq, ioCanaries.toSeq, flagged, sfDir))
-    }
-    // ---- same-window DuckDB oracle pair (r11 judge item 4): the bench
-    // and its DuckDB oracle measured on the SAME machine in the SAME
-    // window. The oracle runs the oracles in bench (numeric) order under
-    // a hard time budget and reports which it covered WITH per-query
-    // times; the Spark side sums its OWN just-measured times over exactly
-    // that subset, so the published ratio is a bounded same-subset
-    // same-window engine pair. The covered window ROTATES: each full run
-    // starts where the previous round's window ended (offset persisted in
-    // bench_queries.json, env-overridable), so driver-window pairs
-    // accumulate over the whole suite — the heavy q7x+ training/dedup
-    // tail included — instead of re-measuring q01-q5x forever. Queries
-    // whose Spark run errored (plan fingerprint "err") are EXCLUDED from
-    // both sides (summing a time-to-failure against a DuckDB success
-    // would skew the ratio); the record carries how many were dropped.
-    // Runs AFTER the end canary and the replays (cannot pollute any
-    // timed window); any failure (no python3/duckdb, timeout, parse)
-    // degrades to absence — the bench record itself is never at risk.
-    // Full runs only.
-    val oracleOffset: Int = sys.env.get("SPARK_GRAFT_ORACLE_OFFSET")
-      .flatMap(_.toIntOption)
-      .orElse(baselineText.flatMap(txt =>
-        "\"oracle_offset\":([0-9]+)".r.findFirstMatchIn(txt)
-          .flatMap(_.group(1).toIntOption)))
-      .getOrElse(0)
-    val erred: Set[String] =
-      results.collect { case (n, _, _, "err", _) => n }.toSet
-    // r17: when the oracle replay RAN but covered nothing (the window's
-    // FIRST oracle alone blows the DuckDB budget — observed at offset 73,
-    // where q74_semdedup stalls >2x budget), the old nextOffset fallback
-    // re-tried the same offset forever and the rotation wedged: every
-    // subsequent full run (the driver's included) paired n=0. Track that
-    // case so nextOffset can step PAST the stalling oracle; genuine
-    // environment failures (no python3/duckdb, parse error) still leave
-    // the offset untouched.
-    var oracleRanEmpty = false
-    val oraclePair: Option[String] =
-      if (only.nonEmpty) None
-      else try {
-        val odir = TempDirs.createPath(spark, "bench_oracle")
-        def jq(s: String): String = "\"" + s.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case ch if ch < ' ' => f"\\u${ch.toInt}%04x"
-          case ch => ch.toString
-        } + "\""
-        val osql = SparkEntry.oracleSql
-          .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
-          .mkString("{", ",", "}")
-        java.nio.file.Files.write(odir.resolve("oracle_sql.json"),
-          osql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // Back to the steady-state 120 (r14 ADVICE): the one-round 900s
-        // widening served its purpose — r14's driver run covered offset
-        // 153 + n=230, wrapping the rotation past the tail, so every
-        // line now has a same-machine same-window DuckDB pair. The
-        // rotation keeps running at the normal budget as a drift
-        // tripwire; widen via SPARK_GRAFT_ORACLE_BUDGET when a full
-        // re-pair is ever wanted again.
-        val budget = sys.env.getOrElse("SPARK_GRAFT_ORACLE_BUDGET", "120")
-        val pb = new ProcessBuilder("python3", "tools/oracle_bench.py",
-          sfDir, odir.toString, "--budget", budget,
-          "--offset", oracleOffset.toString)
-        pb.redirectErrorStream(true)
-        val proc = pb.start()
-        // the python side self-bounds at 2x budget via con.interrupt()
-        // and still prints its summary; this outer kill is only for a
-        // genuinely hung interpreter, so give it generous headroom — a
-        // destroyForcibly loses every measurement of the window
-        val watchdog = new Thread(() => {
-          if (!proc.waitFor(budget.toDouble.toLong * 2 + 300,
-              java.util.concurrent.TimeUnit.SECONDS)) {
-            proc.destroyForcibly(); ()
-          }
-        })
-        watchdog.setDaemon(true)
-        watchdog.start()
-        val out = new String(proc.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        proc.waitFor()
-        out.linesIterator.toSeq.reverseIterator
-          .find(_.contains("\"metric\": \"oracle_total\""))
-          .flatMap { line =>
-            val duckTimes: Map[String, Double] =
-              "\"(q[^\"]+)\": ([0-9.]+)".r.findAllMatchIn(
-                "\"times\": \\{([^}]*)\\}".r.findFirstMatchIn(line)
-                  .map(_.group(1)).getOrElse(""))
-                .map(m => m.group(1) -> m.group(2).toDouble).toMap
-            val covered = duckTimes.keySet
-            val valid = covered -- erred
-            if (covered.isEmpty) oracleRanEmpty = true
-            if (valid.nonEmpty) {
-              val sparkSub = results
-                .filter { case (n, _, _, _, _) => valid.contains(n) }
-                .map(_._2).sum
-              val duckSub = valid.toSeq.map(duckTimes).sum
-              if (duckSub > 0)
-                Some(s"""{"metric":"oracle_pair",""" +
-                  s""""spark_sec":${f3(sparkSub)},""" +
-                  s""""duckdb_sec":${f3(duckSub)},"n":${valid.size},""" +
-                  s""""excluded":${(covered -- valid).size},""" +
-                  s""""offset":$oracleOffset,""" +
-                  s""""ratio":${f3(sparkSub / duckSub)},"sf":"$sfDir"}""")
-              else None
-            } else None
-          }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    // the NEXT full run's window starts where this one's ended; an
-    // empty-but-ran window steps one query forward so a single
-    // over-budget oracle can never wedge the rotation
-    val nextOffset: Int = oraclePair
-      .flatMap(o => "\"n\":([0-9]+)".r.findFirstMatchIn(o)
-        .map(m => oracleOffset + m.group(1).toInt +
-          "\"excluded\":([0-9]+)".r.findFirstMatchIn(o)
-            .map(_.group(1).toInt).getOrElse(0)))
-      .getOrElse(if (oracleRanEmpty) oracleOffset + 1 else oracleOffset)
-    val canaryArr = canaries.map(f3).mkString("[", ",", "]")
-    val ioArr = ioCanaries.map(f3).mkString("[", ",", "]")
-    val calib =
-      s""""calib_start":${f3(calibStart)},"calib_end":${f3(calibEnd)},""" +
-        s""""canaries":$canaryArr,"io_canaries":$ioArr,""" +
-        s""""regressions":$regs"""
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec",$calib,"queries":$qs,"sf":"$sfDir"}""")
-    // the same-window engine pair, printed BEFORE the compact record so
-    // tail capture keeps both (the compact line stays last and bounded)
-    oraclePair.foreach(println)
-    // The compact line exists so the driver's TAIL capture (last ~2000
-    // chars of stdout) always contains ONE parseable JSON record — but
-    // BENCH_r10 shipped "parsed": null anyway: a host-contended run
-    // flagged 47 tripwire entries and the embedded regressions map alone
-    // blew the compact line to ~4.7 KB, pushing its head out of the
-    // window. The compact record is therefore BOUNDED BY CONSTRUCTION:
-    // full host/code counts always, but detail entries only for
-    // code-attributed flags (host ones are ambient noise; full detail
-    // stays in the per-query line above and in bench_queries.json),
-    // worst-offenders first, and the detail map shrinks until the whole
-    // line fits the capture window.
-    println(Bench.compactRecord(total, calibStart, calibEnd,
-      canaries.toSeq, ioCanaries.toSeq, flagged, sfDir))
-    // filtered runs surface their fingerprints on stderr so cross-session
-    // plan stability is checkable without a full baseline-clobbering run
-    if (only.nonEmpty) System.err.println(s"plans:$plans")
-    // filtered local-iteration runs must NOT clobber the tripwire
-    // baseline: a partial per-query map would blind the next full run's
-    // regression diff to every query it dropped
-    if (only.isEmpty) {
-      val opJson =
-        oraclePair.map(o => s""","oracle_pair":$o""").getOrElse("")
+    // ---- the records, built once. The full record and the bounded
+    // compact record print BEFORE the oracle phase, which can run for
+    // minutes: a timeout that kills the JVM mid-oracle then still leaves
+    // every measurement of the run on stdout. The compact line prints
+    // again after the oracle pair, so it stays LAST: the driver captures
+    // the TAIL of the output, and BENCH_r06 shipped "parsed": null
+    // because a compact line printed first fell off the front of the
+    // window while the ~10 KB per-query line was cut mid-JSON. The full
+    // record also lands in bench_queries.json, so no timing is lost to
+    // line truncation.
+    val total = results.map(_._2).sum
+    val qs = results.map { case (k, v, _, _, _) => s""""$k":${f3num(v)}""" }
+      .mkString("{", ",", "}")
+    val plans = results.map { case (k, _, _, ph, _) => s""""$k":"$ph"""" }
+      .mkString("{", ",", "}")
+    val mb = 1024L * 1024L
+    val record =
+      s"""{"metric":"total","value":${f3num(total)},"unit":"sec",""" +
+        s""""calib_start":${f3num(calibStart)},""" +
+        s""""calib_end":${f3num(calibEnd)},""" +
+        s""""canaries":${canaries.map(f3num).mkString("[", ",", "]")},""" +
+        s""""io_canaries":${ioCanaries.map(f3num).mkString("[", ",", "]")},""" +
+        s""""regressions":${Bench.regJson(flagged)},""" +
+        s""""memdiag":{"heap_max_mb":${Runtime.getRuntime.maxMemory() / mb},""" +
+        s""""tasks":${memDiag.tasks.sum()},""" +
+        s""""failed_tasks":${memDiag.failedTasks.sum()},""" +
+        s""""spill_mem_mb":${memDiag.memSpilled.sum() / mb},""" +
+        s""""spill_disk_mb":${memDiag.diskSpilled.sum() / mb},""" +
+        s""""peak_exec_mem_mb":${memDiag.peakExecMem.get() / mb}},""" +
+        s""""queries":$qs"""
+    val compact = Bench.compactRecord(total, calibStart, calibEnd,
+      canaries.toSeq, ioCanaries.toSeq, flagged, sfDir)
+    println(s"""$record,"sf":"$sfDir"}""")
+    println(compact)
+    if (only.nonEmpty) {
+      // filtered runs surface their fingerprints on stderr so
+      // cross-session plan stability is checkable, and run no oracle
+      System.err.println(s"plans:$plans")
+    } else {
+      val pair = oraclePair(spark, sfDir,
+        results.map { case (n, t, _, _, _) => n -> t }.toMap,
+        results.collect { case (n, _, _, "err", _) => n }.toSet)
+      println(pair)
+      println(compact)
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_queries.json"),
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec",$calib,"queries":$qs,"plans":$plans$opJson,"oracle_offset":$nextOffset,"sf":"$sfDir"}"""
+        s"""$record,"plans":$plans,"oracle_pair":$pair,"sf":"$sfDir"}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    memDiag.foreach { l =>
-      println(s"""{"metric":"memdiag","heap_max_mb":${
-        Runtime.getRuntime.maxMemory() / (1024 * 1024)},"tasks":${
-        l.tasks.sum()},"failed_tasks":${l.failedTasks.sum()},"spill_mem_mb":${
-        l.memSpilled.sum() / (1024 * 1024)},"spill_disk_mb":${
-        l.diskSpilled.sum() / (1024 * 1024)},"peak_exec_mem_mb":${
-        l.peakExecMem.get() / (1024 * 1024)},"sf":"$sfDir"}""")
     }
     spark.stop()
   }
 }
 
-/** Task-metrics rollup for the constrained-heap soak: totals of
+/** Task-metrics rollup for the bench's full record: totals of
   * memory/disk spill bytes, the max per-task peak execution memory, and
   * task failure counts across the whole bench run.
   */

@@ -113,6 +113,17 @@ final class Catalog(val spark: SparkSession, val root: String) {
       .parquet(p.toString).select().rdd.count()
   }
 
+  /** The load ids of a `load_id`-partitioned table, from its
+    * `load_id=<loadId>` directory names: one listing on the driver, no
+    * Spark job. A zero-row load writes no partition directory, so its id
+    * is not listed, just as a read of the rows would not return it.
+    */
+  def loadIds(schema: String, table: String): Seq[Long] = {
+    val p = new HPath(path(schema, table))
+    fs(p.toString).listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("load_id=")).map(_.stripPrefix("load_id=").toLong)
+  }
+
   /** Where the read schema of `schema.table` is stored: beside the
     * schema directories, not in the table's, so the table's own listing
     * (and anything counting its files) is unchanged.
@@ -194,9 +205,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val p = path(schema, table)
     val df = read(schema, table)
     val hfs = fs(p)
-    val partitioned = df.columns.contains("load_id") &&
-      hfs.listStatus(new HPath(p))
-        .exists(_.getPath.getName.startsWith("load_id="))
+    val loads = loadIds(schema, table)
+    val partitioned = df.columns.contains("load_id") && loads.nonEmpty
     val bytes = {
       val it = hfs.listFiles(new HPath(p), true)
       var b = 0L
@@ -206,11 +216,10 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     // eager localCheckpoint ONCE up front: it fully materializes the input
     // before the path is overwritten AND means the (possibly expensive)
-    // source plan is evaluated a single time — the load-count probe and the
-    // staged repartition below both read the materialized blocks. Unlike
-    // cache(), a lost block fails loudly instead of recomputing from the
-    // path being overwritten (production-scale analog: write to a staging
-    // path and atomically rename).
+    // source plan is evaluated a single time. Unlike cache(), a lost block
+    // fails loudly instead of recomputing from the path being overwritten
+    // (production-scale analog: write to a staging path and atomically
+    // rename).
     val src = df.localCheckpoint()
     if (partitioned) {
       // repartition must follow the table's partitionBy(load_id) layout: a
@@ -220,9 +229,8 @@ final class Catalog(val spark: SparkSession, val root: String) {
       // directory, with `salt` splitting any single load that exceeds the
       // per-file byte budget.
       import org.apache.spark.sql.functions._
-      val nLoads = math.max(1L, src.select("load_id").distinct().count())
       val perLoadFiles =
-        math.max(1, math.ceil(bytes.toDouble / nLoads / targetBytes).toInt)
+        math.max(1, math.ceil(bytes.toDouble / loads.size / targetBytes).toInt)
       // salt only over hashable column types: xxhash64 rejects map-typed
       // input, so a map column anywhere in the schema would otherwise break
       // compaction for the whole table

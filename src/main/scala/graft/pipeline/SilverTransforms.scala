@@ -45,8 +45,9 @@ final class SilverTransforms(catalog: Catalog) {
   /** The allocator of the [[runAll]] call running on this thread. */
   private val runIds = new scala.util.DynamicVariable[Option[Iterator[Long]]](None)
 
-  /** J5: pending = bronze distinct load_ids minus the dataset's SUCCESS
-    * ids (the reference's set difference, transactions.py:19-23).
+  /** J5: pending = the Bronze table's load ids minus the dataset's SUCCESS
+    * ids (the reference's set difference, transactions.py:19-23). The
+    * Bronze ids come from its partition directories ([[Catalog.loadIds]]).
     */
   def pendingLoadIds(dataset: String, reprocess: Boolean = false): Seq[Long] =
     pending(dataset, reprocess, ledger()._1)
@@ -55,8 +56,7 @@ final class SilverTransforms(catalog: Catalog) {
       done: Map[String, Set[Long]]): Seq[Long] = {
     if (!catalog.exists(BRONZE, dataset)) return Seq.empty
     val skip = if (reprocess) Set.empty[Long] else done.getOrElse(dataset, Set.empty)
-    catalog.read(BRONZE, dataset).select($"load_id").distinct()
-      .as[Long].collect().toSeq.filterNot(skip.contains).sorted
+    catalog.loadIds(BRONZE, dataset).filterNot(skip.contains).sorted
   }
 
   private def log(ids: Iterator[Long], dataset: String, loadId: Long,

@@ -1,26 +1,29 @@
 #!/usr/bin/env python3
-"""Time each oracle SQL in DuckDB over the fixture tables — the
-same-window comparison SURVEY.md cites next to the Spark bench.
+"""Time each oracle SQL in DuckDB over the fixture tables: the DuckDB
+half of graft.Bench's same-window engine pair.
 
 Usage: python3 tools/oracle_bench.py <sfdir> <dir_with_oracle_sql.json>
-                                     [--budget SECONDS] [--offset N]
 
-With --budget, queries run in NUMERIC name order (the bench's own
-sequence order) until the budget is exhausted; the summary then carries
-the covered-query list AND per-query times so a caller can sum the SAME
-subset on the Spark side — a bounded same-window engine pair instead of
-an unbounded run.
+Runs every query in oracle_sql.json, in numeric name order (the bench's
+own sequence order), and prints one JSON summary line last with the
+per-query times, so a caller can sum the same queries on the Spark side.
+graft.Bench writes only its fixed oracle window (Bench.oracleWindow) into
+the file, so every full bench run pairs the same queries.
 
-With --offset N, the numeric order is ROTATED to start at index
-N mod len (wrapping) — the bench advances the offset each round so the
-budgeted window accumulates coverage over the whole suite across rounds
-(the heavy q7x+ tail included) instead of re-measuring q01-q5x forever.
+A hard deadline (DEADLINE_S) guards against a hung or runaway query:
+con.interrupt() cancels the in-flight query, no further query starts,
+and the summary still prints, with an "error" field naming the query
+that was not timed. A query DuckDB rejects is reported as ERR and left
+out of the times.
 """
 import sys, json, time, threading, os
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+# Twice the window's 120 s DuckDB budget, plus start-up headroom.
+DEADLINE_S = 270
 
 
 def qnum(name):
@@ -33,7 +36,7 @@ def qnum(name):
     return int(d) if d else 0
 
 
-def main(sfdir, outdir, budget=None, offset=0):
+def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
         # driver fixtures are single files; locally generated scale fixtures
@@ -44,61 +47,38 @@ def main(sfdir, outdir, budget=None, offset=0):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     ordered = sorted(oracle.items(), key=lambda kv: (qnum(kv[0]), kv[0]))
-    if ordered and offset:
-        k = offset % len(ordered)
-        ordered = ordered[k:] + ordered[:k]
     total = 0.0
     times = {}
+    error = None
     start = time.time()
-    # Hard deadline: the budget stops LAUNCHING queries, but a query
-    # already running can take arbitrarily long (single heavy oracles
-    # have measured 260+s on slow boxes) — without a bound the caller's
-    # process watchdog kills us before the summary prints and the whole
-    # window's measurements are lost. con.interrupt() cancels the
-    # in-flight query at 2x budget; everything measured so far still
-    # lands in the summary.
-    timer = None
-    if budget is not None:
-        timer = threading.Timer(budget * 2 + 30, con.interrupt)
-        timer.daemon = True
-        timer.start()
+    timer = threading.Timer(DEADLINE_S, con.interrupt)
+    timer.daemon = True
+    timer.start()
     for name, sql in ordered:
-        if budget is not None and time.time() - start > budget:
-            break
         t0 = time.time()
         try:
+            if t0 - start >= DEADLINE_S:
+                raise TimeoutError("not started")
             con.sql(sql).df()
             dt = time.time() - t0
         except Exception as e:
-            if budget is not None and time.time() - start > budget:
-                print(f"DEADLINE  {name} (interrupted, not counted)")
+            if time.time() - start >= DEADLINE_S:
+                error = f"deadline {DEADLINE_S}s: {name} not timed"
+                print(f"DEADLINE  {name} (not counted)")
                 break
             print(f"ERR  {name}: {e}")
             continue
         times[name] = round(dt, 3)
         total += dt
-    if timer is not None:
-        timer.cancel()
+    timer.cancel()
     for name, dt in sorted(times.items(), key=lambda kv: -kv[1]):
         print(f"{name:28s} {dt:8.3f}")
     rec = {"metric": "oracle_total", "value": round(total, 3),
-           "unit": "sec", "n": len(times), "offset": offset, "sf": sfdir}
-    if budget is not None:
-        rec["covered"] = sorted(times)
-        rec["times"] = times
+           "unit": "sec", "n": len(times), "sf": sfdir, "times": times}
+    if error is not None:
+        rec["error"] = error
     print(json.dumps(rec))
 
 
 if __name__ == "__main__":
-    budget = None
-    offset = 0
-    args = sys.argv[1:]
-    if "--budget" in args:
-        i = args.index("--budget")
-        budget = float(args[i + 1])
-        args = args[:i] + args[i + 2:]
-    if "--offset" in args:
-        i = args.index("--offset")
-        offset = int(args[i + 1])
-        args = args[:i] + args[i + 2:]
-    main(args[0], args[1], budget, offset)
+    main(sys.argv[1], sys.argv[2])
