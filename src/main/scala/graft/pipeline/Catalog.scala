@@ -1,13 +1,23 @@
 package graft.pipeline
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.reflect.{ClassTag, classTag}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Path-based medallion warehouse: `schema.table` → `<root>/<schema>/<table>`
   * parquet directories. Replaces the reference's Snowflake schemas
@@ -72,46 +82,142 @@ final class Catalog(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Append rows (ledgers, Bronze landings). */
+  /** Append a DataFrame's rows. */
   def append(df: DataFrame, schema: String, table: String): Unit =
-    recorded(df, schema, table, partitioned = false, replaces = false)(
+    recorded(df.schema, schema, table, partitioned = false, replaces = false)(
       df.write.mode(SaveMode.Append).parquet(_))
 
   /** Append partitioned by load_id so per-batch rewrite prunes to one
     * partition and batch-scoped reads (`WHERE load_id = ?`) prune files.
     */
   def appendBatched(df: DataFrame, schema: String, table: String): Unit =
-    recorded(df, schema, table, partitioned = true, replaces = false)(
+    recorded(df.schema, schema, table, partitioned = true, replaces = false)(
       df.write.mode(SaveMode.Append).partitionBy("load_id").parquet(_))
 
   /** Idempotent batch rewrite: dynamic overwrite of just the partitions
     * present in `df` (the reference's delete+insert, S11).
     */
   def overwriteBatch(df: DataFrame, schema: String, table: String): Unit =
-    recorded(df, schema, table, partitioned = true, replaces = false)(
+    recorded(df.schema, schema, table, partitioned = true, replaces = false)(
       df.write.mode(SaveMode.Overwrite).partitionBy("load_id").parquet(_))
 
   /** Full rebuild (CTAS, S12/S13). */
   def overwrite(df: DataFrame, schema: String, table: String): Unit =
-    recorded(df, schema, table, partitioned = false, replaces = true)(
+    recorded(df.schema, schema, table, partitioned = false, replaces = true)(
       df.write.mode(SaveMode.Overwrite).parquet(_))
 
-  /** Durability read-back of one batch write: the rows under exactly the
-    * table's `load_id=<loadId>` directory, read with the schema of the
-    * `written` rows. Reading the table root with `WHERE load_id` would
-    * prune to the same files but pays an O(#loads) root listing per load —
-    * a metadata storm at production cadence. A zero-row load writes no
-    * partition directory at all, which counts as 0, not an error. The
-    * count runs as one Spark job: `Dataset.count` plans a single-partition
-    * shuffle, which adaptive execution runs as a job of its own.
+  /** Appends a few rows (a ledger transition) to an unpartitioned table as
+    * one parquet file, written on the driver without a Spark job. The file
+    * comes from Spark's own parquet writer factory with the session's
+    * settings, so it is the file a Spark append of `rows.toDF()` writes,
+    * and [[read]] and the stored schema treat it the same. It is written
+    * under a hidden `.`-prefixed name, which every read skips, and renamed
+    * into place once: a reader in any process sees all of it or none of it.
+    * Safe to call from several threads; one table still has one writer at
+    * a time (see [[read]]).
     */
-  def countBatch(schema: String, table: String, loadId: Long,
-      written: StructType): Long = {
-    val p = new HPath(s"${path(schema, table)}/load_id=$loadId")
-    if (!fs(p.toString).exists(p)) 0L
-    else spark.read.schema(StructType(written.filterNot(_.name == "load_id")))
-      .parquet(p.toString).select().rdd.count()
+  def appendRows[T <: Product : TypeTag : ClassTag](rows: Seq[T],
+      schema: String, table: String): Unit = {
+    val enc = Catalog.encoder[T]
+    recorded(enc.schema, schema, table, partitioned = false,
+      replaces = false) { p =>
+      val sqlConf = spark.sessionState.conf
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = ParquetUtils.prepareWrite(sqlConf, job, enc.schema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+      val (tmp, dst) = (new HPath(p, s".$name"), new HPath(p, name))
+      val hfs = fs(p)
+      val written = try {
+        val writer = factory.newInstance(tmp.toString, enc.schema, ctx)
+        val (toRow, fromRow) = (enc.createSerializer(), enc.createDeserializer())
+        // hold each row as a read of the file returns it (timestamps in
+        // microseconds, say), not as it was passed
+        val held =
+          try rows.map { r => val row = toRow(r); writer.write(row); fromRow(row) }
+          finally writer.close()
+        if (!hfs.rename(tmp, dst)) throw new IOException(s"could not rename $tmp")
+        held
+      } catch { case e: Throwable => hfs.delete(tmp, false); throw e }
+      ledgers.compute(ledgerKey[T](schema, table), (_, known) =>
+        Option(known).getOrElse(Map.empty) +
+          (name -> (hfs.getFileStatus(dst).getLen -> written)))
+      ()
+    }
   }
+
+  /** Rows of every data file this Catalog wrote with [[appendRows]] or
+    * read with [[snapshot]], per table and row class, keyed by file name
+    * with the file's length.
+    */
+  private val ledgers =
+    new ConcurrentHashMap[(String, String, Class[_]), Map[String, (Long, Seq[Any])]]()
+
+  private def ledgerKey[T : ClassTag](schema: String,
+      table: String): (String, String, Class[_]) =
+    (schema, table, classTag[T].runtimeClass)
+
+  /** Every row of an unpartitioned table (a ledger), as of one listing of
+    * its directory. Rows of files this Catalog already holds (same name,
+    * same length) come from memory; the files new to it (written by
+    * another Catalog or process, or by a compaction) are read with one
+    * Spark read of just those files; files gone from the listing drop
+    * out. So a snapshot with nothing new costs one listing and no Spark
+    * job, and a long-lived Catalog reads each file once. Cross-process
+    * contract: it sees every file renamed into place before its listing,
+    * as [[read]] does; a missing table is empty.
+    */
+  def snapshot[T <: Product : TypeTag : ClassTag](schema: String,
+      table: String): Seq[T] = {
+    val listed = dataFiles(new HPath(path(schema, table)))
+    val key = ledgerKey[T](schema, table)
+    val known = Option(ledgers.get(key)).getOrElse(Map.empty)
+    def held(s: FileStatus) =
+      known.get(s.getPath.getName).filter(_._1 == s.getLen)
+    val unseen = listed.filter(held(_).isEmpty).map(_.getPath.toString)
+    val read = if (unseen.isEmpty) Map.empty[String, Seq[T]] else {
+      val df = stored(schema, table).fold(spark.read.parquet(unseen: _*))(
+        spark.read.schema(_).parquet(unseen: _*))
+      df.select(col("_metadata.file_name").as("_1"),
+          struct(df.columns.toIndexedSeq.map(col): _*).as("_2"))
+        .as(Encoders.tuple(Encoders.STRING, Catalog.encoder[T]))
+        .collect().toSeq.groupMap(_._1)(_._2)
+    }
+    val now = listed.map { s =>
+      val name = s.getPath.getName
+      name -> held(s).getOrElse(s.getLen -> read.getOrElse(name, Seq.empty))
+    }.toMap
+    ledgers.put(key, now)
+    now.values.toSeq.flatMap(_._2).asInstanceOf[Seq[T]]
+  }
+
+  /** Durability read-back of one batch write: the rows under exactly the
+    * table's `load_id=<loadId>` directory, summed from the row counts in
+    * its data files' parquet footers on the driver, so no Spark job runs
+    * and no column page is read. Listing the table root instead would pay
+    * an O(#loads) listing per load, a metadata storm at production
+    * cadence. A zero-row load writes no partition directory at all, which
+    * counts as 0, not an error.
+    */
+  def countBatch(schema: String, table: String, loadId: Long): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(new HPath(s"${path(schema, table)}/load_id=$loadId")).map { s =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** The data files directly under `dir`, none when it does not exist. By
+    * the rule Spark's file listing applies, names starting with `_`
+    * (`_SUCCESS`) or `.` (checksums, temp files) are not data.
+    */
+  private def dataFiles(dir: HPath): Seq[FileStatus] =
+    try fs(dir.toString).listStatus(dir).toSeq.filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    } catch { case _: FileNotFoundException => Seq.empty }
 
   /** The load ids of a `load_id`-partitioned table, from its
     * `load_id=<loadId>` directory names: one listing on the driver, no
@@ -144,19 +250,22 @@ final class Catalog(val spark: SparkSession, val root: String) {
     } catch { case _: FileNotFoundException => None }
   }
 
-  /** Runs `write` on the table's path and stores the schema a read of the
-    * table returns after it (see [[read]]). The stored schema is deleted
-    * while the write runs, so a concurrent read infers rather than pairing
-    * the old schema with new files, and stays deleted if the write fails.
-    * The new one is written to a temporary file and renamed into place, so
-    * a reader sees all of it or none.
+  /** Runs `write` of rows of schema `dfSchema` on the table's path and
+    * stores the schema a read of the table returns after it (see
+    * [[read]]). A stored schema equal to that one stays in place. Any
+    * other is deleted while the write runs, so a concurrent read infers
+    * rather than pairing the old schema with new files, and stays deleted
+    * if the write fails. The new one is written to a temporary file and
+    * renamed into place, so a reader sees all of it or none.
     */
-  private def recorded(df: DataFrame, schema: String, table: String,
+  private def recorded(dfSchema: StructType, schema: String, table: String,
       partitioned: Boolean, replaces: Boolean)(write: String => Unit): Unit = {
     val p = path(schema, table)
-    val written = Catalog.asRead(df.schema, partitioned)
-    val keep = replaces || (stored(schema, table) match {
-      case Some(known) => known == written
+    val written = Catalog.asRead(dfSchema, partitioned)
+    val known = stored(schema, table)
+    val unchanged = known.contains(written)
+    val keep = replaces || (known match {
+      case Some(k) => k == written
       case None =>
         !fs(p).exists(new HPath(p)) ||
           (try Catalog.asRead(read(schema, table).schema, partitioned) == written
@@ -164,9 +273,9 @@ final class Catalog(val spark: SparkSession, val root: String) {
     })
     val f = schemaFile(schema, table)
     val hfs = fs(f.toString)
-    hfs.delete(f, false)
+    if (!unchanged) hfs.delete(f, false)
     write(p)
-    if (keep) {
+    if (keep && !unchanged) {
       val tmp = new HPath(f.getParent, s".${f.getName}.${UUID.randomUUID()}")
       val out = hfs.create(tmp, true)
       try out.write(written.json.getBytes(UTF_8)) finally out.close()
@@ -264,11 +373,22 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val hfs = fs(p.toString)
     hfs.delete(p, true)
     hfs.delete(new HPath(s"$root/_schemas/$schema"), true)
+    ledgers.keySet.removeIf(_._1 == schema)
     ()
   }
 }
 
 object Catalog {
+
+  private val encoders = new ConcurrentHashMap[Class[_], ExpressionEncoder[_]]()
+
+  /** One bound encoder per row class: deriving one reflects over the
+    * class.
+    */
+  private def encoder[T <: Product : TypeTag : ClassTag]: ExpressionEncoder[T] =
+    encoders.computeIfAbsent(classTag[T].runtimeClass,
+      _ => ExpressionEncoder[T]().resolveAndBind())
+      .asInstanceOf[ExpressionEncoder[T]]
 
   /** The schema Spark reads back for a write of `written`: parquet reads
     * every column as nullable, and a partitioned write's `load_id` comes

@@ -26,36 +26,32 @@ final class Ingestion(catalog: Catalog) {
     * ingestion_logic.py:101-113). Hadoop glob works on any supported FS.
     */
   def listFiles(sourcePath: String, pattern: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val glob = new org.apache.hadoop.fs.Path(s"$sourcePath/$pattern")
-    val st = fs.globStatus(glob)
+    val st = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(glob)
     if (st == null) Seq.empty
     else st.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
   }
 
-  private type Ledger = Seq[(Long, String, String, String)]
+  private type Ledger = Seq[Schemas.IngestionLog]
 
-  /** One read of the load ledger, (load_id, file_name, target_table,
-    * status) per row: [[ingest]] derives the orphan reconcile, the
-    * SUCCESS-only skip set and the next load id from the same snapshot,
-    * so a config row pays one ledger read instead of three. The ledger
-    * is control-plane sized (one row per file attempt).
+  /** One snapshot of the load ledger ([[Catalog.snapshot]]): [[ingest]]
+    * derives the orphan reconcile, the SUCCESS-only skip set and the next
+    * load id from the same snapshot. The ledger is control-plane sized
+    * (one row per file attempt).
     */
   private def ledger(): Ledger =
-    if (!catalog.exists(ADMIN, "ingestion_logs")) Seq.empty
-    else catalog.read(ADMIN, "ingestion_logs")
-      .select($"load_id", $"file_name", $"target_table", $"status")
-      .as[(Long, String, String, String)].collect().toSeq
+    catalog.snapshot[Schemas.IngestionLog](ADMIN, "ingestion_logs")
 
   /** S6: files already loaded with SUCCESS for this table are skipped. */
   private def succeeded(ledger: Ledger, targetTable: String): Set[String] =
     ledger.collect {
-      case (_, file, table, "SUCCESS") if table == targetTable => file
+      case Schemas.IngestionLog(_, file, `targetTable`, "SUCCESS", _, _, _) => file
     }.toSet
 
-  private def log(entry: Schemas.IngestionLog): Unit =
-    catalog.append(Seq(entry).toDF(), ADMIN, "ingestion_logs")
+  /** Appends ledger rows on the driver ([[Catalog.appendRows]]). */
+  private def log(entries: Seq[Schemas.IngestionLog]): Unit =
+    catalog.appendRows(entries, ADMIN, "ingestion_logs")
 
   /** Reconcile orphaned RUNNING claims before a new run: the batched
     * up-front claim (see [[ingest]]) means a driver crash mid-run leaves
@@ -75,19 +71,18 @@ final class Ingestion(catalog: Catalog) {
 
   private def reconcile(ledger: Ledger): Seq[Long] = {
     val terminal = ledger.collect {
-      case (id, _, _, "SUCCESS" | "FAILURE" | "ABANDONED") => id
+      case Schemas.IngestionLog(id, _, _,
+        "SUCCESS" | "FAILURE" | "ABANDONED", _, _, _) => id
     }.toSet
-    val orphans = ledger.filter { case (id, _, _, status) =>
-      status == "RUNNING" && !terminal.contains(id)
-    }
+    val orphans = ledger.filter(l =>
+      l.status == "RUNNING" && !terminal.contains(l.load_id))
     if (orphans.nonEmpty) {
       val t = new Timestamp(System.currentTimeMillis())
-      catalog.append(orphans.map { case (id, file, table, _) =>
-        Schemas.IngestionLog(id, file, table,
-          "ABANDONED", 0L, "orphaned RUNNING claim from a crashed run", t)
-      }.toDF(), ADMIN, "ingestion_logs")
+      log(orphans.map(_.copy(status = "ABANDONED", rows_loaded = 0L,
+        error_message = "orphaned RUNNING claim from a crashed run",
+        started_at = t)))
     }
-    orphans.map(_._1).sorted
+    orphans.map(_.load_id).sorted
   }
 
   /** S4/S5: load one file into Bronze with audit columns; returns rows
@@ -133,8 +128,7 @@ final class Ingestion(catalog: Catalog) {
       .withColumn("_source_file", lit(file))
       .withColumn("load_id", lit(loadId))
     catalog.appendBatched(withAudit, detail.target_schema, detail.target_table)
-    catalog.countBatch(detail.target_schema, detail.target_table, loadId,
-      withAudit.schema)
+    catalog.countBatch(detail.target_schema, detail.target_table, loadId)
   }
 
   /** Ingest every pending file for one config row; one load_id per file
@@ -152,7 +146,7 @@ final class Ingestion(catalog: Catalog) {
     // allocate the whole id range up front, from the snapshot: no ledger
     // max-scan per FILE, which would grow with ledger size and at
     // production load cadence be a pure metadata storm.
-    val baseId = snapshot.map(_._1).maxOption.getOrElse(0L) + 1L
+    val baseId = snapshot.map(_.load_id).maxOption.getOrElse(0L) + 1L
     val t0 = new Timestamp(System.currentTimeMillis())
     // claim the ENTIRE allocated range with one batched RUNNING append
     // BEFORE any file loads: a concurrent ingest taking its snapshot
@@ -160,10 +154,10 @@ final class Ingestion(catalog: Catalog) {
     // append — not "until the last file finishes loading" (which a lazy
     // per-file RUNNING write would leave open)
     if (pending.nonEmpty)
-      catalog.append(pending.zipWithIndex.map { case (file, idx) =>
+      log(pending.zipWithIndex.map { case (file, idx) =>
         Schemas.IngestionLog(baseId + idx, file, detail.target_table,
           "RUNNING", 0L, "", t0)
-      }.toDF(), ADMIN, "ingestion_logs")
+      })
     pending.zipWithIndex.map { case (file, idx) =>
       val loadId = baseId + idx
       // the batched claim stamps every RUNNING row with the CLAIM time;
@@ -172,13 +166,13 @@ final class Ingestion(catalog: Catalog) {
       val tf = new Timestamp(System.currentTimeMillis())
       try {
         val rows = loadFile(detail, file, loadId)
-        log(Schemas.IngestionLog(loadId, file, detail.target_table,
-          "SUCCESS", rows, "", tf))
+        log(Seq(Schemas.IngestionLog(loadId, file, detail.target_table,
+          "SUCCESS", rows, "", tf)))
         (file, loadId, rows)
       } catch {
         case e: Exception =>
-          log(Schemas.IngestionLog(loadId, file, detail.target_table,
-            "FAILURE", 0L, String.valueOf(e.getMessage), tf))
+          log(Seq(Schemas.IngestionLog(loadId, file, detail.target_table,
+            "FAILURE", 0L, String.valueOf(e.getMessage), tf)))
           (file, loadId, -1L)
       }
     }

@@ -22,21 +22,20 @@ final class SilverTransforms(catalog: Catalog) {
   private val BRONZE = "bronze"
   private val SILVER = "silver"
 
-  /** One read of the transformation ledger: the SUCCESS load ids of each
-    * dataset, and an allocator of transformation ids counting up from one
-    * past the ledger's largest. [[runAll]] takes one per call and derives
-    * every pending set and every id it logs from it (single-driver
-    * assumption, as for the load ids of [[Ingestion.ingest]]).
+  /** One snapshot of the transformation ledger ([[Catalog.snapshot]]):
+    * the SUCCESS load ids of each dataset, and an allocator of
+    * transformation ids counting up from one past the ledger's largest.
+    * [[runAll]] takes one per call and derives every pending set and every
+    * id it logs from it (single-driver assumption, as for the load ids of
+    * [[Ingestion.ingest]]).
     */
   private def ledger(): (Map[String, Set[Long]], Iterator[Long]) = {
-    val rows =
-      if (!catalog.exists(ADMIN, "transformation_logs")) Seq.empty
-      else catalog.read(ADMIN, "transformation_logs")
-        .select($"transformation_id", $"dataset_name", $"load_id", $"status")
-        .as[(Long, String, Long, String)].collect().toSeq
-    val done = rows.collect { case (_, ds, id, "SUCCESS") => ds -> id }
-      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
-    (done, Iterator.iterate(rows.map(_._1).maxOption.getOrElse(0L) + 1L)(_ + 1))
+    val rows = catalog.snapshot[Schemas.TransformationLog](ADMIN,
+      "transformation_logs")
+    val done = rows.filter(_.status == "SUCCESS")
+      .groupMap(_.dataset_name)(_.load_id).view.mapValues(_.toSet).toMap
+    val next = rows.map(_.transformation_id).maxOption.getOrElse(0L) + 1L
+    (done, Iterator.iterate(next)(_ + 1))
   }
 
   /** A fresh allocator, for a processor called outside [[runAll]]. */
@@ -61,9 +60,9 @@ final class SilverTransforms(catalog: Catalog) {
 
   private def log(ids: Iterator[Long], dataset: String, loadId: Long,
       status: String, rows: Long, err: String = ""): Unit =
-    catalog.append(
+    catalog.appendRows(
       Seq(Schemas.TransformationLog(ids.next(), dataset, loadId,
-        status, rows, err, new Timestamp(System.currentTimeMillis()))).toDF(),
+        status, rows, err, new Timestamp(System.currentTimeMillis()))),
       ADMIN, "transformation_logs")
 
   private def bronzeBatch(dataset: String, loadId: Long): DataFrame =
@@ -90,7 +89,7 @@ final class SilverTransforms(catalog: Catalog) {
   /** Rewrites one batch of a Silver table; returns the rows read back. */
   private def writeBatch(out: DataFrame, target: String, loadId: Long): Long = {
     catalog.overwriteBatch(out, SILVER, target)
-    catalog.countBatch(SILVER, target, loadId, out.schema)
+    catalog.countBatch(SILVER, target, loadId)
   }
 
   // ── transactions (transformations/transactions.py): default missing
