@@ -8,10 +8,10 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.reflect.{ClassTag, classTag}
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, DriverScan, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
-import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -162,12 +162,14 @@ final class Catalog(val spark: SparkSession, val root: String) {
   /** Every row of an unpartitioned table (a ledger), as of one listing of
     * its directory. Rows of files this Catalog already holds (same name,
     * same length) come from memory; the files new to it (written by
-    * another Catalog or process, or by a compaction) are read with one
-    * Spark read of just those files; files gone from the listing drop
-    * out. So a snapshot with nothing new costs one listing and no Spark
-    * job, and a long-lived Catalog reads each file once. Cross-process
-    * contract: it sees every file renamed into place before its listing,
-    * as [[read]] does; a missing table is empty.
+    * another Catalog or process, or by a compaction) are decoded on the
+    * driver file by file ([[DriverScan.files]]), as the table's stored
+    * schema (else the row class's), with columns matched to the row class
+    * by name; files gone from the listing drop out. So a snapshot runs no
+    * Spark job: one with nothing new costs one listing, and a long-lived
+    * Catalog decodes each file once. Cross-process contract: it sees every
+    * file renamed into place before its listing, as [[read]] does; a
+    * missing table is empty.
     */
   def snapshot[T <: Product : TypeTag : ClassTag](schema: String,
       table: String): Seq[T] = {
@@ -176,14 +178,14 @@ final class Catalog(val spark: SparkSession, val root: String) {
     val known = Option(ledgers.get(key)).getOrElse(Map.empty)
     def held(s: FileStatus) =
       known.get(s.getPath.getName).filter(_._1 == s.getLen)
-    val unseen = listed.filter(held(_).isEmpty).map(_.getPath.toString)
+    val unseen = listed.filter(held(_).isEmpty)
     val read = if (unseen.isEmpty) Map.empty[String, Seq[T]] else {
-      val df = stored(schema, table).fold(spark.read.parquet(unseen: _*))(
-        spark.read.schema(_).parquet(unseen: _*))
-      df.select(col("_metadata.file_name").as("_1"),
-          struct(df.columns.toIndexedSeq.map(col): _*).as("_2"))
-        .as(Encoders.tuple(Encoders.STRING, Catalog.encoder[T]))
-        .collect().toSeq.groupMap(_._1)(_._2)
+      val enc = Catalog.encoder[T]
+      val rowSchema = Catalog.asRead(enc.schema, partitioned = false)
+      val fileSchema = stored(schema, table).getOrElse(rowSchema)
+      val fromRow = enc.createDeserializer()
+      val rows = DriverScan.files(spark, unseen, fileSchema, rowSchema)
+      unseen.map(_.getPath.getName).zip(rows.map(_.map(fromRow))).toMap
     }
     val now = listed.map { s =>
       val name = s.getPath.getName

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DriverScan}
 import org.apache.spark.sql.functions._
 
 /** The interactive dashboard's query surface
@@ -9,12 +9,23 @@ import org.apache.spark.sql.functions._
   * function over Silver tables, with the client-side pandas analytics
   * (pivot, top-k, means — SURVEY.md §3.2) moved into the engine. Rendering
   * concerns (colors, arcs, tooltips) stay out, as presentation.
+  *
+  * Each function reads its input through [[DriverScan]]: a parquet table
+  * of at most `spark.sql.autoBroadcastJoinThreshold` bytes (a Silver table
+  * of a few MB) is decoded on the driver, so the filter-and-project reads
+  * (`visits`, `movements`, `logs`, `transactions`, `flights`, `sleep`)
+  * collect without a Spark job, and the rollups and the top-k run their
+  * jobs over in-memory rows instead of a file scan. A larger table, or a
+  * threshold of `-1`, keeps the file scan. Either way a read sees the
+  * files listed when its input relation was built (by `Catalog.read`),
+  * and a file deleted before the call decodes it fails the call as a scan
+  * would.
   */
 object Dashboard {
 
   /** Visits with coordinates in range (`:89-95`). */
   def visits(segments: DataFrame, d1: String, d2: String): DataFrame =
-    segments
+    DriverScan(segments)
       .where(col("segment_type") === "VISIT" &&
         to_date(col("start_time")).between(d1, d2) &&
         col("visit_latitude").isNotNull && col("visit_longitude").isNotNull)
@@ -24,7 +35,7 @@ object Dashboard {
 
   /** Movement segments, non-flying (`:103-122`). */
   def movements(segments: DataFrame, d1: String, d2: String): DataFrame =
-    segments
+    DriverScan(segments)
       .where(col("segment_type") === "ACTIVITY" &&
         col("activity_type") =!= "FLYING" &&
         to_date(col("start_time")).between(d1, d2) &&
@@ -35,23 +46,23 @@ object Dashboard {
 
   /** Itinerary logs in range (`:124`). */
   def logs(manualLogs: DataFrame, d1: String, d2: String): DataFrame =
-    manualLogs.where(col("log_date").between(d1, d2))
+    DriverScan(manualLogs).where(col("log_date").between(d1, d2))
 
   /** Transactions in range (`:125`). */
   def transactions(silverTx: DataFrame, d1: String, d2: String): DataFrame =
-    silverTx.where(col("date").between(d1, d2))
+    DriverScan(silverTx).where(col("date").between(d1, d2))
 
   /** Flights in range (`:126`). */
   def flights(flightLogs: DataFrame, d1: String, d2: String): DataFrame =
-    flightLogs.where(col("flight_date").between(d1, d2))
+    DriverScan(flightLogs).where(col("flight_date").between(d1, d2))
 
   /** Sleep in range keyed by wake-up date (`:127`). */
   def sleep(sleepScores: DataFrame, d1: String, d2: String): DataFrame =
-    sleepScores.where(col("wake_up_date").between(d1, d2))
+    DriverScan(sleepScores).where(col("wake_up_date").between(d1, d2))
 
   /** Daily steps rollup (`:128`). */
   def dailySteps(stepsHourly: DataFrame, d1: String, d2: String): DataFrame =
-    stepsHourly.where(col("date").between(d1, d2))
+    DriverScan(stepsHourly).where(col("date").between(d1, d2))
       .groupBy(col("date"))
       .agg(sum(col("steps")).as("total_steps"))
 

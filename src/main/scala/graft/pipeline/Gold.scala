@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DriverScan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -164,7 +164,9 @@ object Gold {
     * sorted by (section, sort key) in one partition. No shuffle: the few
     * rows of a date meet in one task, and its sort is Spark's ascending
     * order (nulls first) and stable, so ties keep scan order as the
-    * sections' own `orderBy` did.
+    * sections' own `orderBy` did. The six inputs are read through
+    * [[DriverScan]], as the dashboard's are: small Silver tables are
+    * decoded on the driver instead of scanned by a job.
     */
   def dailySummary(date: String, dailySpend: DataFrame, stepsHourly: DataFrame,
       sleepScores: DataFrame, manualLogs: DataFrame, flightLogs: DataFrame,
@@ -172,8 +174,8 @@ object Gold {
     val spark = dailySpend.sparkSession
     import spark.implicits._
     val d = to_date(lit(date))
-    val spend = dailySpend.where($"date" === d)
-    val steps = stepsHourly.where($"date" === d)
+    val spend = DriverScan(dailySpend).where($"date" === d)
+    val steps = DriverScan(stepsHourly).where($"date" === d)
 
     // columns: tag, string sort key, numeric sort key, JSON row, spent, steps
     val none = lit(null)
@@ -190,16 +192,16 @@ object Gold {
     val rows = totals
       .union(section(1, spend, $"type", none,
         $"type", $"total_amount"))
-      .union(section(2, sleepScores.where($"wake_up_date" === d), none,
+      .union(section(2, DriverScan(sleepScores).where($"wake_up_date" === d), none,
         $"overall_score",
         $"overall_score", $"deep_sleep_in_minutes", $"resting_heart_rate"))
-      .union(section(3, manualLogs.where($"log_date" === d), none, none,
+      .union(section(3, DriverScan(manualLogs).where($"log_date" === d), none, none,
         $"country", $"city", $"description", $"comments"))
-      .union(section(4, flightLogs.where($"flight_date" === d),
+      .union(section(4, DriverScan(flightLogs).where($"flight_date" === d),
         $"flight_number", none,
         $"flight_number", $"from", $"to", $"duration_hours"))
       .union(section(5,
-        timelineSegments.where(to_date($"start_time") === d), none,
+        DriverScan(timelineSegments).where(to_date($"start_time") === d), none,
         unix_micros($"start_time"),
         $"start_time", $"end_time", $"segment_type", $"activity_type",
         $"distance_meters",

@@ -2675,23 +2675,23 @@ object EventStream {
     val ledger = s"${table}__ledger"
     val q = streamed.writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val done: Set[Long] =
-          if (catalog.exists(schema, ledger))
-            catalog.read(schema, ledger).select("batch_id")
-              .collect().map(_.getLong(0)).toSet
-          else Set.empty
-        if (!done.contains(batchId)) {
+        if (!catalog.snapshot[LedgerBatch](schema, ledger)
+            .exists(_.batch_id == batchId)) {
           catalog.appendBatched(
             df.withColumn("load_id", lit(batchId)), schema, table)
-          val s = df.sparkSession
-          import s.implicits._
-          catalog.append(Seq(batchId).toDF("batch_id"), schema, ledger)
+          catalog.appendRows(Seq(LedgerBatch(batchId)), schema, ledger)
         }
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
   }
+
+  /** One row of [[ledgeredIngest]]'s batch-id ledger (`batch_id BIGINT NOT
+    * NULL`), read and appended on the driver (`Catalog.snapshot` /
+    * `Catalog.appendRows`), so the ledger check and append run no Spark job.
+    */
+  case class LedgerBatch(batch_id: Long)
 
   /** Run a streaming query to completion over currently-available data
     * (memory sink), returning the result — used by tests to assert

@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared session: one JVM-wide SparkSession across suites (local[4]). */
 object SparkSpec {
@@ -22,6 +25,38 @@ trait SparkSpec extends AnyFunSuite {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` and returns the number of Spark jobs each phase ran; the
+    * body names the current phase through the function it is given. Jobs
+    * carry the phase as a job-local property (adaptive execution's stage
+    * jobs inherit it). Listener events arrive in posting order, so once a
+    * marker job's start has been seen every earlier job has been counted.
+    */
+  def jobsByPhase(body: (String => Unit) => Unit): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val key = "graft.test.phase"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body(sc.setLocalProperty(key, _))
+      sc.setLocalProperty(key, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq.filter(_ != "marker").groupBy(identity)
+      .map { case (k, v) => k -> v.size }
   }
 }
 

@@ -261,18 +261,23 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = EventStream.ledgeredIngest(
       spark.readStream.schema(schema).parquet(ddir),
       catalog, "bronze", "docs_stream")
-    runOnce()
+    // the stream's thread inherits the phase label it was started under
+    val first = jobsByPhase { label => label("first"); runOnce() }
     assert(catalog.read("bronze", "docs_stream").count() == n)
     // a second run uses a fresh checkpoint, so its micro-batches REPLAY
     // the same batch ids over the same files — the ledger must make the
     // whole second pass a no-op (the exactly-once contract)
-    runOnce()
+    val replay = jobsByPhase { label => label("replay"); runOnce() }
     assert(catalog.read("bronze", "docs_stream").count() == n,
       "replayed batch ids were ingested twice")
     // and the ledger recorded exactly the committed batch ids once
     val ids = catalog.read("bronze", "docs_stream__ledger")
       .select("batch_id").collect().map(_.getLong(0)).toSeq
     assert(ids == ids.distinct, s"duplicate ledger rows: $ids")
+    // the ledger check and append run on the driver: a committed batch
+    // runs only its data append's one job, a replayed one none
+    assert(first.getOrElse("first", 0) == ids.size, first.toString)
+    assert(replay.isEmpty, replay.toString)
   }
 
   test("stream-static dimension join matches the batch join + rollup") {

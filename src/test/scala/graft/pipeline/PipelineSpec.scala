@@ -4,13 +4,12 @@ import graft.SparkSpec
 import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.Executors
 import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{IntegerType, LongType}
-import scala.jdk.CollectionConverters._
 
 /** The local filesystem under a second scheme, `graftalt`, for tests of
   * paths that are not on the default filesystem.
@@ -27,13 +26,7 @@ class AltSchemeFileSystem extends RawLocalFileSystem {
   */
 class PipelineSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
-
-  private def write(dir: String, name: String, content: String): String = {
-    Files.createDirectories(Paths.get(dir))
-    val p = Paths.get(dir, name)
-    Files.writeString(p, content)
-    p.toString
-  }
+  import PipelineFixtures._
 
   private lazy val root = Files.createTempDirectory("graft_wh").toString
   private lazy val landing = Files.createTempDirectory("graft_land").toString
@@ -43,117 +36,9 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val config = configFor(landing)
 
-  private def configFor(landing: String) = Seq(
-    Schemas.FileDetail(1, "c", "s", landing, "transactions*.csv", "bronze",
-      "transactions", "CSV"),
-    Schemas.FileDetail(2, "c", "s", landing, "manual_logs*.csv", "bronze",
-      "manual_logs", "CSV"),
-    Schemas.FileDetail(3, "c", "s", landing, "flight_logs*.csv", "bronze",
-      "flight_logs", "CSV"),
-    Schemas.FileDetail(4, "c", "s", landing, "sleep*.csv", "bronze",
-      "fitbit_sleep_score", "CSV"),
-    Schemas.FileDetail(5, "c", "s", landing, "hr*.csv", "bronze",
-      "fitbit_heart_rate", "CSV"),
-    Schemas.FileDetail(6, "c", "s", landing, "steps*.csv", "bronze",
-      "fitbit_steps", "CSV"),
-    Schemas.FileDetail(7, "c", "s", landing, "timeline*.json", "bronze",
-      "google_timeline", "JSON"))
-
-  private def seedFixtures(landing: String = landing): Unit = {
-    write(landing, "transactions_1.csv",
-      """country,date,name,type,amount,comments
-        |Japan,2026-02-19,Hotel Tokyo,Hotel,"$1,200.50",Shinjuku hotel
-        |Japan,2026-02-19,Ramen,Food,12.00,Dinner
-        |Japan,2026-02-20,JR Pass,Travel,300.00,NULL
-        |Japan,2026-02-20,Museum,,25.00,
-        |Japan,not-a-date,Ghost,Misc,10.00,bad date row
-        |""".stripMargin)
-    write(landing, "manual_logs_1.csv",
-      """day,date,flag,country,city,description,comments,food,travel,hotel
-        |1,2026-02-19,1.0,Japan,Tokyo,Arrival day,Long flight,Ramen,Flight,Shinjuku
-        |2,2026-02-20,0.0,Japan,Tokyo,Museum day,,Sushi,Train,Shinjuku
-        |""".stripMargin)
-    write(landing, "flight_logs_1.csv",
-      ("date,flight_number,from,to,dep_time,arr_time,duration,airline,aircraft," +
-        "registration,seat_number,seat_type,flight_class,flight_reason,note," +
-        "dep_id,arr_id,airline_id,aircraft_id\n" +
-        "2026-02-18,NH110,LHR,HND,09:00,17:30,11:30,ANA,B789,JA890A,32A," +
-        "window,economy,leisure,,1,2,3,4\n" +
-        "2026-02-18,NH006,HND,KIX,19:00,20:15,01:15,ANA,B738,JA301B,12C," +
-        "aisle,economy,leisure,,2,5,3,6\n"))
-    write(landing, "sleep_1.csv",
-      """sleep_log_entry_id,timestamp,overall_score,composition_score,revitalization_score,duration_score,deep_sleep_in_minutes,resting_heart_rate,restlessness
-        |100,2026-02-19 07:30:00,65,20.0,18,25.0,45,52,0.12
-        |101,2026-02-20 08:00:00,90,28.0,27,30.0,80,48,0.05
-        |""".stripMargin)
-    write(landing, "hr_1.csv",
-      """timestamp,beats_per_minute,data_source
-        |2026-02-19 10:00:05,55.0,fitbit
-        |2026-02-19 10:00:35,57.0,fitbit
-        |2026-02-19 10:01:10,110.0,fitbit
-        |2026-02-19 11:00:10,135.0,fitbit
-        |""".stripMargin)
-    write(landing, "steps_1.csv",
-      """timestamp,steps,data_source
-        |2026-02-19 10:05:00,500,fitbit
-        |2026-02-19 10:40:00,250,fitbit
-        |2026-02-19 12:00:00,1000,fitbit
-        |""".stripMargin)
-    write(landing, "timeline_1.json",
-      """{ "semanticSegments": [
-        |  { "startTime": "2026-02-19T09:00:00", "endTime": "2026-02-19T10:30:00",
-        |    "visit": { "probability": 0.93,
-        |      "topCandidate": { "placeId": "ChIJ123",
-        |        "placeLocation": { "latLng": "35.6586° , 139.7454°" } } } },
-        |  { "startTime": "2026-02-19T11:00:00", "endTime": "2026-02-19T11:45:00",
-        |    "activity": { "distanceMeters": 1234.5,
-        |      "topCandidate": { "type": "WALKING", "probability": 0.87 },
-        |      "start": { "latLng": "35.65°, 139.74°" },
-        |      "end":   { "latLng": "35.66°, 139.75°" } } },
-        |  { "startTime": "2026-02-19T12:00:00", "endTime": "2026-02-19T12:10:00",
-        |    "visit": { "probability": 0.5,
-        |      "topCandidate": { "placeId": "ChIJ999",
-        |        "placeLocation": "garbage location" } } },
-        |  { "startTime": "2026-02-19T13:00:00", "endTime": "2026-02-19T13:05:00" }
-        |] }
-        |""".stripMargin)
-  }
-
-  /** Runs `body` and returns the number of Spark jobs each phase ran; the
-    * body names the current phase through the function it is given. Jobs
-    * carry the phase as a job-local property (adaptive execution's stage
-    * jobs inherit it). Listener events arrive in posting order, so once a
-    * marker job's start has been seen every earlier job has been counted.
-    */
-  private def jobsByPhase(body: (String => Unit) => Unit): Map[String, Int] = {
-    val sc = spark.sparkContext
-    val key = "graft.test.phase"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body(sc.setLocalProperty(key, _))
-      sc.setLocalProperty(key, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq.filter(_ != "marker").groupBy(identity)
-      .map { case (k, v) => k -> v.size }
-  }
-
   test("e2e: ingest -> silver -> gold with dedup and idempotency") {
     import spark.implicits._
-    seedFixtures()
+    seedFixtures(landing)
     val r1 = ingestion.ingestAll(config)
     assert(r1("transactions").size == 1)
     val txRows = catalog.read("bronze", "transactions")
@@ -678,32 +563,49 @@ class PipelineSpec extends SparkSpec {
     val sil = new SilverTransforms(cat)
     var files = 0
     var batches = 0
+    def s(t: String) = cat.read("silver", t)
+    val (d1, d2) = ("2026-02-18", "2026-02-21")
+    val dashboard = Seq[() => DataFrame](
+      () => Dashboard.visits(s("timeline_segments"), d1, d2),
+      () => Dashboard.movements(s("timeline_segments"), d1, d2),
+      () => Dashboard.logs(s("manual_logs"), d1, d2),
+      () => Dashboard.transactions(s("transactions"), d1, d2),
+      () => Dashboard.flights(s("flight_logs"), d1, d2),
+      () => Dashboard.sleep(s("sleep_scores"), d1, d2),
+      () => Dashboard.dailySteps(s("steps_hourly"), d1, d2),
+      () => Dashboard.spendByType(s("transactions"), d1, d2),
+      () => Dashboard.topTransactions(s("transactions"), d1, d2),
+      () => Dashboard.distanceByMode(s("timeline_segments"), d1, d2))
     val jobs = jobsByPhase { label =>
       label("ingest")
       files = ing.ingestAll(configFor(land)).values.map(_.size).sum
       label("silver")
       batches = sil.runAll().values.map(_.size).sum
       label("summary")
-      def s(t: String) = cat.read("silver", t)
       Gold.dailySummary("2026-02-19", s("daily_spend"), s("steps_hourly"),
         s("sleep_scores"), s("manual_logs"), s("flight_logs"),
         s("timeline_segments"))
-      ()
+      label("dashboard")
+      dashboard.foreach(_().collect())
     }
     assert(files == 7 && batches == 7, s"$files files, $batches batches")
     val perFile = jobs.getOrElse("ingest", 0).toDouble / files
     val perBatch = jobs.getOrElse("silver", 0).toDouble / batches
     val summary = jobs.getOrElse("summary", 0)
+    val perCall = jobs.getOrElse("dashboard", 0).toDouble / dashboard.size
     info(f"jobs: $perFile%.2f per loaded file, $perBatch%.2f per Silver " +
-      f"batch, $summary per dailySummary call")
-    // this fixture runs 1, 2.57 and 2; inferring every read's schema,
+      f"batch, $summary per dailySummary call, $perCall%.2f per dashboard call")
+    // this fixture runs 1, 2.57, 2 and 0.9; inferring every read's schema,
     // reading a ledger per decision and a summary of seven collects ran
     // 12.86, 16 and 23, reading Bronze's load ids with a distinct() query
-    // instead of listing them ran 6.86 per Silver batch, and ledger rows,
-    // ledger snapshots and batch read-backs as Spark jobs ran 4.86 and 4.86
+    // instead of listing them ran 6.86 per Silver batch, ledger rows,
+    // ledger snapshots and batch read-backs as Spark jobs ran 4.86 and
+    // 4.86, and scanning every dashboard input with a job ran 1.3 per
+    // dashboard call (the six filter shapes now run none)
     assert(perFile <= 1.0, f"$perFile%.2f jobs per loaded file")
     assert(perBatch <= 2.6, f"$perBatch%.2f jobs per Silver batch")
-    assert(summary <= 3, s"$summary jobs per dailySummary call")
+    assert(summary <= 2, s"$summary jobs per dailySummary call")
+    assert(perCall <= 0.9, f"$perCall%.2f jobs per dashboard call")
   }
 
   private def ledgerRow(id: Long, status: String,
@@ -714,10 +616,12 @@ class PipelineSpec extends SparkSpec {
   test("control plane on the driver: a ledger append, a snapshot with no " +
       "unseen file and a batch read-back run no Spark job") {
     import spark.implicits._
-    val cat = new Catalog(spark, Files.createTempDirectory("graft_ctl").toString)
+    val root = Files.createTempDirectory("graft_ctl").toString
+    val cat = new Catalog(spark, root)
     cat.appendBatched(Seq(("a", 1L), ("b", 1L), ("c", 2L)).toDF("v", "load_id"),
       "silver", "batched")
     var snap = Seq.empty[Schemas.IngestionLog]
+    var fresh = Seq.empty[Schemas.IngestionLog]
     var counts = Seq.empty[Long]
     val jobs = jobsByPhase { label =>
       label("append")
@@ -726,12 +630,18 @@ class PipelineSpec extends SparkSpec {
       cat.appendRows(Seq(ledgerRow(1L, "SUCCESS")), "admin", "ingestion_logs")
       label("snapshot")
       snap = cat.snapshot[Schemas.IngestionLog]("admin", "ingestion_logs")
+      // a second Catalog over the root holds no file yet: it decodes both
+      label("fresh")
+      fresh = new Catalog(spark, root)
+        .snapshot[Schemas.IngestionLog]("admin", "ingestion_logs")
       label("count")
       counts = Seq(1L, 2L, 3L).map(cat.countBatch("silver", "batched", _))
     }
     assert(jobs.isEmpty, jobs.toString)
     assert(snap.map(r => (r.load_id, r.status)).sorted ==
       Seq((1L, "RUNNING"), (1L, "SUCCESS"), (2L, "RUNNING")))
+    assert(fresh.sortBy(r => (r.load_id, r.status)) ==
+      snap.sortBy(r => (r.load_id, r.status)))
     // the footer counts are the rows a read of each batch returns; a load
     // with no partition directory counts 0
     assert(counts == Seq(2L, 1L, 0L))
