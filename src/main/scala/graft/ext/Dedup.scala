@@ -138,7 +138,8 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
   }
 
-  /** The pre-checkpoint capped-band-rows plan [[candidatePairs]] rides:
+  /** The pre-checkpoint capped-band-rows plan [[candidatePairs]] and
+    * [[deltaCandidatePairs]] ride:
     * bucket_n >= 2 drops singleton buckets (the vast majority of band
     * keys in a real corpus — they can never produce a pair) in the same
     * partial-agg'd count that enforces the skew cap, shrinking the
@@ -151,6 +152,63 @@ object Dedup {
       .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
       .select(col("band_id"), col("band_key"))
     bands.join(keep, Seq("band_id", "band_key"))
+  }
+
+  /** The two LSH bands of a fingerprint of at most `2 * loBits` bits:
+    * band 0 keys on its low `loBits` bits, band 1 on the bits above. A
+    * generator: the caller names its (band, key) columns, e.g.
+    * `fpBands(col("fp"), 12).as(Seq("band_id", "band_key"))`. Shared by
+    * the fingerprint maintainers and the q308–q313 family.
+    */
+  private[graft] def fpBands(fp: Column, loBits: Int): Column =
+    posexplode(array((fp % (1L << loBits)).cast("long"),
+      shiftright(fp, loBits).cast("long")))
+
+  /** Delta-oriented candidate pairs over band rows `(idCol, band_id,
+    * band_key, …)`: each delta row (`isDelta`) meets every other row of
+    * its [[cappedBandRows]] buckets that is not a delta row of larger or
+    * equal id, i.e. `doc_b ≠ doc_a ∧ (¬delta_b ∨ doc_b < doc_a)`. Pairs
+    * against the old rows are oriented delta → old and same-delta pairs
+    * `doc_b < doc_a`, so each is examined once and the old × old pair
+    * space is never formed. The `carry` columns ride along as `<c>_a` and
+    * `<c>_b`. One row per shared bucket (the caller takes the distinct
+    * pairs), with `doc_a`, `doc_b`, the carried columns, the band key and
+    * `_delta_b`. Shared by q88 and the two uncapped dedup maintainers.
+    */
+  private[graft] def deltaCandidatePairs(bands: DataFrame, idCol: String,
+      isDelta: Column, maxBandBucket: Int, carry: String*): DataFrame = {
+    val capped = cappedBandRows(bands, maxBandBucket)
+    def side(s: String): Seq[Column] = col(idCol).as(s"doc_$s") +:
+      carry.map(c => col(c).as(s"${c}_$s"))
+    val a = capped.where(isDelta)
+      .select(side("a") :+ col("band_id") :+ col("band_key"): _*)
+    val b = capped.select(side("b") ++
+      Seq(isDelta.as("_delta_b"), col("band_id"), col("band_key")): _*)
+    a.join(b, Seq("band_id", "band_key"))
+      .where(col("doc_b") =!= col("doc_a") &&
+        (!col("_delta_b") || col("doc_b") < col("doc_a")))
+  }
+
+  /** The best-match verdict of every delta doc. `scored` holds its
+    * verified pairs `(doc_a, doc_b, <score>)`; per `doc_a` the pair of
+    * highest `rank` wins, ties to the smallest `doc_b`. Every row of
+    * `deltaIds` (one id column) comes back as `(id, is_dup, best_match,
+    * best_<score>)`, with `is_dup = best_match IS NOT NULL`. The caller
+    * picks the order: `col("jaccard")` keeps the most similar pair,
+    * `-col("hamming")` the nearest. Shared by q88, q312 and the three
+    * dedup maintainers.
+    */
+  private[graft] def bestMatchVerdicts(deltaIds: DataFrame,
+      scored: DataFrame, score: String, rank: Column): DataFrame = {
+    val id = deltaIds.columns.head
+    val best = scored.groupBy(col("doc_a"))
+      .agg(max_by(struct(col(score), col("doc_b")),
+        struct(rank, -col("doc_b"))).as("bm"))
+      .select(col("doc_a"), col("bm.doc_b").as("best_match"),
+        col(s"bm.$score").as(s"best_$score"))
+    deltaIds.join(best, col(id) === col("doc_a"), "left")
+      .select(col(id), col("best_match").isNotNull.as("is_dup"),
+        col("best_match"), col(s"best_$score"))
   }
 
   /** The 100 TB layout for the ACCUMULATED band index that

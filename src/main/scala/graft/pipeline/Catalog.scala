@@ -28,11 +28,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * `transformations/utils.py:36-43`) maps to `load_id`-partitioned writes
   * with dynamic partition overwrite: rewriting a batch replaces exactly its
   * partition directories, atomically per partition — no transactional store
-  * needed (SURVEY.md §7.4 risk 4).
+  * needed (SURVEY.md §7.4 risk 4). The mode is an option of that one write,
+  * so a Catalog leaves its session's `partitionOverwriteMode` as it was.
   */
 final class Catalog(val spark: SparkSession, val root: String) {
-
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
   def path(schema: String, table: String): String = s"$root/$schema/$table"
 
@@ -95,11 +94,13 @@ final class Catalog(val spark: SparkSession, val root: String) {
       df.write.mode(SaveMode.Append).partitionBy("load_id").parquet(_))
 
   /** Idempotent batch rewrite: dynamic overwrite of just the partitions
-    * present in `df` (the reference's delete+insert, S11).
+    * present in `df` (the reference's delete+insert, S11), whatever the
+    * session's `spark.sql.sources.partitionOverwriteMode`.
     */
   def overwriteBatch(df: DataFrame, schema: String, table: String): Unit =
     recorded(df.schema, schema, table, partitioned = true, replaces = false)(
-      df.write.mode(SaveMode.Overwrite).partitionBy("load_id").parquet(_))
+      df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy("load_id").parquet(_))
 
   /** Full rebuild (CTAS, S12/S13). */
   def overwrite(df: DataFrame, schema: String, table: String): Unit =

@@ -13,6 +13,12 @@ import java.sql.Timestamp
   * taken on the driver against one ledger snapshot per run), transforms
   * only those batches, and writes idempotently (load_id-partitioned
   * dynamic overwrite).
+  *
+  * The public surface is [[runAll]], [[pendingLoadIds]] and the two
+  * heart-rate rules ([[hrZone]], [[resolveHrColumns]]). The processors
+  * are private: [[runAll]] calls each with the transformation-id
+  * allocator of its one ledger snapshot, so every id it logs comes from
+  * that snapshot.
   */
 final class SilverTransforms(catalog: Catalog) {
   import catalog.spark
@@ -38,12 +44,6 @@ final class SilverTransforms(catalog: Catalog) {
     (done, Iterator.iterate(next)(_ + 1))
   }
 
-  /** A fresh allocator, for a processor called outside [[runAll]]. */
-  private def transformationIds(): Iterator[Long] = ledger()._2
-
-  /** The allocator of the [[runAll]] call running on this thread. */
-  private val runIds = new scala.util.DynamicVariable[Option[Iterator[Long]]](None)
-
   /** J5: pending = the Bronze table's load ids minus the dataset's SUCCESS
     * ids (the reference's set difference, transactions.py:19-23). The
     * Bronze ids come from its partition directories ([[Catalog.loadIds]]).
@@ -68,12 +68,12 @@ final class SilverTransforms(catalog: Catalog) {
   private def bronzeBatch(dataset: String, loadId: Long): DataFrame =
     catalog.read(BRONZE, dataset).where($"load_id" === loadId)
 
-  /** Run one processor for one batch with ledger bracketing; returns rows
-    * written (reference save_idempotent + ledger, utils.py:36-101).
+  /** Run one processor for one batch with ledger bracketing, logging with
+    * ids from `ids`; returns rows written (reference save_idempotent +
+    * ledger, utils.py:36-101).
     */
-  private def runBatch(dataset: String, target: String, loadId: Long)(
-      transform: DataFrame => DataFrame): Long = {
-    val ids = runIds.value.getOrElse(transformationIds())
+  private def runBatch(ids: Iterator[Long], dataset: String, target: String,
+      loadId: Long)(transform: DataFrame => DataFrame): Long = {
     try {
       val out = transform(bronzeBatch(dataset, loadId))
       val rows = writeBatch(out, target, loadId)
@@ -94,8 +94,8 @@ final class SilverTransforms(catalog: Catalog) {
 
   // ── transactions (transformations/transactions.py): default missing
   //    type, strip [$,] from amounts, TRY date; plus the daily spend rollup.
-  def processTransactions(loadId: Long): Long =
-    runBatch("transactions", "transactions", loadId) { df =>
+  private def processTransactions(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "transactions", "transactions", loadId) { df =>
       df
         .withColumn("type",
           when($"type".isNull || trim($"type") === "", "uncategorized")
@@ -105,7 +105,7 @@ final class SilverTransforms(catalog: Catalog) {
         .withColumn("date", expr("try_cast(date as date)"))
     }
 
-  def buildDailySpend(loadId: Long): Long = {
+  private def buildDailySpend(loadId: Long): Long = {
     val silver = catalog.read(SILVER, "transactions").where($"load_id" === loadId)
     val daily = silver
       .where($"date".isNotNull)
@@ -142,8 +142,8 @@ final class SilverTransforms(catalog: Catalog) {
     (timeCol, valueCol)
   }
 
-  def processHeartRate(loadId: Long): Long =
-    runBatch("fitbit_heart_rate", "heart_rate_minute", loadId) { df =>
+  private def processHeartRate(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "fitbit_heart_rate", "heart_rate_minute", loadId) { df =>
       val (timeCol, valueCol) = resolveHrColumns(df.columns.toSeq)
       val m = df
         .select(
@@ -159,7 +159,7 @@ final class SilverTransforms(catalog: Catalog) {
         .withColumn("hour", hour($"log_timestamp"))
     }
 
-  def buildHeartRateHourly(loadId: Long): Long = {
+  private def buildHeartRateHourly(loadId: Long): Long = {
     val m = catalog.read(SILVER, "heart_rate_minute").where($"load_id" === loadId)
     val hourly = m.groupBy($"date", $"hour", $"load_id")
       .agg(
@@ -175,8 +175,8 @@ final class SilverTransforms(catalog: Catalog) {
 
   // ── fitbit_steps (fitbit_steps.py): hourly sums densified to all 24
   //    hours per date with 0-fill; load_id back-filled per date (J6).
-  def processSteps(loadId: Long): Long =
-    runBatch("fitbit_steps", "steps_hourly", loadId) { df =>
+  private def processSteps(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "fitbit_steps", "steps_hourly", loadId) { df =>
       val t = df
         .select(expr("try_to_timestamp(`timestamp`)").as("ts"),
           $"steps", $"load_id")
@@ -197,8 +197,8 @@ final class SilverTransforms(catalog: Catalog) {
 
   // ── fitbit_sleep_score (sleep dedup key sleep_log_entry_id,
   //    sp_travel_tax_report.sql:57): latest batch wins.
-  def processSleep(loadId: Long): Long =
-    runBatch("fitbit_sleep_score", "sleep_scores", loadId) { df =>
+  private def processSleep(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "fitbit_sleep_score", "sleep_scores", loadId) { df =>
       df.select(
         $"sleep_log_entry_id",
         expr("try_to_timestamp(`timestamp`)").as("wake_up_time"),
@@ -210,15 +210,15 @@ final class SilverTransforms(catalog: Catalog) {
 
   // ── manual_logs: canonical `country` naming (SURVEY.md §1.4 drift fix),
   //    typed date.
-  def processManualLogs(loadId: Long): Long =
-    runBatch("manual_logs", "manual_logs", loadId) { df =>
+  private def processManualLogs(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "manual_logs", "manual_logs", loadId) { df =>
       df.withColumn("log_date", expr("try_cast(date as date)"))
     }
 
   // ── flight_logs: typed date, HH:MM duration → hours
   //    (sp_travel_tax_report.sql:32-33: HOUR + MINUTE/60).
-  def processFlightLogs(loadId: Long): Long =
-    runBatch("flight_logs", "flight_logs", loadId) { df =>
+  private def processFlightLogs(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "flight_logs", "flight_logs", loadId) { df =>
       df
         .withColumn("flight_date", expr("try_cast(date as date)"))
         .withColumn("duration_hours",
@@ -227,8 +227,8 @@ final class SilverTransforms(catalog: Catalog) {
     }
 
   // ── google_timeline: VARIANT flatten (TimelineFlatten).
-  def processTimeline(loadId: Long): Long =
-    runBatch("google_timeline", "timeline_segments", loadId)(TimelineFlatten.flatten)
+  private def processTimeline(ids: Iterator[Long])(loadId: Long): Long =
+    runBatch(ids, "google_timeline", "timeline_segments", loadId)(TimelineFlatten.flatten)
 
   /** Run every processor for all pending batches (the transformation DAG,
     * transformation_logic.py:12-56). `only` mirrors the DAG's
@@ -244,19 +244,17 @@ final class SilverTransforms(catalog: Catalog) {
       else ds -> pending(ds, reprocess, done).map { id =>
         id -> (try f(id) catch { case _: Exception => -1L })
       }
-    runIds.withValue(Some(ids)) {
-      Map(
-        run("transactions", id => {
-          val n = processTransactions(id); buildDailySpend(id); n
-        }),
-        run("fitbit_heart_rate", id => {
-          val n = processHeartRate(id); buildHeartRateHourly(id); n
-        }),
-        run("fitbit_steps", processSteps),
-        run("fitbit_sleep_score", processSleep),
-        run("manual_logs", processManualLogs),
-        run("flight_logs", processFlightLogs),
-        run("google_timeline", processTimeline))
-    }
+    Map(
+      run("transactions", id => {
+        val n = processTransactions(ids)(id); buildDailySpend(id); n
+      }),
+      run("fitbit_heart_rate", id => {
+        val n = processHeartRate(ids)(id); buildHeartRateHourly(id); n
+      }),
+      run("fitbit_steps", processSteps(ids)),
+      run("fitbit_sleep_score", processSleep(ids)),
+      run("manual_logs", processManualLogs(ids)),
+      run("flight_logs", processFlightLogs(ids)),
+      run("google_timeline", processTimeline(ids)))
   }
 }

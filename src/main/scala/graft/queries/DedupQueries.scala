@@ -423,41 +423,28 @@ object DedupQueries {
     //    appended per batch), the delta side is small, and candidate cost
     //    is ∝ |delta|, not |corpus|². The old-vs-old pair space is never
     //    touched. Same skew cap as q36 (bucket count over ALL band rows,
-    //    partial-agg'd); verification is the shared pairs-first
-    //    [[graft.ext.Dedup.overlapFor]]. Output: every delta doc with its
-    //    dup verdict and best corpus match (ties to the smallest doc id).
+    //    partial-agg'd); candidates are the shared delta-oriented
+    //    [[graft.ext.Dedup.deltaCandidatePairs]], verification the
+    //    pairs-first [[graft.ext.Dedup.jaccardFor]], and the verdicts
+    //    [[graft.ext.Dedup.bestMatchVerdicts]] — the kernel
+    //    [[graft.streaming.EventStream.dedupMaintain]] runs per batch.
+    //    Output: every delta doc with its dup verdict and best corpus
+    //    match (ties to the smallest doc id).
     QueryDef(
       "q88_delta_dedup",
       (s, dir) => {
         import s.implicits._
-        // shingles + bands from the shared session substrate (q36/q84);
-        // the delta-restricted candidate join below is this query's own
+        // shingles + bands from the shared session substrate (q36/q84)
         val (sh, bands, _) =
           Dedup.minhashSubstrateCached(Tables.documents(s, dir), dir, "doc_id", "text")
-        val keep = bands.groupBy($"band_id", $"band_key")
-          .agg(count(lit(1)).as("bucket_n"))
-          .where($"bucket_n" <= 100000 && $"bucket_n" >= 2)
-          .select($"band_id", $"band_key")
-        val capped = bands.join(keep, Seq("band_id", "band_key"))
-        val a = capped.where($"doc_id" % 10 === 9)
-          .select($"doc_id".as("doc_a"), $"band_id", $"band_key")
-        val b = capped.select($"doc_id".as("doc_b"), $"band_id", $"band_key")
-        val cands = a.join(b, Seq("band_id", "band_key"))
-          .where($"doc_b" =!= $"doc_a" &&
-            (($"doc_b" % 10 =!= 9) || ($"doc_b" < $"doc_a")))
+        val cands = Dedup.deltaCandidatePairs(bands, "doc_id",
+            $"doc_id" % 10 === 9, 100000)
           .select($"doc_a", $"doc_b").distinct().localCheckpoint()
-        val jac = Dedup.overlapFor(cands, sh, "doc_id")
-          .select($"doc_a", $"doc_b",
-            ($"n_inter".cast("double") /
-              ($"n_a" + $"n_b" - $"n_inter").cast("double")).as("j"))
-          .where($"j" >= 0.5)
-        val best = jac.groupBy($"doc_a")
-          .agg(max_by(struct($"j", $"doc_b"), struct($"j", -$"doc_b")).as("bm"))
-          .select($"doc_a", $"bm.doc_b".as("best_match"), $"bm.j".as("best_jaccard"))
-        Tables.documents(s, dir).select($"doc_id").where($"doc_id" % 10 === 9)
-          .join(best, $"doc_id" === $"doc_a", "left")
-          .select($"doc_id", $"best_match".isNotNull.as("is_dup"),
-            $"best_match", $"best_jaccard")
+        val jac = Dedup.jaccardFor(cands, sh, "doc_id")
+          .where($"jaccard" >= 0.5)
+        Dedup.bestMatchVerdicts(
+          Tables.documents(s, dir).select($"doc_id").where($"doc_id" % 10 === 9),
+          jac, "jaccard", $"jaccard")
       },
       Some {
         val r = Dedup.BandRows

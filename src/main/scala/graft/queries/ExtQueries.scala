@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables, TempDirs}
-import graft.ext.Multimodal
+import graft.ext.{Dedup, Multimodal}
 import graft.QueryDef._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1001,9 +1001,7 @@ object ExtQueries {
         import s.implicits._
         val hashes = phashSubstrateCached(s, dir)
         val bands = hashes.select($"doc_id", $"dhash",
-            posexplode(array(
-              ($"dhash" % 4096L).cast("long"),
-              shiftright($"dhash", 12).cast("long"))).as(Seq("band", "key")))
+            Dedup.fpBands($"dhash", 12).as(Seq("band", "key")))
         bands.as("a").join(bands.as("b"),
             $"a.band" === $"b.band" && $"a.key" === $"b.key" &&
               $"a.doc_id" < $"b.doc_id")
@@ -1105,9 +1103,7 @@ object ExtQueries {
             Multimodal.gradientHash($"win_energy", 31).as("fp"))
           .localCheckpoint()
         val bands = fps.select($"doc_id", $"fp",
-          posexplode(array(
-            ($"fp" % 65536L).cast("long"),
-            shiftright($"fp", 16).cast("long"))).as(Seq("band", "key")))
+          Dedup.fpBands($"fp", 16).as(Seq("band", "key")))
         bands.as("a").join(bands.as("b"),
             $"a.band" === $"b.band" && $"a.key" === $"b.key" &&
               $"a.doc_id" < $"b.doc_id")
@@ -1185,9 +1181,7 @@ object ExtQueries {
             Multimodal.gradientHash($"frame_sums", 31).as("fp"))
           .localCheckpoint()
         val bands = fps.select($"doc_id", $"fp",
-          posexplode(array(
-            ($"fp" % 65536L).cast("long"),
-            shiftright($"fp", 16).cast("long"))).as(Seq("band", "key")))
+          Dedup.fpBands($"fp", 16).as(Seq("band", "key")))
         bands.as("a").join(bands.as("b"),
             $"a.band" === $"b.band" && $"a.key" === $"b.key" &&
               $"a.doc_id" < $"b.doc_id")
@@ -1341,9 +1335,7 @@ object ExtQueries {
               .as("radius"))
           .localCheckpoint()
         val bands = fps.select($"doc_id", $"media_type", $"fp", $"radius",
-          posexplode(array(
-            ($"fp" % 65536L).cast("long"),
-            shiftright($"fp", 16).cast("long"))).as(Seq("band", "key")))
+          Dedup.fpBands($"fp", 16).as(Seq("band", "key")))
         bands.as("a").join(bands.as("b"),
             $"a.media_type" === $"b.media_type" && $"a.band" === $"b.band" &&
               $"a.key" === $"b.key" && $"a.doc_id" < $"b.doc_id")
@@ -1477,9 +1469,7 @@ object ExtQueries {
         import s.implicits._
         val hashes = phashSubstrateCached(s, dir)
         val bands = hashes.select($"doc_id", $"dhash",
-          posexplode(array(
-            ($"dhash" % 4096L).cast("long"),
-            shiftright($"dhash", 12).cast("long"))).as(Seq("band", "key")))
+          Dedup.fpBands($"dhash", 12).as(Seq("band", "key")))
         val pairs = bands.as("a").join(bands.as("b"),
             $"a.band" === $"b.band" && $"a.key" === $"b.key" &&
               $"a.doc_id" < $"b.doc_id")
@@ -1487,8 +1477,7 @@ object ExtQueries {
             bit_count($"a.dhash".bitwiseXOR($"b.dhash")).as("hamming"))
           .where($"hamming" <= 4)
           .select($"doc_a", $"doc_b").distinct()
-        val cc = graft.ext.Dedup.connectedComponentsStar(
-          pairs, "doc_a", "doc_b")
+        val cc = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
         cc.groupBy($"cluster_id".as("keeper_doc_id"))
           .agg(count(lit(1)).as("n_members"))
           .select($"keeper_doc_id", $"n_members",
@@ -1565,13 +1554,11 @@ object ExtQueries {
         val fps = phashSubstrateCached(s, dir)
           .select($"doc_id", $"dhash".as("fp"))
         val bands = fps.select($"doc_id",
-          posexplode(array(
-            ($"fp" % 4096L).cast("long"),
-            shiftright($"fp", 12).cast("long"))).as(Seq("band_id", "band_key")))
+          Dedup.fpBands($"fp", 12).as(Seq("band_id", "band_key")))
         val tag = "fpdelta" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val idxTbl = graft.ext.Dedup.writeBandIndexBucketed(
+        val idxTbl = Dedup.writeBandIndexBucketed(
           bands.where($"doc_id" % 10 =!= 9), tag)
-        val cands = graft.ext.Dedup.deltaCandidatesAgainstIndex(
+        val cands = Dedup.deltaCandidatesAgainstIndex(
           idxTbl, bands.where($"doc_id" % 10 === 9), "doc_id")
         val ham = cands
           .join(fps.select($"doc_id".as("doc_a"), $"fp".as("fp_a")), "doc_a")
@@ -1579,16 +1566,9 @@ object ExtQueries {
           .select($"doc_a", $"doc_b",
             bit_count($"fp_a".bitwiseXOR($"fp_b")).cast("int").as("hamming"))
           .where($"hamming" <= 4)
-        val best = ham.groupBy($"doc_a")
-          .agg(max_by(struct($"hamming", $"doc_b"),
-            struct(-$"hamming", -$"doc_b")).as("bm"))
-          .select($"doc_a", $"bm.doc_b".as("best_match"),
-            $"bm.hamming".as("best_hamming"))
-        Tables.documents(s, dir).select($"doc_id")
-          .where($"doc_id" % 10 === 9)
-          .join(best, $"doc_id" === $"doc_a", "left")
-          .select($"doc_id", $"best_match".isNotNull.as("is_dup"),
-            $"best_match", $"best_hamming")
+        Dedup.bestMatchVerdicts(
+          Tables.documents(s, dir).select($"doc_id").where($"doc_id" % 10 === 9),
+          ham, "hamming", -$"hamming")
       },
       Some("""WITH cells AS (
         |  SELECT doc_id, cx, cy,

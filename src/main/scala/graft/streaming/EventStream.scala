@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.ext.Dedup
 
 /** Structured Streaming over the events table shape (SURVEY.md §2.8: the
   * reference is batch-only with a load_id ledger; streaming is the
@@ -745,13 +746,44 @@ object EventStream {
         expr("dec_w * 1000000 div shiftleft(CAST(1 AS BIGINT), 20)"))
   }
 
+  /** A dedup maintainer's verdict rows: [[Dedup.bestMatchVerdicts]]'
+    * columns with `batch_id` second.
+    */
+  private def withBatchId(verdicts: DataFrame, batchId: Long): DataFrame =
+    verdicts.select(col(verdicts.columns.head) +: lit(batchId).as("batch_id") +:
+      verdicts.columns.toSeq.tail.map(col): _*)
+
+  /** The fingerprint maintainers' delta `(doc_id, fp)` as longs, with the
+    * width contract checked in-plan: a fp outside `[0, 2^fpBits)` fails
+    * the batch with `<name>: fp exceeds fpBits=…`.
+    */
+  private def checkedFps(batch: DataFrame, fpBits: Int,
+      name: String): DataFrame =
+    batch.select(col("doc_id").cast("long"), col("fp").cast("long"))
+      // NULL fps are data, not failures (an undecodable blob lands a
+      // NULL fingerprint — the Multimodal contract): a NULL can't
+      // participate in banded dedup, so drop it BEFORE the width
+      // assert; assert_true treats the NULL the condition would
+      // evaluate to as a failure and would kill the whole batch with
+      // a misleading too-wide message
+      .where(col("fp").isNotNull)
+      // a WHERE, not a dropped projection column — an unused
+      // Project column would be column-pruned and the check with it
+      .where(assert_true(col("fp") >= 0 &&
+        shiftright(col("fp"), fpBits) === 0,
+        lit(s"$name: fp exceeds fpBits=$fpBits — " +
+          "widen fpBits or narrow the fingerprint")).isNull)
+
   /** Streaming incremental near-dup dedup via foreachBatch — q88's
     * daily-crawl contract run continuously: each micro-batch (the
     * "delta") is LSH-banded, candidate-paired against the ACCUMULATED
     * corpus band index plus its own earlier rows (same-batch pairs are
     * oriented `doc_b < doc_a`, exactly q88's delta convention), and
     * Jaccard-verified on the hashed-shingle store; the old×old pair space
-    * is never re-examined. The per-batch scans are not delta-sized,
+    * is never re-examined. Candidates come from
+    * [[graft.ext.Dedup.deltaCandidatePairs]] and verdicts from
+    * [[graft.ext.Dedup.bestMatchVerdicts]], the kernel q88 and the
+    * fingerprint maintainers share. The per-batch scans are not delta-sized,
     * though: the bucket-cap count reads the whole band index and
     * [[graft.ext.Dedup.overlapFor]]'s per-doc shingle sizes read the
     * whole shingle store, every batch. State = three grow-only tables
@@ -776,7 +808,6 @@ object EventStream {
   def dedupMaintain(spark: SparkSession, docs: DataFrame, statePath: String,
       threshold: Double = 0.5, maxBandBucket: Int = 100000,
       tierK: Int = 8, checkpoint: Option[String] = None): DataFrame = {
-    import graft.ext.Dedup
     val bandsP = statePath + "/bands"
     val shP = statePath + "/shingles"
     val verdictsP = statePath + "/verdicts"
@@ -798,34 +829,15 @@ object EventStream {
         bands.write.mode("overwrite").parquet(s"$bandsP/batch=$batchId")
         val allBands = readTiered(spark, bandsP, Some(bands.schema))
           .withColumn("_delta", col("batch") === batchId).drop("batch")
-        val keep = allBands.groupBy(col("band_id"), col("band_key"))
-          .agg(count(lit(1)).as("bucket_n"))
-          .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
-          .select(col("band_id"), col("band_key"))
-        val capped = allBands.join(keep, Seq("band_id", "band_key"))
-        val a = capped.where(col("_delta"))
-          .select(col("doc_id").as("doc_a"), col("band_id"),
-            col("band_key"))
-        val b = capped.select(col("doc_id").as("doc_b"),
-          col("_delta").as("_delta_b"), col("band_id"), col("band_key"))
-        val cands = a.join(b, Seq("band_id", "band_key"))
-          .where(col("doc_b") =!= col("doc_a") &&
-            (!col("_delta_b") || col("doc_b") < col("doc_a")))
+        val cands = Dedup.deltaCandidatePairs(allBands, "doc_id",
+            col("_delta"), maxBandBucket)
           .select(col("doc_a"), col("doc_b")).distinct()
           .localCheckpoint()
         val allSh = readTiered(spark, shP, Some(sh.schema)).drop("batch")
-        val best = Dedup.jaccardFor(cands, allSh, "doc_id")
+        val scored = Dedup.jaccardFor(cands, allSh, "doc_id")
           .where(col("jaccard") >= threshold)
-          .groupBy(col("doc_a"))
-          .agg(max_by(struct(col("jaccard"), col("doc_b")),
-            struct(col("jaccard"), -col("doc_b"))).as("bm"))
-          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-            col("bm.jaccard").as("best_jaccard"))
-        batch.select(col("doc_id"))
-          .join(best, col("doc_id") === col("doc_a"), "left")
-          .select(col("doc_id"), lit(batchId).as("batch_id"),
-            col("best_match").isNotNull.as("is_dup"),
-            col("best_match"), col("best_jaccard"))
+        withBatchId(Dedup.bestMatchVerdicts(batch.select(col("doc_id")),
+            scored, "jaccard", col("jaccard")), batchId)
           .write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
       }
     }
@@ -847,7 +859,11 @@ object EventStream {
     * bucket cap and the arrival orientation (index docs, or same-batch
     * docs with smaller id), survivors verify with popcount ≤ radius, and
     * each delta doc reports its best match (min distance, deterministic
-    * tie). Stores: fps (8 bytes/doc — the index) and verdicts, under the
+    * tie). Bands, candidates and verdicts are [[dedupMaintain]]'s shared
+    * kernel: [[graft.ext.Dedup.fpBands]],
+    * [[graft.ext.Dedup.deltaCandidatePairs]] and
+    * [[graft.ext.Dedup.bestMatchVerdicts]]. Stores: fps (8 bytes/doc —
+    * the index) and verdicts, under the
     * [[skipLedgerBatch]] protocol; [[compactState]] applies. The batch
     * twin is q312's shape; StreamingSpec pins parity, replay, and
     * compaction.
@@ -871,61 +887,25 @@ object EventStream {
     runMaintainer(docs, checkpoint) { (batch, batchId) =>
       skipLedgerBatch(spark, statePath, batchId,
           Seq(fpsP, verdictsP), tierK) {
-        val fps = batch
-          .select(col("doc_id").cast("long"), col("fp").cast("long"))
-          // NULL fps are data, not failures (an undecodable blob lands a
-          // NULL fingerprint — the Multimodal contract): a NULL can't
-          // participate in banded dedup, so drop it BEFORE the width
-          // assert; assert_true treats the NULL the condition would
-          // evaluate to as a failure and would kill the whole batch with
-          // a misleading too-wide message
-          .where(col("fp").isNotNull)
-          // a WHERE, not a dropped projection column — an unused
-          // Project column would be column-pruned and the check with it
-          .where(assert_true(col("fp") >= 0 &&
-            shiftright(col("fp"), fpBits) === 0,
-            lit(s"fpDedupMaintain: fp exceeds fpBits=$fpBits — " +
-              "widen fpBits or narrow the fingerprint")).isNull)
+        val fps = checkedFps(batch, fpBits, "fpDedupMaintain")
         // land first, as dedupMaintain: the delta overwrites its own
         // batch=<id> partition before the index read takes it back
         fps.write.mode("overwrite").parquet(s"$fpsP/batch=$batchId")
         val allFps = readTiered(spark, fpsP, Some(fps.schema))
           .withColumn("_delta", col("batch") === batchId).drop("batch")
         val allBands = allFps.select(col("doc_id"), col("fp"),
-          col("_delta"),
-          posexplode(array(
-            (col("fp") % (1L << loBits)).cast("long"),
-            shiftright(col("fp"), loBits).cast("long")))
+          col("_delta"), Dedup.fpBands(col("fp"), loBits)
             .as(Seq("band_id", "band_key")))
-        val keep = allBands.groupBy(col("band_id"), col("band_key"))
-          .agg(count(lit(1)).as("bucket_n"))
-          .where(col("bucket_n") <= maxBandBucket && col("bucket_n") >= 2)
-          .select(col("band_id"), col("band_key"))
-        val capped = allBands.join(keep, Seq("band_id", "band_key"))
-        val a = capped.where(col("_delta"))
-          .select(col("doc_id").as("doc_a"), col("fp").as("fp_a"),
-            col("band_id"), col("band_key"))
-        val b = capped.select(col("doc_id").as("doc_b"),
-          col("fp").as("fp_b"), col("_delta").as("_delta_b"),
-          col("band_id"), col("band_key"))
-        val ham = a.join(b, Seq("band_id", "band_key"))
-          .where(col("doc_b") =!= col("doc_a") &&
-            (!col("_delta_b") || col("doc_b") < col("doc_a")))
+        val ham = Dedup.deltaCandidatePairs(allBands, "doc_id",
+            col("_delta"), maxBandBucket, "fp")
           .select(col("doc_a"), col("doc_b"),
             bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
               .cast("int").as("hamming"))
           .where(col("hamming") <= radius) // narrow BEFORE the dedup
           .distinct()
-        val best = ham.groupBy(col("doc_a"))
-          .agg(max_by(struct(col("hamming"), col("doc_b")),
-            struct(-col("hamming"), -col("doc_b"))).as("bm"))
-          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-            col("bm.hamming").as("best_hamming"))
-        allFps.where(col("_delta")).select(col("doc_id"))
-          .join(best, col("doc_id") === col("doc_a"), "left")
-          .select(col("doc_id"), lit(batchId).as("batch_id"),
-            col("best_match").isNotNull.as("is_dup"),
-            col("best_match"), col("best_hamming"))
+        withBatchId(Dedup.bestMatchVerdicts(
+            allFps.where(col("_delta")).select(col("doc_id")),
+            ham, "hamming", -col("hamming")), batchId)
           .write.mode("overwrite").parquet(s"$verdictsP/batch=$batchId")
       }
     }
@@ -955,7 +935,10 @@ object EventStream {
     *    without touching the store.
     *
     * Verdicts are therefore IDENTICAL to [[fpDedupMaintain]]'s on every
-    * input (q350 gates the equality against the uncapped closed form);
+    * input (q350 gates the equality against the uncapped closed form):
+    * bands and verdicts are the shared [[graft.ext.Dedup.fpBands]] and
+    * [[graft.ext.Dedup.bestMatchVerdicts]], and only the candidate
+    * generation differs;
     * what changes is the cost shape: steady-state per-batch work is
     * O(|delta| + capped-index size) — flat in the corpus — instead of
     * O(corpus). The capped index is sum-merged state (counts) ⇒ the
@@ -980,20 +963,11 @@ object EventStream {
     runMaintainer(docs, checkpoint) { (batch, batchId) =>
       atomicCommitBatch(spark, capCommitP, batchId,
           Seq(fpsP, verdictsP), tierK) {
-        val fps = batch
-          .select(col("doc_id").cast("long"), col("fp").cast("long"))
-          .where(col("fp").isNotNull)
-          .where(assert_true(col("fp") >= 0 &&
-            shiftright(col("fp"), fpBits) === 0,
-            lit(s"fpDedupMaintainCapped: fp exceeds fpBits=$fpBits — " +
-              "widen fpBits or narrow the fingerprint")).isNull)
+        val fps = checkedFps(batch, fpBits, "fpDedupMaintainCapped")
           .localCheckpoint()
         def bandsOf(df: DataFrame): DataFrame =
           df.select(col("doc_id"), col("fp"),
-            posexplode(array(
-              (col("fp") % (1L << loBits)).cast("long"),
-              shiftright(col("fp"), loBits).cast("long")))
-              .as(Seq("band_id", "band_key")))
+            Dedup.fpBands(col("fp"), loBits).as(Seq("band_id", "band_key")))
         val dBands = bandsOf(fps).localCheckpoint()
         val haveCap = stateExists(spark, capCellsP)
         // old capped-index state: (band_id, band_key, doc_id, fp,
@@ -1059,16 +1033,8 @@ object EventStream {
               .cast("int").as("hamming"))
           .where(col("hamming") <= radius)
           .distinct()
-        val best = ham.groupBy(col("doc_a"))
-          .agg(max_by(struct(col("hamming"), col("doc_b")),
-            struct(-col("hamming"), -col("doc_b"))).as("bm"))
-          .select(col("doc_a"), col("bm.doc_b").as("best_match"),
-            col("bm.hamming").as("best_hamming"))
-        val verdicts = fps.select(col("doc_id"))
-          .join(best, col("doc_id") === col("doc_a"), "left")
-          .select(col("doc_id"), lit(batchId).as("batch_id"),
-            col("best_match").isNotNull.as("is_dup"),
-            col("best_match"), col("best_hamming"))
+        val verdicts = withBatchId(Dedup.bestMatchVerdicts(
+          fps.select(col("doc_id")), ham, "hamming", -col("hamming")), batchId)
         // partitions BEFORE the commit: a crash in between replays the
         // batch against the unchanged committed state and clobbers
         verdicts.write.mode("overwrite")
@@ -2668,23 +2634,21 @@ object EventStream {
     * batch id is a no-op, and downstream batch-scoped reads prune to the
     * new partition directory. At 100 TB this is the standard streaming
     * warehouse sink: partition-append + transactional-enough ledger, no
-    * external coordinator.
+    * external coordinator. The query runs through [[runMaintainer]], as
+    * the maintainers do: the body runs in the caller's session and a
+    * failed batch stops the query.
     */
   def ledgeredIngest(streamed: DataFrame, catalog: graft.pipeline.Catalog,
       schema: String, table: String): Unit = {
     val ledger = s"${table}__ledger"
-    val q = streamed.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (!catalog.snapshot[LedgerBatch](schema, ledger)
-            .exists(_.batch_id == batchId)) {
-          catalog.appendBatched(
-            df.withColumn("load_id", lit(batchId)), schema, table)
-          catalog.appendRows(Seq(LedgerBatch(batchId)), schema, ledger)
-        }
+    runMaintainer(streamed) { (df, batchId) =>
+      if (!catalog.snapshot[LedgerBatch](schema, ledger)
+          .exists(_.batch_id == batchId)) {
+        catalog.appendBatched(
+          df.withColumn("load_id", lit(batchId)), schema, table)
+        catalog.appendRows(Seq(LedgerBatch(batchId)), schema, ledger)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** One row of [[ledgeredIngest]]'s batch-id ledger (`batch_id BIGINT NOT

@@ -155,8 +155,40 @@ class PipelineSpec extends SparkSpec {
     // overwrite keeps the table identical (delete+insert semantics)
     val replayIds = silver.pendingLoadIds("transactions", reprocess = true)
     assert(replayIds.nonEmpty)
-    replayIds.foreach(silver.processTransactions)
+    // runAll marks a failed batch with -1 rows instead of throwing
+    val replayed = silver.runAll(reprocess = true,
+      only = Some("transactions"))("transactions")
+    assert(replayed.map(_._1) == replayIds && replayed.forall(_._2 >= 0),
+      replayed.toString)
     assert(catalog.read("silver", "transactions").count() == before)
+  }
+
+  test("building a Catalog leaves the session's partitionOverwriteMode " +
+      "as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "static")
+      new Catalog(spark, Files.createTempDirectory("graft_conf").toString)
+      assert(spark.conf.get(key).equalsIgnoreCase("static"))
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("overwriteBatch replaces only its own load_id partitions in a " +
+      "session left at static partition overwrite") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    val c = new Catalog(spark, Files.createTempDirectory("graft_static").toString)
+    try {
+      spark.conf.set(key, "static")
+      c.appendBatched(Seq((1L, "a"), (2L, "b")).toDF("load_id", "v"),
+        "silver", "t")
+      c.overwriteBatch(Seq((2L, "c")).toDF("load_id", "v"), "silver", "t")
+      val rows = c.read("silver", "t").select($"load_id", $"v")
+        .as[(Long, String)].collect().sorted.toSeq
+      assert(rows == Seq((1L, "a"), (2L, "c")), rows.toString)
+    } finally spark.conf.set(key, prev)
   }
 
   test("schema reset drops and allows rebuild (S14)") {
